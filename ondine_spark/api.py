@@ -2,7 +2,7 @@
 
 Reference: ondine/api/enrich.py:45-137 + QuickPipeline smart defaults
 (ondine/api/quick.py:66-330): input columns inferred from {placeholders},
-batch size by data size, JSON parser auto-selected for multi-column output.
+JSON parser auto-selected for multi-column output.
 """
 
 from __future__ import annotations
@@ -13,17 +13,6 @@ from pyspark.sql import SparkSession
 
 from ondine_spark.plans.builder import PipelineBuilder
 from ondine_spark.plans.pipeline import ExecutionResult
-
-
-def default_batch_size(n_rows: int) -> int:
-    """Reference heuristic (ondine/api/quick.py:301-316)."""
-    if n_rows <= 100:
-        return 10
-    if n_rows <= 1000:
-        return 50
-    if n_rows <= 10000:
-        return 100
-    return 150
 
 
 def enrich(

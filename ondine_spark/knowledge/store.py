@@ -23,9 +23,9 @@ Spark-first redesign:
 
 from __future__ import annotations
 
+import logging
 import math
 import os
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -259,14 +259,6 @@ def ngram_cosine_frame(
     return base.mapInPandas(_cosine_batches, schema=out_schema)
 
 
-@dataclass
-class SearchResult:
-    chunk_id: int
-    text: str
-    source: str
-    score: float
-
-
 class KnowledgeStore:
     """Chunk corpus + two inverted indexes, persisted under ``path``.
 
@@ -384,12 +376,12 @@ class KnowledgeStore:
         # threads are cleaned up instead of leaking across ingests.
         from pyspark import InheritableThread
 
-        errs: list[BaseException] = []
+        errs: list[Exception] = []
 
         def _write(df: DataFrame, name: str) -> None:
             try:
                 df.write.mode(mode).parquet(os.path.join(self.path, name))
-            except BaseException as exc:  # surfaced on the caller thread
+            except Exception as exc:  # surfaced on the caller thread
                 errs.append(exc)
 
         threads = [
@@ -400,6 +392,11 @@ class KnowledgeStore:
             t.start()
         for t in threads:
             t.join()
+        for exc in errs[1:]:
+            logging.getLogger("ondine_spark").error(
+                "knowledge ingest: second index write also failed",
+                exc_info=exc,
+            )
         if errs:
             raise errs[0]
         _write_store_meta(

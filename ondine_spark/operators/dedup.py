@@ -7,8 +7,8 @@ cleaning toolkit, each designed for 100 TB scale:
 - exact: hash-groupBy, fully map-side combinable.
 - n-gram Jaccard: inverted-index join on shingles (never a cross join);
   frequent-shingle cap bounds the candidate blowup on hot shingles.
-- MinHash+LSH: signature → bands → bucket self-join. Hashes are md5-based
-  (portable — the DuckDB oracle replays them exactly).
+- MinHash+LSH: signature → bands → per-bucket numpy verify (no self-join).
+  Hashes are md5-based (portable — the DuckDB oracle replays them exactly).
 - SimHash: 64-bit signature; Hamming-≤k pairs found by the 4-block
   pigeonhole trick (block-equality join), not pairwise comparison.
 - embedding near-dup: random-hyperplane LSH buckets → cosine verify.
@@ -44,11 +44,6 @@ def exact_dedup(
     agg = F.min(order_col) if keep == "min" else F.max(order_col)
     keep_ids = df.groupBy(*key_cols).agg(agg.alias(order_col))
     return df.join(keep_ids, on=key_cols + [order_col], how="left_semi")
-
-
-def normalized_text(col):
-    """Canonical text for exact dedup: lowercase, collapse whitespace."""
-    return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
 
 
 # ------------------------------------------------- n-gram Jaccard pairs (D2)
@@ -482,112 +477,113 @@ def minhash_lsh_pairs(
     space (raise num_hashes/bands). Default None = exact enumeration.
     """
     sig = minhash_signature(df, id_col, text_col, num_hashes, ngram)
-    band_rows = minhash_band_rows(sig, num_hashes, bands)
+    return _lsh_bucket_edges(
+        minhash_band_rows(sig, num_hashes, bands),
+        num_hashes,
+        bands,
+        threshold=threshold,
+        max_bucket_size=max_bucket_size,
+        forest=connectivity_only,
+    )
 
-    # Per-(band,key)-bucket numpy verify, NOT a band self-join: the join
-    # shipped BOTH full signatures per candidate row and a mass-duplicated
-    # corpus makes one band bucket quadratic (sf1 skew probe: a 5,000-doc
-    # cluster -> 12.5M candidates x 4 bands = 50M pre-dedup join rows).
-    # Here each signature travels once per band row; the quadratic part is
-    # a blocked element-equality count inside the group, and sub-threshold
-    # pairs never materialize. est_jaccard = #equal/num_hashes is an exact
-    # integer ratio — bit-identical to the join path and the SQL oracle.
+
+def _lsh_bucket_edges(
+    band_rows: DataFrame,
+    num_hashes: int,
+    bands: int,
+    threshold: float | None = None,
+    max_bucket_size: int | None = None,
+    forest: bool = False,
+) -> DataFrame:
+    """Near-dup edges from :func:`minhash_band_rows` output: the one LSH
+    detection kernel shared by batch pair-finding and streaming dedup.
+
+    Per-(band,key)-bucket numpy verify, NOT a band self-join: the join
+    shipped BOTH full signatures per candidate row and a mass-duplicated
+    corpus makes one band bucket quadratic (sf1 skew probe: a 5,000-doc
+    cluster -> 12.5M candidates x 4 bands = 50M pre-dedup join rows).
+    Here each signature travels once per band row; the quadratic part is
+    a blocked element-equality count inside the bucket, and rejected
+    pairs never materialize. est_jaccard = #equal/num_hashes is an exact
+    integer ratio — bit-identical to the SQL oracle and to the streaming
+    store check — computed only for candidate pairs, and only when it is
+    emitted (pair mode) or thresholded.
+
+    Pair mode emits (a, b, est_jaccard). ``forest`` mode feeds the same
+    pairs to a bucket-local union-find and emits (root, node) star edges
+    only — at most k−1 rows per k-doc bucket, with the same connected
+    components as the pairs (see :func:`minhash_lsh_pairs`).
+    """
     import numpy as np
     import pandas as pd
 
-    id_type = dict(df.dtypes)[id_col]
+    id_type = dict(band_rows.dtypes)["_id"]
     thr = float(threshold) if threshold is not None else None
     nh, nb = num_hashes, bands
     r = num_hashes // bands
+    # FIRST-band ownership: a colliding pair is emitted only by the
+    # earliest band whose slice matches — globally unique output, so no
+    # cross-band duplicate emission and NO dedup shuffle (the sf1 hot
+    # cluster emitted every pair from all 4 bands: 50M rows to dedup down
+    # to 12.5M). With the occupancy cap active, a pair's first-matching
+    # band may have been a SKIPPED hot bucket, so ownership would silently
+    # drop pairs recoverable from later small buckets — capped mode emits
+    # from every surviving bucket and dedups instead (bounded volume by
+    # construction).
+    own = max_bucket_size is None
 
-    own = max_bucket_size is None  # see ownership note below
+    def union(parent, cu, cv):
+        """Merge pairs (cu, cv) into ``parent``: the same min-hooking +
+        full-shortcutting iteration as the driver CC. Union is
+        order-independent, so blocks update the array incrementally."""
+        while True:
+            pu, pv = parent[cu], parent[cv]
+            before = parent.copy()
+            np.minimum.at(parent, np.maximum(pu, pv), np.minimum(pu, pv))
+            while True:
+                pp = parent[parent]
+                if np.array_equal(pp, parent):
+                    break
+                parent = pp
+            if np.array_equal(parent, before):
+                return parent
 
     def one_bucket(ids, S, band_k, outs):
-        """Emit pairs for one (band, key) bucket (ids sorted ascending)."""
-        if len(ids) < 2:
-            return
-        if max_bucket_size is not None and len(ids) > max_bucket_size:
-            return  # occupancy guard: documented approximation
-        block = 1024
-        for i0 in range(0, len(ids), block):
-            # eqpos[i, j, h]: hash position h matches
-            eqpos = S[i0 : i0 + block, None, :] == S[None, :, :]
-            est = eqpos.sum(axis=2) / nh
-            # FIRST-band ownership: a colliding pair is emitted only by
-            # the earliest band whose slice matches — globally unique
-            # output, so no cross-band duplicate emission and NO dedup
-            # shuffle (the sf1 hot cluster emitted every pair from all 4
-            # bands: 50M rows to dedup down to 12.5M).
-            # Ownership note: with the occupancy cap active, a pair's
-            # first-matching band may have been a SKIPPED hot bucket, so
-            # ownership would silently drop pairs recoverable from later
-            # small buckets — capped mode emits from every surviving
-            # bucket and dedups instead (bounded volume by construction).
-            band_all = eqpos.reshape(
-                eqpos.shape[0], eqpos.shape[1], nb, r
-            ).all(axis=3)
-            if own:
-                mask = band_all.argmax(axis=2) == band_k
-            else:
-                mask = band_all[:, :, band_k]
-            if thr is not None:
-                mask &= est >= thr
-            ii, jj = np.nonzero(mask)
-            gi = ii + i0
-            m = gi < jj  # ids sorted -> position order == id order
-            if m.any():
-                outs.append((ids[gi[m]], ids[jj[m]], est[ii[m], jj[m]]))
-
-    def one_bucket_cc(ids, S, band_k, outs):
-        """Connectivity mode: identical pair detection, but the passing
-        pairs of this bucket feed an in-kernel union-find (the same
-        min-hooking + full-shortcutting iteration as the driver CC) and
-        only (root, node) star edges are emitted. Blocks update the
-        parent array incrementally — union is order-independent — so the
-        O(k²) pair volume never materializes anywhere."""
-        if len(ids) < 2:
-            return
-        if max_bucket_size is not None and len(ids) > max_bucket_size:
-            return  # occupancy guard: documented approximation
+        """Detect one (band, key) bucket's pairs (ids sorted ascending, so
+        position order == id order), then emit them or their forest."""
         k = len(ids)
+        if k < 2 or (max_bucket_size is not None and k > max_bucket_size):
+            return  # occupancy guard: documented approximation
         parent = np.arange(k, dtype=np.int64)
         block = 1024
         for i0 in range(0, k, block):
+            # eqpos[i, j, h]: hash position h matches
             eqpos = S[i0 : i0 + block, None, :] == S[None, :, :]
-            est = eqpos.sum(axis=2) / nh
-            band_all = eqpos.reshape(
-                eqpos.shape[0], eqpos.shape[1], nb, r
-            ).all(axis=3)
+            band_all = eqpos.reshape(eqpos.shape[0], k, nb, r).all(axis=3)
             if own:
                 mask = band_all.argmax(axis=2) == band_k
             else:
                 mask = band_all[:, :, band_k]
-            if thr is not None:
-                mask &= est >= thr
             ii, jj = np.nonzero(mask)
-            gi = ii + i0
-            m = gi < jj
-            cu, cv = gi[m], jj[m]
-            if not len(cu):
+            m = ii + i0 < jj
+            ii, jj = ii[m], jj[m]
+            if thr is not None or not forest:
+                est = eqpos[ii, jj].sum(axis=1) / nh
+                if thr is not None:
+                    m = est >= thr
+                    ii, jj, est = ii[m], jj[m], est[m]
+            if not len(ii):
                 continue
-            while True:
-                pu, pv = parent[cu], parent[cv]
-                hi = np.maximum(pu, pv)
-                lo = np.minimum(pu, pv)
-                before = parent.copy()
-                np.minimum.at(parent, hi, lo)
-                while True:
-                    pp = parent[parent]
-                    if np.array_equal(pp, parent):
-                        break
-                    parent = pp
-                if np.array_equal(parent, before):
-                    break
-        non_root = parent != np.arange(k)
-        if non_root.any():
-            # ids sorted ascending -> the min-position root IS the
-            # min-id member; a < b holds for every emitted edge
-            outs.append((ids[parent[non_root]], ids[non_root]))
+            if forest:
+                parent = union(parent, ii + i0, jj)
+            else:
+                outs.append((ids[ii + i0], ids[jj], est))
+        if forest:
+            non_root = parent != np.arange(k)
+            if non_root.any():
+                # the min-position root IS the min-id member; a < b holds
+                # for every emitted edge
+                outs.append((ids[parent[non_root]], ids[non_root]))
 
     def gen_pairs(batches):
         """Streaming pass over (band,key)-sorted partitions: group
@@ -606,16 +602,15 @@ def minhash_lsh_pairs(
             starts = np.flatnonzero(newg)
             ends = np.r_[starts[1:], len(ids)]
             outs: list = []
-            bucket_fn = one_bucket_cc if connectivity_only else one_bucket
             for s, e in zip(starts, ends):
-                bucket_fn(ids[s:e], S[s:e], int(bandv[s]), outs)
+                one_bucket(ids[s:e], S[s:e], int(bandv[s]), outs)
             if not outs:
                 return None
             cols = {
                 "a": np.concatenate([o[0] for o in outs]),
                 "b": np.concatenate([o[1] for o in outs]),
             }
-            if not connectivity_only:
+            if not forest:
                 cols["est_jaccard"] = np.concatenate([o[2] for o in outs])
             return pd.DataFrame(cols)
 
@@ -637,17 +632,15 @@ def minhash_lsh_pairs(
             if out is not None:
                 yield out
 
-    schema = (
-        f"a {id_type}, b {id_type}"
-        if connectivity_only
-        else f"a {id_type}, b {id_type}, est_jaccard double"
-    )
+    schema = f"a {id_type}, b {id_type}"
+    if not forest:
+        schema += ", est_jaccard double"
     out = (
         band_rows.repartition("band", "key")
         .sortWithinPartitions("band", "key", "_id")
         .mapInPandas(gen_pairs, schema=schema)
     )
-    if max_bucket_size is not None:
+    if not own:
         # capped mode emits per surviving bucket (see ownership note)
         out = out.dropDuplicates(["a", "b"])
     return out

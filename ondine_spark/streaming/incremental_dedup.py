@@ -16,8 +16,9 @@ Scale shape per batch (B = batch docs, S = store rows):
 - vs-store check: band-key equi-join B×S postings — the store is read
   fresh each batch (parquet append grows it), candidates verified by
   signature agreement, never a cross join
-- within-batch: LSH pairs over B, cluster via connected_components
-  (driver union-find at batch sizes)
+- within-batch: the batch LSH bucket kernel over B's band rows (one
+  numpy pass per (band, key) bucket, no self-join) emits a star forest,
+  at most k−1 edges per k-doc bucket; connected_components clusters it
 - survivors are localCheckpoint-ed BEFORE the store append: the append
   plan must not read the directory it writes (self-referential write),
   and the checkpoint also prevents refreshByPath recompute hazards.
@@ -31,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ondine_spark.operators.dedup import (
+    _lsh_bucket_edges,
     connected_components,
     minhash_band_rows,
     minhash_signature,
@@ -46,15 +48,17 @@ def dedup_batch_against_store(
     bands: int = 8,
     ngram: int = 3,
     threshold: float = 0.5,
-) -> tuple[DataFrame, DataFrame]:
-    """One dedup step. Returns (survivor docs, survivor band rows).
+) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
+    """One dedup step. Returns (survivor docs, survivor band rows, cached).
 
-    A batch doc is dropped when its MinHash agreement with any stored or
-    surviving-smaller-id batch signature is ≥ threshold. The persisted
-    intermediate (the batch's band rows — they feed the store check, the
-    self-join, and both outputs) is registered in ``cached`` for the
-    caller to unpersist once survivors are materialized, so long-running
-    streams don't accumulate per-batch cache entries.
+    A batch doc is dropped when its MinHash agreement with any stored
+    signature is ≥ threshold, or when it is not the smallest id of its
+    within-batch cluster (the components of the pairs that share a band
+    bucket with agreement ≥ threshold). The persisted intermediates (the
+    batch's band rows — they feed the store check, the bucket kernel, and
+    both outputs) are returned in ``cached`` for the caller to unpersist
+    once survivors are materialized, so long-running streams don't
+    accumulate per-batch cache entries.
     """
     sig = minhash_signature(batch, id_col, text_col, num_hashes, ngram)
     cached: list[DataFrame] = []
@@ -65,14 +69,12 @@ def dedup_batch_against_store(
 
     bandrows = _persist(minhash_band_rows(sig, num_hashes, bands))
 
-    agree = lambda x, y: (  # noqa: E731
-        F.size(F.filter(F.zip_with(x, y, lambda p, q: p == q), lambda m: m))
-        .cast("double")
-        / F.lit(float(num_hashes))
-    )
-
     # (a) near-dup of an already-accepted doc → drop
     if store is not None:
+        same = F.zip_with("sig", "_ssig", lambda p, q: p == q)
+        agree = F.size(F.filter(same, lambda m: m)).cast("double") / F.lit(
+            float(num_hashes)
+        )
         hits = (
             bandrows.join(
                 store.select(
@@ -80,23 +82,17 @@ def dedup_batch_against_store(
                 ),
                 on=["band", "key"],
             )
-            .filter(agree(F.col("sig"), F.col("_ssig")) >= threshold)
+            .filter(agree >= threshold)
             .select("_id")
             .distinct()
         )
         bandrows = _persist(bandrows.join(hits, on="_id", how="left_anti"))
 
     # (b) within-batch near-dups: smallest id in each dup cluster survives
-    a = bandrows.select(F.col("_id").alias("a"), F.col("sig").alias("_sa"), "band", "key")
-    b = bandrows.select(F.col("_id").alias("b"), F.col("sig").alias("_sb"), "band", "key")
-    pairs = (
-        a.join(b, on=["band", "key"])
-        .filter(F.col("a") < F.col("b"))
-        .filter(agree(F.col("_sa"), F.col("_sb")) >= threshold)
-        .select("a", "b")
-        .dropDuplicates(["a", "b"])
+    edges = _lsh_bucket_edges(
+        bandrows, num_hashes, bands, threshold=threshold, forest=True
     )
-    comp = connected_components(pairs)
+    comp = connected_components(edges)
     losers = comp.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias("_id")
     )

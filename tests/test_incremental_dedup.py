@@ -65,6 +65,49 @@ def test_first_seen_dedup_across_restarts(spark, tmp_path):
     assert {r.doc_id for r in spark.read.parquet(dirs["out"]).collect()} == {1, 2, 5}
 
 
+def test_mass_duplicated_batch_keeps_cluster_min(spark):
+    """One micro-batch that is mostly a single near-duplicate cluster: 300
+    docs differing only in letter case and trailing spaces (one shingle
+    set, so one signature) plus three uniques, no store. The cluster's
+    smallest id and the uniques survive, and the bucket kernel hands
+    connected_components at most k−1 star edges, not the k(k−1)/2 pairs.
+    Called without a stream so it stays cheap."""
+    from ondine_spark.operators.dedup import (
+        _lsh_bucket_edges,
+        minhash_band_rows,
+        minhash_signature,
+    )
+    from ondine_spark.streaming.incremental_dedup import (
+        dedup_batch_against_store,
+    )
+
+    k, words = 300, T1.split()
+    dups = [
+        (10 + i, " ".join(
+            w.upper() if (i >> j) & 1 else w for j, w in enumerate(words)
+        ) + " " * (i % 3))
+        for i in range(k)
+    ]
+    uniques = [(1, T2), (2, T3), (500, "ledger entries for the quarterly "
+                                      "audit of warehouse inventory counts")]
+    batch = spark.createDataFrame(dups + uniques, SCHEMA)
+
+    kept_docs, _, cached = dedup_batch_against_store(
+        batch, None, "doc_id", "text", num_hashes=16, bands=8, threshold=0.5
+    )
+    kept = {r.doc_id for r in kept_docs.collect()}
+    for c in cached:
+        c.unpersist()
+    assert kept == {10, 1, 2, 500}
+
+    rows = minhash_band_rows(
+        minhash_signature(batch, "doc_id", "text", 16, 3), 16, 8
+    )
+    edges = _lsh_bucket_edges(rows, 16, 8, threshold=0.5, forest=True).collect()
+    assert 0 < len(edges) <= k - 1
+    assert {e.a for e in edges} == {10}
+
+
 def test_streaming_matches_batch_near_dedup_100k(spark, tmp_path):
     """Round-5 verdict item 5: the STREAMING dedup's accepted set must
     equal the BATCH ``near_dedup`` survivor set on the same corpus when

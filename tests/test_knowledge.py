@@ -313,6 +313,29 @@ def test_store_without_meta_defaults(spark, docs_df, tmp_path_factory):
     assert KnowledgeStore(spark, path, ngram_dim=4096).ngram_dim == 4096
 
 
+def test_ingest_raises_first_and_logs_second_index_error(
+    spark, docs_df, tmp_path_factory, caplog
+):
+    """The two index writes run on their own threads. When both fail,
+    ingest raises the first error on the caller thread and logs the
+    second instead of dropping it."""
+    import logging
+    import os as _os
+
+    path = str(tmp_path_factory.mktemp("kb_fail"))
+    for name in ("terms", "buckets"):
+        _os.makedirs(_os.path.join(path, name))
+    with caplog.at_level(logging.ERROR, logger="ondine_spark"):
+        with pytest.raises(Exception, match="already exists"):
+            KnowledgeStore(spark, path).ingest(
+                docs_df, "doc_id", "text", max_tokens=12, mode="error"
+            )
+    assert [
+        r for r in caplog.records
+        if "second index write also failed" in r.getMessage() and r.exc_info
+    ]
+
+
 def test_search_single_mode_topk_is_true_topk(spark, tmp_path_factory):
     """Regression (round 8): in dense-/keyword-only modes nothing consumed
     the `rank` column, so Catalyst pruned the ranking window (and its

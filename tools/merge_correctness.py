@@ -8,12 +8,16 @@ Usage: python tools/merge_correctness.py <out.json> <in.json> [in.json ...]
 
 from __future__ import annotations
 
+import argparse
 import json
-import sys
 
 
 def main() -> None:
-    out_path, ins = sys.argv[1], sys.argv[2:]
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("out", help="merged artifact to write")
+    ap.add_argument("inputs", nargs="+", help="per-batch artifacts, later wins")
+    args = ap.parse_args()
+    out_path, ins = args.out, args.inputs
     merged: dict = {}
     meta_src = None
     for p in ins:

@@ -18,7 +18,7 @@ same methodology as benchmarks/CRASH_1M.json.
 The corpus embeds a known near-dup structure: ~3% of docs duplicate a
 doc 1-2 FILES earlier (only the persisted signature store catches
 these — the cross-restart state under test), plus ~1% within-file dups
-(caught by the within-batch LSH self-join); all other docs carry
+(caught by the within-batch LSH bucket kernel); all other docs carry
 near-disjoint shingle sets so they genuinely survive.
 
 Usage: python tools/stream_1m.py [n_docs] [work_dir]   (spawns children)
@@ -95,7 +95,7 @@ def gen_corpus(spark, in_dir: str) -> None:
     ~3% cross-FILE dups (source 75,011 ids back = 1-2 files earlier at
     50K docs/file — these are only caught by the persisted signature
     store, exercising the cross-restart state) and ~1% within-file dups
-    (source 13 ids back — caught by the within-batch LSH self-join)."""
+    (source 13 ids back — caught by the within-batch LSH bucket kernel)."""
     from pyspark.sql import functions as F
 
     per_file = N_DOCS // N_FILES
