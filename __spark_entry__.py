@@ -1247,9 +1247,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # deterministic "output": the document's first 8 words
         toks = F.split(F.trim(F.col("text")), r"\s+")
         docs = docs.withColumn("summary", F.concat_ws(" ", F.slice(toks, 1, 8)))
-        out = grounding_scores(
-            docs, "summary", "text", threshold=0.3, id_col="doc_id"
-        )
+        out = grounding_scores(docs, "summary", "text", threshold=0.3)
         return out.select(
             "doc_id",
             F.round("_grounding_score", 6).alias("grounding_r"),

@@ -7,34 +7,39 @@ differing ``value_columns`` (numeric values compared with relative
 tolerance) mark every row of the group as ``_contradiction`` and store
 symmetric contradiction edges.
 
-Spark-first: one groupBy per key with collect_set / min-max — no window, no
-Python. Numeric tolerance uses the group's (max-min)/max(|max|,|min|)
-relative spread, equivalent to the reference's pairwise check for the
-flag (a group contradicts iff its extreme pair contradicts).
+Spark-first: one ``Window.partitionBy(key)`` pass with collect_set /
+min-max — no join, no Python. The input is read once, so an unpinned
+upstream (the LLM invoke in ``Pipeline._verify``) runs once per row. Rows
+with a null key belong to no group and are never flagged. Numeric
+tolerance uses the group's (max-min)/max(|max|,|min|) relative spread,
+equivalent to the reference's pairwise check for the flag (a group
+contradicts iff its extreme pair contradicts).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from functools import reduce
+from operator import and_, or_
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 CONTRADICTION = "_contradiction"
 
 
-def _group_flag(value_col: str, tolerance: float | None):
+def _group_flag(value_col: str, tolerance: float | None, w: Window):
     v = F.col(value_col)
+    distinct = F.size(F.collect_set(v).over(w)) > 1
     if tolerance is None:
-        return F.size(F.collect_set(v)) > 1
-    num = v.cast("double")
-    mn, mx = F.min(num), F.max(num)
+        return distinct
+    num = v.try_cast("double")
+    mn, mx = F.min(num).over(w), F.max(num).over(w)
     rel = (mx - mn) / F.greatest(F.abs(mx), F.abs(mn), F.lit(1e-12))
     # non-numeric values fall back to exact distinctness
     any_non_numeric = F.max(
         F.when(v.isNotNull() & num.isNull(), 1).otherwise(0)
-    ) == 1
-    return F.when(
-        any_non_numeric, F.size(F.collect_set(v)) > 1
-    ).otherwise(rel > tolerance)
+    ).over(w) == 1
+    return F.when(any_non_numeric, distinct).otherwise(rel > tolerance)
 
 
 def detect_contradictions(
@@ -44,16 +49,10 @@ def detect_contradictions(
     tolerance: float | None = None,
 ) -> DataFrame:
     """Append ``_contradiction`` boolean to every row."""
-    flags = [
-        _group_flag(c, tolerance).alias(f"_c_{c}") for c in value_cols
-    ]
-    groups = df.groupBy(*key_cols).agg(*flags)
-    any_flag = None
-    for c in value_cols:
-        f = F.col(f"_c_{c}")
-        any_flag = f if any_flag is None else (any_flag | f)
-    groups = groups.select(*key_cols, any_flag.alias(CONTRADICTION))
-    return df.join(groups, on=key_cols, how="left").fillna({CONTRADICTION: False})
+    w = Window.partitionBy(*key_cols)
+    any_flag = reduce(or_, (_group_flag(c, tolerance, w) for c in value_cols))
+    keyed = reduce(and_, (F.col(k).isNotNull() for k in key_cols))
+    return df.withColumn(CONTRADICTION, keyed & F.coalesce(any_flag, F.lit(False)))
 
 
 def contradiction_edges(

@@ -40,7 +40,7 @@ def test_bpe_tokenizer_roundtrip(spark, docs, tmp_path):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
-def test_pq_and_ivf_artifact_roundtrip(spark, sf_dir, tmp_path):
+def test_pq_and_ivf_artifact_roundtrip(spark, sf_dir, tmp_path, monkeypatch):
     from ondine_spark.operators.product_quantization import (
         pq_encode,
         pq_topk,
@@ -52,8 +52,25 @@ def test_pq_and_ivf_artifact_roundtrip(spark, sf_dir, tmp_path):
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
     )
-    books = train_pq_codebooks(emb, "embedding", m=8, nbits=4, max_train_rows=200)
-    cents = train_ivf_centroids(emb, nlist=4, max_train_rows=200)
+
+    def capped_fit(train, **kw):
+        """Fit on a corpus larger than the cap; every collect the trainer
+        makes brings at most ``max_train_rows`` rows to the driver."""
+        sizes, real = [], type(emb).collect
+
+        def counting_collect(self):
+            rows = real(self)
+            sizes.append(len(rows))
+            return rows
+
+        with monkeypatch.context() as mp:
+            mp.setattr(type(emb), "collect", counting_collect)
+            out = train(emb, max_train_rows=200, **kw)
+        assert sizes and max(sizes) <= 200 < emb.count()
+        return out
+
+    books = capped_fit(train_pq_codebooks, vec_col="embedding", m=8, nbits=4)
+    cents = capped_fit(train_ivf_centroids, nlist=4)
 
     bp, cp = str(tmp_path / "books.json"), str(tmp_path / "cents.json")
     save_artifact(bp, "pq_codebooks", books, spark=spark)

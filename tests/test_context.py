@@ -21,13 +21,23 @@ ROWS = [
      "The quick brown fox jumps over the lazy dog. Cats sleep all day."),
     (3, "cats sleep all day", "Cats sleep all day. Dogs bark at night."),
     (4, "", "Some source text here."),
+    (5, None, "The fox runs. A dog sleeps."),
+    (6, "the fox runs", None),
+    (7, "the fox runs", ""),
+    (8, "Le café crème à Zürich, naïve résumé",
+     "Le café est à Zürich! Ein naïve Résumé? Crème brûlée."),
+    (9, "fox fox fox dog dog the",
+     "Fox fox dog dog dog dog the. The the fox, the fox."),
+    (10, " ".join(f"w{i * 7 % 53} x{i % 11}" for i in range(100)),
+     " ".join(f"w{i} x{i % 5}." for i in range(40))
+     + " " + " ".join(f"w{i * 3 % 53}" for i in range(60)) + "."),
 ]
 
 
 def _oracle_score(output, source):
     import re
-    sents = [s for s in re.split(r"(?<=[.!?])\s+", source) if s.strip()]
-    return max((tfidf_pair_cosine(output, s) for s in sents), default=0.0)
+    sents = [s for s in re.split(r"(?<=[.!?])\s+", source or "") if s.strip()]
+    return max((tfidf_pair_cosine(output or "", s) for s in sents), default=0.0)
 
 
 def test_grounding_matches_reference_tfidf_oracle(spark):
@@ -64,14 +74,22 @@ def test_contradiction_exact_and_tolerance(spark):
             (3, "globex", "50"),
             (4, "globex", "80"),
             (5, "initech", "7"),
+            # a null key belongs to no group: never flagged
+            (6, None, "1"),
+            (7, None, "2"),
+            (8, "hooli", "9"),
+            (9, "hooli", "9"),
         ],
         ["_row_id", "company", "revenue"],
+    ).withColumn(
+        "ceo", F.when(F.col("_row_id") == 9, "eve").otherwise(F.lit("ann"))
     )
     exact = {
         r["_row_id"]: r["_contradiction"]
         for r in detect_contradictions(df, ["company"], ["revenue"]).collect()
     }
-    assert exact == {1: True, 2: True, 3: True, 4: True, 5: False}
+    assert exact == {1: True, 2: True, 3: True, 4: True, 5: False,
+                     6: False, 7: False, 8: False, 9: False}
     tol = {
         r["_row_id"]: r["_contradiction"]
         for r in detect_contradictions(
@@ -79,7 +97,18 @@ def test_contradiction_exact_and_tolerance(spark):
         ).collect()
     }
     # 100.0 vs 100.4 within 5% → not a contradiction; 50 vs 80 is
-    assert tol == {1: False, 2: False, 3: True, 4: True, 5: False}
+    assert tol == {1: False, 2: False, 3: True, 4: True, 5: False,
+                   6: False, 7: False, 8: False, 9: False}
+    # any value column disagreeing flags the group; the non-numeric ceo
+    # column falls back to exact distinctness under a tolerance
+    both = {
+        r["_row_id"]: r["_contradiction"]
+        for r in detect_contradictions(
+            df, ["company"], ["revenue", "ceo"], tolerance=0.05
+        ).collect()
+    }
+    assert both == {1: False, 2: False, 3: True, 4: True, 5: False,
+                    6: False, 7: False, 8: True, 9: True}
 
     edges = contradiction_edges(df, "_row_id", ["company"], ["revenue"], 0.05)
     got = {(r["id_a"], r["id_b"]) for r in edges.collect()}

@@ -1,6 +1,7 @@
 """End-to-end: KB retrieval + verification stages inside the pipeline plan
 (reference lifecycle: ondine/api/pipeline.py:694-751,873-893,929-1107)."""
 
+import math
 import sys
 
 from pyspark import cloudpickle
@@ -79,6 +80,44 @@ def test_kb_pipeline_grounded_answers(spark, kb, tmp_path):
     assert got["q3"]["answer"] == "unsupported hallucinated claim xyz"
     assert got["q3"]["_grounded"] is False
     assert got["q1"]["_confidence_score"] > got["q3"]["_confidence_score"]
+
+
+@pytest.mark.parametrize("batch_size", [1, 5])
+def test_verification_invokes_llm_once_per_batch(spark, kb, tmp_path,
+                                                 batch_size):
+    """Grounding, contradiction detection and confidence read the unpinned
+    invoke lineage once: ⌈N/batch⌉ calls, each made exactly once."""
+    from ondine_spark import mock_client_factory
+
+    n = 12
+    rows = spark.createDataFrame(
+        [("q%02d" % i, "capital of %s is good"
+          % ("France" if i % 2 else "Spain"), "g%d" % (i % 3))
+         for i in range(n)],
+        ["qid", "question", "grp"],
+    )
+    count_file = str(tmp_path / "calls.txt")
+    res = (
+        PipelineBuilder(spark)
+        .from_dataframe(rows, ["question", "grp"], id_column="qid")
+        .with_prompt("Answer: {question}", ["answer"])
+        .with_custom_llm_client(mock_client_factory(count_file=count_file))
+        .with_knowledge_base(kb.path, ["question"], top_k=1, min_score=0.3)
+        .with_batch_size(batch_size)
+        .with_grounding()
+        .with_contradiction_detection(["grp"], ["answer"])
+        .with_confidence_scoring()
+        .build()
+        .execute()
+    )
+    out = res.data.select(
+        "_grounding_score", "_contradiction", "_confidence_score"
+    ).collect()
+    assert len(out) == n
+    assert all(v is not None for r in out for v in r)
+    assert res.api_calls == math.ceil(n / batch_size)
+    with open(count_file) as f:
+        assert len(f.readlines()) == res.api_calls
 
 
 def test_contradiction_in_pipeline(spark):
