@@ -13,8 +13,19 @@ cleaning toolkit, each designed for 100 TB scale:
   pigeonhole trick (block-equality join), not pairwise comparison.
 - embedding near-dup: random-hyperplane LSH buckets → cosine verify.
 
+The grouped pair kernels (counting Jaccard, LSH buckets, winnowing,
+semantic cells) run on ONE sorted-group driver, :func:`_sorted_group_pairs`:
+shuffle on the group key, sort locally, stream the sorted partition
+through numpy with groups carried across Arrow batches and a group-size
+cap; each operator supplies only its per-group body. The driver emits in
+one of two modes: ``pairs`` — (min id, max id, extras…) rows, the
+product of the pair operators — or ``forest`` — union-find star edges, at
+most k−1 per k-row group, for consumers that only cluster (LSH
+``connectivity_only``, streaming dedup, ``semantic_dedup``).
+Simhash pairs stay a block-equality self-join.
+
 All shuffles are on compact keys (hashes/buckets); every operator ends in
-a pair list or a keep-set join, both broadcast-able when small.
+a pair list, a star forest, or a keep-set join.
 """
 
 from __future__ import annotations
@@ -44,6 +55,177 @@ def exact_dedup(
     agg = F.min(order_col) if keep == "min" else F.max(order_col)
     keep_ids = df.groupBy(*key_cols).agg(agg.alias(order_col))
     return df.join(keep_ids, on=key_cols + [order_col], how="left_semi")
+
+
+# ------------------------------------------ sorted-group pair driver
+
+_COS_BLOCK = 2048  # gram-product rows per block: peak memory 2048 × n doubles
+
+
+def _min_hook_union(parent, cu, cv):
+    """Merge the edges (cu, cv) into the union-find array ``parent`` by
+    vectorized min-hooking + full shortcutting; converges in O(log n)
+    rounds, each numpy-vectorized over all edges. At the fixpoint every
+    edge has parent[u] == parent[v] and parent is idempotent, so labels
+    are constant per component, and the component's minimum node can
+    never be hooked lower, so that constant is the minimum — the dict
+    union-find's answer (cross-checked in tests/test_dedup_clusters.py).
+    Union is order-independent, so edges may arrive in blocks that update
+    ``parent`` incrementally."""
+    import numpy as np
+
+    while True:
+        pu, pv = parent[cu], parent[cv]
+        before = parent.copy()
+        np.minimum.at(parent, np.maximum(pu, pv), np.minimum(pu, pv))
+        while True:
+            pp = parent[parent]
+            if np.array_equal(pp, parent):
+                break
+            parent = pp
+        if np.array_equal(parent, before):
+            return parent
+
+
+def _cosine_blocks(X, thr: float):
+    """Yield ``(ii, jj, cos)`` for every row pair ii < jj of ``X`` with
+    cosine ≥ ``thr``: one normalized BLAS gram product per row block
+    (cos(a,b) = (a/|a|)·(b/|b|)). The per-pair elementwise form
+    ((x*y).sum(axis=1), what ``cosine_arrow`` does) materializes
+    pairs × dim temporaries; the gram product is O(n · dim) reads into a
+    dense matmul (measured 1.3 s → 0.01 s on 252K pairs at sf0.1). Values
+    agree with ``cosine_arrow`` to ~1 ulp (same float64 dot, different
+    summation order). A zero-norm row keeps cosine 0.0 exactly (its
+    normalized row is 0)."""
+    import numpy as np
+
+    nrm = np.sqrt((X * X).sum(axis=1))
+    Xn = X / np.where(nrm == 0.0, 1.0, nrm)[:, None]
+    for i0 in range(0, len(X) - 1, _COS_BLOCK):
+        G = Xn[i0 : i0 + _COS_BLOCK] @ Xn.T
+        bi, bj = np.nonzero(G >= thr)
+        keep = bj > bi + i0  # upper triangle only (j > global i)
+        bi, bj = bi[keep], bj[keep]
+        yield bi + i0, bj, G[bi, bj]
+
+
+def _sorted_group_pairs(
+    rows: DataFrame,
+    keys: list[str],
+    order: list[str],
+    body,
+    extras: str = "",
+    max_group: int | None = None,
+    forest: bool = False,
+    matrix: tuple[str, str] | None = None,
+) -> DataFrame:
+    """The one pair driver behind every grouped pair kernel (counting
+    jaccard, LSH buckets, winnowing, semantic cells): ONE shuffle on
+    ``keys``, a local sort on ``keys + order``, and one streaming numpy
+    pass over each sorted partition (``mapInPandas``).
+
+    ``rows`` carries an ``_id`` column. Group boundaries come from
+    vectorized compares of the key columns; a group spanning Arrow
+    batches is carried over to the next batch inside the partition
+    iterator. Groups of size < 2 or over ``max_group`` (the operator's
+    stop-shingle / stop-gram / bucket-occupancy cap: a group's length in
+    the sorted partition IS its key's frequency) are dropped with numpy
+    before any per-group Python call; the surviving rows are compacted
+    once per flushed batch, and the array column ``matrix = (column,
+    dtype)`` becomes one numpy matrix then — never once per group.
+    Per-group work is plain array slicing, so 150K tiny groups cost
+    microseconds each (a groupBy().applyInPandas variant paid ~0.2 ms of
+    pandas machinery PER GROUP — 5-16x slower at sf0.1).
+
+    ``body(g)`` gets one group as a dict column → numpy slice (the matrix
+    under its column name) and yields blocks ``(ii, jj, extras)``: group
+    positions of detected pairs plus output arrays matching the
+    ``extras`` schema. Pair mode emits ``(a, b, extras…)`` with
+    a = min id, b = max id. ``forest`` mode feeds every block to
+    :func:`_min_hook_union` and emits only the group's (root, node) star
+    edges — at most k−1 rows per k-row group, ``(a, b)`` only, with the
+    same connected components as the pairs. Only consumers that cluster
+    the pairs may use it: a pair score summed ACROSS groups (jaccard's
+    common-shingle count, winnowing's shared count) needs every pair.
+    """
+    import numpy as np
+    import pandas as pd
+
+    id_type = dict(rows.dtypes)["_id"]
+    schema = f"a {id_type}, b {id_type}"
+    names = []
+    if extras and not forest:
+        schema += ", " + extras
+        names = [f.split()[0] for f in extras.split(",")]
+    cap = max_group if max_group is not None else 1 << 62
+
+    def flush(pdf: pd.DataFrame, starts, end: int):
+        size = np.r_[starts[1:], end] - starts
+        ok = (size >= 2) & (size <= cap)
+        starts, size = starts[ok], size[ok]
+        if not len(size):
+            return None
+        # gather the kept groups' rows once, contiguous per group
+        offset = starts - (np.cumsum(size) - size)
+        take = np.arange(size.sum()) + np.repeat(offset, size)
+        cols = {c: pdf[c].to_numpy()[take] for c in pdf.columns}
+        if matrix is not None:
+            cols[matrix[0]] = np.array(cols[matrix[0]].tolist(), dtype=matrix[1])
+        outs: list = []
+        lo = 0
+        for k in size.tolist():
+            g = {c: v[lo : lo + k] for c, v in cols.items()}
+            if forest:
+                parent = np.arange(k, dtype=np.int64)
+                for ii, jj, _ in body(g):
+                    if len(ii):
+                        parent = _min_hook_union(parent, ii, jj)
+                node = np.flatnonzero(parent != np.arange(k))
+                if len(node):
+                    outs.append((lo + parent[node], lo + node, ()))
+            else:
+                for ii, jj, ex in body(g):
+                    if len(ii):
+                        outs.append((lo + ii, lo + jj, ex))
+            lo += k
+        if not outs:
+            return None
+        ids = cols["_id"]
+        a = ids[np.concatenate([o[0] for o in outs])]
+        b = ids[np.concatenate([o[1] for o in outs])]
+        out = {"a": np.minimum(a, b), "b": np.maximum(a, b)}
+        for i, name in enumerate(names):
+            out[name] = np.concatenate([o[2][i] for o in outs])
+        return pd.DataFrame(out)
+
+    def gen(batches):
+        carry = None
+        for pdf in batches:
+            if carry is not None:
+                pdf = pd.concat([carry, pdf], ignore_index=True)
+            if not len(pdf):
+                continue
+            new = np.zeros(len(pdf), dtype=bool)
+            new[0] = True
+            for key in keys:
+                v = pdf[key].to_numpy()
+                new[1:] |= v[1:] != v[:-1]
+            starts = np.flatnonzero(new)
+            # the last group may continue in the next batch
+            carry = pdf.iloc[starts[-1] :]
+            out = flush(pdf, starts[:-1], int(starts[-1]))
+            if out is not None:
+                yield out
+        if carry is not None and len(carry):
+            out = flush(carry, np.array([0]), len(carry))
+            if out is not None:
+                yield out
+
+    return (
+        rows.repartition(*keys)
+        .sortWithinPartitions(*keys, *order)
+        .mapInPandas(gen, schema=schema)
+    )
 
 
 # ------------------------------------------------- n-gram Jaccard pairs (D2)
@@ -151,8 +333,14 @@ def ngram_jaccard_pairs(
         cand.join(ga, on="a")
         .join(gb, on="b")
         .withColumn("_common", F.size(F.array_intersect("_ga", "_gb")))
-        .drop("_ga", "_gb")
     )
+    return _jaccard_verify(common, threshold)
+
+
+def _jaccard_verify(common: DataFrame, threshold: float) -> DataFrame:
+    """The verify tail both Jaccard plans share: ``jaccard = |A∩B| /
+    (|A|+|B| − |A∩B|)`` from the pair's common count and size sum, then
+    the threshold. Output: a, b, jaccard."""
     return (
         common.withColumn(
             "jaccard",
@@ -176,88 +364,37 @@ def _jaccard_by_counting(
     generation — pruned pairs are never materialized. The symmetric
     formula needs only |A|+|B|, so each pair carries one size-sum field.
 
-    Pair generation is ONE shuffle (repartition on the shingle) + ONE
-    streaming numpy pass (``mapInPandas`` over shingle-sorted
-    partitions): per-group work is plain array slicing, so 150K tiny
-    groups cost microseconds each (a groupBy().applyInPandas variant
-    paid ~0.2 ms of pandas machinery PER GROUP — 16x slower at sf0.1 —
-    and the original nested higher-order-function expression is
-    interpreted per element, which a capped 1,000-doc stop-shingle turns
-    into 500K interpreted pair expansions). Groups spanning Arrow
-    batches are carried over inside the partition iterator.
+    Pair generation is :func:`_sorted_group_pairs` over shingle groups
+    (ordered by size, so the length filter is one comparison per pair);
+    the original nested higher-order-function expression was interpreted
+    per element, which a capped 1,000-doc stop-shingle turned into 500K
+    interpreted pair expansions.
 
-    The ``max_shingle_freq`` cap is enforced INSIDE the kernel (r8): a
+    The ``max_shingle_freq`` cap is the driver's group cap (r8): a
     group's size within the shingle-sorted partition IS the shingle's
-    document frequency, so capped groups are skipped with one length
-    check. The previous pre-filter (``groupBy(_shingle).count`` + join
-    back) re-evaluated the shingle explode — the expensive CPU stage —
-    a second time and added two exchanges for the same result set. At
-    cluster scale a stop-shingle's postings now cross the one shuffle
-    before being dropped (they used to be dropped map-side after the
-    freq join), but they crossed that join's own shuffle anyway unless
-    the keep-list broadcast; the capped group is skipped after a local
-    sort, never expanded to pairs.
+    document frequency. The previous pre-filter (``groupBy(_shingle)
+    .count`` + join back) re-evaluated the shingle explode — the
+    expensive CPU stage — a second time and added two exchanges for the
+    same result set; a capped group is now skipped after a local sort,
+    never expanded to pairs.
     """
     import numpy as np
-    import pandas as pd
 
-    max_df = max_shingle_freq if max_shingle_freq is not None else (1 << 62)
-    id_dtype = dict(posting.dtypes)["_id"]
     thr = float(threshold)
 
-    def gen_pairs(batches):
-        def flush(pdf: pd.DataFrame):
-            ids = pdf["_id"].to_numpy()
-            sz = pdf["_size"].to_numpy(dtype="int64")
-            sh = pdf["_shingle"].to_numpy()
-            # group boundaries in the sorted batch
-            starts = np.flatnonzero(np.r_[True, sh[1:] != sh[:-1]])
-            ends = np.r_[starts[1:], len(sh)]
-            outs_a, outs_b, outs_ss = [], [], []
-            for s, e in zip(starts, ends):
-                n = e - s
-                if n < 2 or n > max_df:
-                    continue
-                gid, gsz = ids[s:e], sz[s:e]
-                # sorted by (_shingle, _size): position i<j => size i<=j,
-                # so the lossless length filter is min >= t*max
-                ii, jj = np.nonzero(gsz[:, None] >= thr * gsz[None, :])
-                m = ii < jj
-                a, b = gid[ii[m]], gid[jj[m]]
-                outs_a.append(np.minimum(a, b))
-                outs_b.append(np.maximum(a, b))
-                outs_ss.append(gsz[ii[m]] + gsz[jj[m]])
-            if not outs_a:
-                return None
-            return pd.DataFrame({
-                "a": np.concatenate(outs_a),
-                "b": np.concatenate(outs_b),
-                "_ss": np.concatenate(outs_ss),
-            })
-
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            last = pdf["_shingle"].iloc[-1]
-            is_last = (pdf["_shingle"] == last).to_numpy()
-            carry = pdf[is_last]
-            body = pdf[~is_last]
-            out = flush(body) if len(body) else None
-            if out is not None:
-                yield out
-        if carry is not None and len(carry):
-            out = flush(carry)
-            if out is not None:
-                yield out
+    def shingle_pairs(g):
+        sz = g["_size"].astype(np.int64)
+        # sorted by (_shingle, _size): position i<j => size i<=j, so the
+        # lossless length filter is min >= t*max
+        ii, jj = np.nonzero(sz[:, None] >= thr * sz[None, :])
+        m = ii < jj
+        ii, jj = ii[m], jj[m]
+        yield ii, jj, (sz[ii] + sz[jj],)
 
     common = (
-        posting.repartition("_shingle")
-        .sortWithinPartitions("_shingle", "_size", "_id")
-        .mapInPandas(
-            gen_pairs, schema=f"a {id_dtype}, b {id_dtype}, _ss long"
+        _sorted_group_pairs(
+            posting, ["_shingle"], ["_size", "_id"], shingle_pairs,
+            extras="_ss long", max_group=max_shingle_freq,
         )
         .groupBy("a", "b")
         .agg(
@@ -265,14 +402,7 @@ def _jaccard_by_counting(
             F.first("_ss").alias("_ss"),
         )
     )
-    return (
-        common.withColumn(
-            "jaccard",
-            F.col("_common") / (F.col("_ss") - F.col("_common")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
+    return _jaccard_verify(common, threshold)
 
 
 # ------------------------------------------------------- MinHash + LSH (D3)
@@ -509,15 +639,14 @@ def _lsh_bucket_edges(
     store check — computed only for candidate pairs, and only when it is
     emitted (pair mode) or thresholded.
 
-    Pair mode emits (a, b, est_jaccard). ``forest`` mode feeds the same
-    pairs to a bucket-local union-find and emits (root, node) star edges
+    Runs on :func:`_sorted_group_pairs` (one group per (band, key)
+    bucket, ``max_bucket_size`` as the group cap). Pair mode emits
+    (a, b, est_jaccard); ``forest`` mode emits the driver's star edges
     only — at most k−1 rows per k-doc bucket, with the same connected
     components as the pairs (see :func:`minhash_lsh_pairs`).
     """
     import numpy as np
-    import pandas as pd
 
-    id_type = dict(band_rows.dtypes)["_id"]
     thr = float(threshold) if threshold is not None else None
     nh, nb = num_hashes, bands
     r = num_hashes // bands
@@ -532,33 +661,14 @@ def _lsh_bucket_edges(
     # construction).
     own = max_bucket_size is None
 
-    def union(parent, cu, cv):
-        """Merge pairs (cu, cv) into ``parent``: the same min-hooking +
-        full-shortcutting iteration as the driver CC. Union is
-        order-independent, so blocks update the array incrementally."""
-        while True:
-            pu, pv = parent[cu], parent[cv]
-            before = parent.copy()
-            np.minimum.at(parent, np.maximum(pu, pv), np.minimum(pu, pv))
-            while True:
-                pp = parent[parent]
-                if np.array_equal(pp, parent):
-                    break
-                parent = pp
-            if np.array_equal(parent, before):
-                return parent
-
-    def one_bucket(ids, S, band_k, outs):
-        """Detect one (band, key) bucket's pairs (ids sorted ascending, so
-        position order == id order), then emit them or their forest."""
-        k = len(ids)
-        if k < 2 or (max_bucket_size is not None and k > max_bucket_size):
-            return  # occupancy guard: documented approximation
-        parent = np.arange(k, dtype=np.int64)
-        block = 1024
-        for i0 in range(0, k, block):
+    def bucket_pairs(g):
+        """One (band, key) bucket's pairs (ids ascending, so position
+        order == id order), detected in row blocks."""
+        S, band_k = g["sig"], int(g["band"][0])
+        k = len(S)
+        for i0 in range(0, k, 1024):
             # eqpos[i, j, h]: hash position h matches
-            eqpos = S[i0 : i0 + block, None, :] == S[None, :, :]
+            eqpos = S[i0 : i0 + 1024, None, :] == S[None, :, :]
             band_all = eqpos.reshape(eqpos.shape[0], k, nb, r).all(axis=3)
             if own:
                 mask = band_all.argmax(axis=2) == band_k
@@ -567,78 +677,19 @@ def _lsh_bucket_edges(
             ii, jj = np.nonzero(mask)
             m = ii + i0 < jj
             ii, jj = ii[m], jj[m]
-            if thr is not None or not forest:
-                est = eqpos[ii, jj].sum(axis=1) / nh
-                if thr is not None:
-                    m = est >= thr
-                    ii, jj, est = ii[m], jj[m], est[m]
-            if not len(ii):
+            if thr is None and forest:
+                yield ii + i0, jj, ()
                 continue
-            if forest:
-                parent = union(parent, ii + i0, jj)
-            else:
-                outs.append((ids[ii + i0], ids[jj], est))
-        if forest:
-            non_root = parent != np.arange(k)
-            if non_root.any():
-                # the min-position root IS the min-id member; a < b holds
-                # for every emitted edge
-                outs.append((ids[parent[non_root]], ids[non_root]))
+            est = eqpos[ii, jj].sum(axis=1) / nh
+            if thr is not None:
+                m = est >= thr
+                ii, jj, est = ii[m], jj[m], est[m]
+            yield ii + i0, jj, (est,)
 
-    def gen_pairs(batches):
-        """Streaming pass over (band,key)-sorted partitions: group
-        boundaries via array compares, per-group numpy — tiny buckets
-        cost microseconds (a groupBy().applyInPandas variant paid ~0.2 ms
-        pandas machinery per bucket: 5x slower at sf0.1 where nearly all
-        20K buckets are singletons). Buckets spanning Arrow batches carry
-        over inside the partition iterator."""
-
-        def flush(pdf: pd.DataFrame):
-            bandv = pdf["band"].to_numpy()
-            keyv = pdf["key"].to_numpy()
-            ids = pdf["_id"].to_numpy()
-            S = np.array(pdf["sig"].tolist(), dtype="int64")
-            newg = np.r_[True, (bandv[1:] != bandv[:-1]) | (keyv[1:] != keyv[:-1])]
-            starts = np.flatnonzero(newg)
-            ends = np.r_[starts[1:], len(ids)]
-            outs: list = []
-            for s, e in zip(starts, ends):
-                one_bucket(ids[s:e], S[s:e], int(bandv[s]), outs)
-            if not outs:
-                return None
-            cols = {
-                "a": np.concatenate([o[0] for o in outs]),
-                "b": np.concatenate([o[1] for o in outs]),
-            }
-            if not forest:
-                cols["est_jaccard"] = np.concatenate([o[2] for o in outs])
-            return pd.DataFrame(cols)
-
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            last_b, last_k = pdf["band"].iloc[-1], pdf["key"].iloc[-1]
-            is_last = ((pdf["band"] == last_b) & (pdf["key"] == last_k)).to_numpy()
-            carry = pdf[is_last]
-            body = pdf[~is_last]
-            out = flush(body) if len(body) else None
-            if out is not None:
-                yield out
-        if carry is not None and len(carry):
-            out = flush(carry)
-            if out is not None:
-                yield out
-
-    schema = f"a {id_type}, b {id_type}"
-    if not forest:
-        schema += ", est_jaccard double"
-    out = (
-        band_rows.repartition("band", "key")
-        .sortWithinPartitions("band", "key", "_id")
-        .mapInPandas(gen_pairs, schema=schema)
+    out = _sorted_group_pairs(
+        band_rows, ["band", "key"], ["_id"], bucket_pairs,
+        extras="est_jaccard double", max_group=max_bucket_size,
+        forest=forest, matrix=("sig", "int64"),
     )
     if not own:
         # capped mode emits per surviving bucket (see ownership note)
@@ -813,67 +864,23 @@ def winnow_overlap_pairs(
     Output: ``a``, ``b``, ``shared`` (number of co-occurring fingerprints).
     """
     import numpy as np
-    import pandas as pd
 
     rows = winnow_fingerprint_rows(df, id_col, text_col, k, w, impl=impl)
-    id_dtype = dict(rows.dtypes)["_id"]
 
-    # Pair generation is ONE shuffle (repartition on the fingerprint) +
-    # one streaming numpy pass over fp-sorted partitions — the same shape
-    # as ``_jaccard_by_counting`` (r8). A group's length within the
-    # sorted partition IS the fingerprint's document frequency, so
-    # "stop-grams" seen in more than ``max_df`` documents (boilerplate —
-    # without the cap a fingerprint in f docs emits C(f,2) pairs) are
-    # skipped with one length check. The previous
+    # Pair generation is :func:`_sorted_group_pairs` over fp groups (r8).
+    # A group's length within the sorted partition IS the fingerprint's
+    # document frequency, so "stop-grams" seen in more than ``max_df``
+    # documents (boilerplate — without the cap a fingerprint in f docs
+    # emits C(f,2) pairs) are the driver's capped groups. The previous
     # ``groupBy(fp).agg(collect_list)`` + nested ``F.transform`` pair
     # expansion materialized n² interpreted structs per fingerprint;
     # per-doc fingerprints are distinct by construction and ids within a
     # group are sorted ascending, so ``np.triu_indices`` emits exactly
     # the a < b pairs the expression form produced.
-    def gen_pairs(batches):
-        def flush(pdf: pd.DataFrame):
-            ids = pdf["_id"].to_numpy()
-            fp = pdf["fp"].to_numpy()
-            starts = np.flatnonzero(np.r_[True, fp[1:] != fp[:-1]])
-            ends = np.r_[starts[1:], len(fp)]
-            outs_a, outs_b = [], []
-            for s, e in zip(starts, ends):
-                n = e - s
-                if n < 2 or n > max_df:
-                    continue
-                ii, jj = np.triu_indices(n, 1)
-                gid = ids[s:e]
-                outs_a.append(gid[ii])
-                outs_b.append(gid[jj])
-            if not outs_a:
-                return None
-            return pd.DataFrame(
-                {"a": np.concatenate(outs_a), "b": np.concatenate(outs_b)}
-            )
+    def fp_pairs(g):
+        yield (*np.triu_indices(len(g["_id"]), 1), ())
 
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            last = pdf["fp"].iloc[-1]
-            is_last = (pdf["fp"] == last).to_numpy()
-            carry = pdf[is_last]
-            body = pdf[~is_last]
-            out = flush(body) if len(body) else None
-            if out is not None:
-                yield out
-        if carry is not None and len(carry):
-            out = flush(carry)
-            if out is not None:
-                yield out
-
-    pairs = (
-        rows.repartition("fp")
-        .sortWithinPartitions("fp", "_id")
-        .mapInPandas(gen_pairs, schema=f"a {id_dtype}, b {id_dtype}")
-    )
+    pairs = _sorted_group_pairs(rows, ["fp"], ["_id"], fp_pairs, max_group=max_df)
     return (
         pairs.groupBy("a", "b")
         .agg(F.count("*").alias("shared"))
@@ -1119,32 +1126,13 @@ def connected_components(
         ua = pdf["a"].to_numpy()
         vb = pdf["b"].to_numpy()
         if np.issubdtype(ua.dtype, np.integer):
-            # vectorized min-hooking + full shortcutting: converges in
-            # O(log n) rounds (same family as the distributed small-star
-            # path), each round numpy-vectorized over all edges. Provably
-            # the union-find answer: at the fixpoint every edge has
-            # parent[u] == parent[v] and parent is idempotent, so labels
-            # are constant per component; the component's minimum node
-            # can never be hooked lower, so that constant is the min —
-            # exactly the dict union-find's output (cross-checked in
-            # tests/test_dedup_clusters.py).
+            # vectorized min-hooking over compacted node positions
             nodes, inv = np.unique(np.concatenate([ua, vb]),
                                    return_inverse=True)
-            cu, cv = inv[: len(ua)], inv[len(ua):]
-            parent = np.arange(len(nodes), dtype=np.int64)
-            while True:
-                pu, pv = parent[cu], parent[cv]
-                hi = np.maximum(pu, pv)
-                lo = np.minimum(pu, pv)
-                before = parent.copy()
-                np.minimum.at(parent, hi, lo)
-                while True:
-                    pp = parent[parent]
-                    if np.array_equal(pp, parent):
-                        break
-                    parent = pp
-                if np.array_equal(parent, before):
-                    break
+            parent = _min_hook_union(
+                np.arange(len(nodes), dtype=np.int64),
+                inv[: len(ua)], inv[len(ua):],
+            )
             import pandas as pd
 
             labels_pdf = pd.DataFrame(
@@ -1363,26 +1351,11 @@ def embedding_neardup_pairs(
         # >0 drops zero vectors (cosine(0,·)=0 by contract); isfinite
         # drops any NaN/Inf row that slipped past the frame filter
         keep = (norms > 0) & np.isfinite(norms)
-        ids, X, norms = ids[keep], X[keep], norms[keep]
-        if len(ids) < 2:
-            return pd.DataFrame({"a": ids[:0], "b": ids[:0],
-                                 "cos_sim": np.array([], dtype="float64")})
-        Xn = X / norms[:, None]
-        outs = []
-        block = 2048
-        for i0 in range(0, len(ids), block):
-            S = Xn[i0 : i0 + block] @ Xn.T
-            ii, jj = np.nonzero(S >= thr)
-            gi = ii + i0
-            m = gi < jj
-            if m.any():
-                outs.append(pd.DataFrame({
-                    "a": ids[gi[m]], "b": ids[jj[m]], "cos_sim": S[ii[m], jj[m]],
-                }))
-        if not outs:
-            return pd.DataFrame({"a": ids[:0], "b": ids[:0],
-                                 "cos_sim": np.array([], dtype="float64")})
-        return pd.concat(outs, ignore_index=True)
+        ids, X = ids[keep], X[keep]
+        none = np.array([], dtype=np.int64)
+        blocks = [*_cosine_blocks(X, thr), (none, none, np.array([]))]
+        ii, jj, cos = (np.concatenate(c) for c in zip(*blocks))
+        return pd.DataFrame({"a": ids[ii], "b": ids[jj], "cos_sim": cos})
 
     return keyed.groupBy("_bucket").applyInPandas(
         bucket_pairs, schema=f"a {id_type}, b {id_type}, cos_sim double"
@@ -1434,6 +1407,20 @@ def semantic_dup_pairs(
 
     Output: ``a``, ``b``, ``cell``, ``cos_sim``.
     """
+    return _semantic_cell_edges(df, id_col, vec_col, centroids, threshold)
+
+
+def _semantic_cell_edges(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    centroids: list[list[float]],
+    threshold: float,
+    forest: bool = False,
+) -> DataFrame:
+    """:func:`semantic_dup_pairs`' plan; ``forest=True`` emits the
+    driver's (a, b) star edges instead — at most cell−1 per cell, with
+    the same connected components (what :func:`semantic_dedup` needs)."""
     if not centroids:
         # no centroids (empty training corpus): no cells, no candidates
         idt = dict(df.dtypes)[id_col]
@@ -1456,83 +1443,24 @@ def semantic_dup_pairs(
     # Arrow boundary — 256 MB at sf0.1 vs the 2.5 MB of distinct vectors
     # — and the `cos_sim >= threshold` filter on the pandas-UDF column
     # re-evaluated the kernel (guide §4.4: two ArrowEvalPython nodes in
-    # the plan). Now: ONE exchange on the cell id, vectors cross the
-    # boundary once, and a per-cell numpy kernel enumerates the upper
-    # triangle and thresholds in place. The cosine math is BIT-IDENTICAL
-    # to cosine_arrow ((x*y).sum(axis=1), same norms, 0.0 on zero norm);
-    # ids are sorted ascending inside each cell so triu pairs are exactly
-    # the a < b set. Hot-cell behaviour is unchanged (quadratic within
-    # the cell — documented above). The cosine itself is one normalized
-    # BLAS gram product per cell row-block (cos(a,b) = (a/|a|)·(b/|b|)):
-    # the per-pair elementwise form ((x*y).sum(axis=1), what cosine_arrow
-    # does) materializes pairs × dim temporaries — O(cluster² · dim)
-    # memory traffic — where the gram product is O(cluster · dim) reads
-    # into a dense matmul (measured 1.3 s → 0.01 s on 252K pairs at
-    # sf0.1). Values agree with cosine_arrow to ~1 ulp (same float64
-    # dot, different summation order); the gate rounds to 6 decimals.
-    # Zero-norm vectors keep cosine 0.0 exactly (normalized row is 0).
-    # Row-blocking bounds peak memory at ROW_BLOCK × cluster doubles.
-    import numpy as np
-    import pandas as pd
-
-    idt = dict(df.dtypes)[id_col]
-    cell_t = dict(assigned.dtypes)["cell"]
+    # the plan). Now: :func:`_sorted_group_pairs` over cells — ONE
+    # exchange on the cell id, vectors cross the boundary once, and each
+    # cell's upper triangle is thresholded in place by
+    # :func:`_cosine_blocks` (ids ascending inside each cell, so triu
+    # pairs are exactly the a < b set; the gate rounds cosines to 6
+    # decimals). Hot-cell behaviour is unchanged (quadratic within the
+    # cell — documented above).
     thr = float(threshold)
-    out_schema = f"a {idt}, b {idt}, cell {cell_t}, cos_sim double"
+    cell_t = dict(assigned.dtypes)["cell"]
 
-    def cell_pair_kernel(batches):
-        ROW_BLOCK = 4096
+    def cell_pairs(g):
+        for ii, jj, cos in _cosine_blocks(g["_v"], thr):
+            yield ii, jj, (g["cell"][ii], cos)
 
-        def flush(pdf: pd.DataFrame):
-            n = len(pdf)
-            if n < 2:
-                return None
-            ids = pdf["_id"].to_numpy()
-            V = np.array(pdf["_v"].tolist(), dtype="float64")
-            nrm = np.sqrt((V * V).sum(axis=1))
-            Vn = V / np.where(nrm == 0.0, 1.0, nrm)[:, None]
-            outs = []
-            for i0 in range(0, n - 1, ROW_BLOCK):
-                i1 = min(i0 + ROW_BLOCK, n)
-                G = Vn[i0:i1] @ Vn.T  # (i1-i0) × n
-                bi, bj = np.nonzero(G >= thr)
-                keep = bj > bi + i0  # upper triangle only (j > global i)
-                bi, bj = bi[keep], bj[keep]
-                if len(bi):
-                    outs.append((ids[bi + i0], ids[bj], G[bi, bj]))
-            if not outs:
-                return None
-            return pd.DataFrame({
-                "a": np.concatenate([o[0] for o in outs]),
-                "b": np.concatenate([o[1] for o in outs]),
-                "cell": pdf["cell"].iloc[0],
-                "cos_sim": np.concatenate([o[2] for o in outs]),
-            })[["a", "b", "cell", "cos_sim"]]
-
-        carry = None
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            last = pdf["cell"].iloc[-1]
-            is_last = (pdf["cell"] == last).to_numpy()
-            carry = pdf[is_last]
-            body = pdf[~is_last]
-            if len(body):
-                for _, grp in body.groupby("cell", sort=False):
-                    out = flush(grp)
-                    if out is not None:
-                        yield out
-        if carry is not None and len(carry):
-            out = flush(carry)
-            if out is not None:
-                yield out
-
-    return (
-        assigned.repartition("cell")
-        .sortWithinPartitions("cell", "_id")
-        .mapInPandas(cell_pair_kernel, schema=out_schema)
+    return _sorted_group_pairs(
+        assigned, ["cell"], ["_id"], cell_pairs,
+        extras=f"cell {cell_t}, cos_sim double", forest=forest,
+        matrix=("_v", "float64"),
     )
 
 
@@ -1544,10 +1472,14 @@ def semantic_dedup(
     threshold: float = 0.9,
     keep_by: str | None = None,
 ) -> DataFrame:
-    """Full SemDeDup: semantic pair candidates → connected components →
+    """Full SemDeDup: semantic duplicate edges → connected components →
     keep one representative per duplicate set (smallest id, or best by
-    ``keep_by``). Returns the deduplicated frame (all original columns)."""
-    pairs = semantic_dup_pairs(df, id_col, vec_col, centroids, threshold)
+    ``keep_by``). Returns the deduplicated frame (all original columns).
+    The cells hand ``connected_components`` star-forest edges (at most
+    cell−1 per cell), not every cos ≥ threshold pair: same components."""
+    edges = _semantic_cell_edges(
+        df, id_col, vec_col, centroids, threshold, forest=True
+    )
     return dedup_keep_representative(
-        df, id_col, pairs.select("a", "b"), keep_by=keep_by
+        df, id_col, edges.select("a", "b"), keep_by=keep_by
     )

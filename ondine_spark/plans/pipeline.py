@@ -390,24 +390,28 @@ class Pipeline:
         the auto-retry pass, whose failed rows are already IN the cache
         (written by the main pass); with resume on, the retry plan would
         replay those failed responses instead of re-invoking."""
-        spec = self.spec
-        responses = self.response_frame(df, resume=resume)
-        if spec.prompt.custom_parser is not None:
-            parsed = spec.prompt.custom_parser(
-                responses, spec.dataset.output_columns
-            )
-        else:
-            parsed = apply_parser(
-                responses,
-                spec.dataset.output_columns,
-                spec.prompt.response_format.value
-                if isinstance(spec.prompt.response_format, ResponseFormat)
-                else spec.prompt.response_format,
-                spec.prompt.regex_patterns,
-                output_schema=spec.prompt.output_schema,
-            )
+        parsed = self.parse_responses(self.response_frame(df, resume=resume))
         parsed = self._apply_stages(parsed, "after_parse")
         return self._verify(parsed)
+
+    def parse_responses(self, responses: DataFrame) -> DataFrame:
+        """Parse a response frame into the output columns: the custom
+        parser if one is set, else the response format's parser. Shared by
+        :meth:`result_frame` and the chunked runner's final assembly."""
+        spec = self.spec
+        if spec.prompt.custom_parser is not None:
+            return spec.prompt.custom_parser(
+                responses, spec.dataset.output_columns
+            )
+        return apply_parser(
+            responses,
+            spec.dataset.output_columns,
+            spec.prompt.response_format.value
+            if isinstance(spec.prompt.response_format, ResponseFormat)
+            else spec.prompt.response_format,
+            spec.prompt.regex_patterns,
+            output_schema=spec.prompt.output_schema,
+        )
 
     def _apply_stages(self, df: DataFrame, position: str) -> DataFrame:
         """U1: user stages (DataFrame -> DataFrame) at named positions

@@ -447,21 +447,13 @@ def iter_chunks(
 
 def chunked_result_frame(pipeline: Pipeline, checkpoint_dir: str, session_id: str) -> DataFrame:
     """Assemble the final parsed result from the durable cache (after
-    execute_chunked): input ⋈ cached responses → parser → output columns."""
-    from ondine_spark.functions.parsing import apply_parser
-
-    spec = pipeline.spec
+    execute_chunked): input ⋈ cached responses → the pipeline's parser
+    (:meth:`Pipeline.parse_responses`) → output columns."""
     df = pipeline.input_frame()
     cached = read_cache(pipeline.spark, checkpoint_dir, session_id)
     if cached is None:
         raise ValueError("no cached responses for session")
-    joined = df.join(cached, on=ROW_ID, how="left")
-    parsed = apply_parser(
-        joined,
-        spec.dataset.output_columns,
-        spec.prompt.response_format.value,
-        spec.prompt.regex_patterns,
-    )
+    parsed = pipeline.parse_responses(df.join(cached, on=ROW_ID, how="left"))
     return parsed.drop(*[c for c in RESPONSE_META if c != "cost"])
 
 

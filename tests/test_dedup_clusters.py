@@ -177,21 +177,41 @@ def test_seed_centroids_deterministic_hash_order(spark):
 
 
 def test_semantic_dup_pairs_and_dedup(spark):
-    from ondine_spark.operators.dedup import semantic_dedup, semantic_dup_pairs
+    from ondine_spark.operators.dedup import (
+        _semantic_cell_edges,
+        semantic_dedup,
+        semantic_dup_pairs,
+    )
 
     # two tight semantic groups around orthogonal directions + one loner;
     # centroids = the group axes, so assignment is unambiguous
     g1 = [_unit(1.0, 0.01 * i, 0.0) for i in range(3)]     # ids 0,1,2
     g2 = [_unit(0.0, 1.0, 0.01 * i) for i in range(2)]     # ids 3,4
     loner = [_unit(1.0, 1.0, 1.0)]                          # id 5
-    vecs = g1 + g2 + loner
+    k = 40
+    same = [_unit(0.0, 0.0, 1.0)] * k                       # ids 6..45
+    vecs = g1 + g2 + loner + same
     df = spark.createDataFrame(
         list(enumerate(vecs)), "vec_id long, embedding array<double>"
     )
-    cents = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]]
+    cents = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0]]
     pairs = semantic_dup_pairs(df, "vec_id", "embedding", cents, threshold=0.99)
     got = {(r["a"], r["b"]) for r in pairs.collect()}
-    assert got == {(0, 1), (0, 2), (1, 2), (3, 4)}
+    cell = set(range(6, 6 + k))
+    assert got == {(0, 1), (0, 2), (1, 2), (3, 4)} | {
+        (a, b) for a in cell for b in cell if a < b
+    }
+    # semantic_dedup's input to connected_components: star edges, at most
+    # k−1 for the k-vector cell, all rooted at its minimum id
+    edges = [
+        (r["a"], r["b"])
+        for r in _semantic_cell_edges(
+            df, "vec_id", "embedding", cents, 0.99, forest=True
+        ).collect()
+        if r["b"] in cell
+    ]
+    assert 1 <= len(edges) <= k - 1
+    assert {a for a, _ in edges} == {6}
     # cross-group pairs can never appear even at threshold 0 (different cells)
     all_pairs = semantic_dup_pairs(df, "vec_id", "embedding", cents, threshold=-1.0)
     assert all(
@@ -199,7 +219,7 @@ def test_semantic_dup_pairs_and_dedup(spark):
         for r in all_pairs.collect()
     )
     kept = semantic_dedup(df, "vec_id", "embedding", cents, threshold=0.99)
-    assert sorted(r["vec_id"] for r in kept.collect()) == [0, 3, 5]
+    assert sorted(r["vec_id"] for r in kept.collect()) == [0, 3, 5, 6]
 
 
 def test_keep_representative_precomputed_components(spark):

@@ -12,8 +12,9 @@ real cluster, where partitioning is decided by file splits and AQE.
 
 Method: run each operator over the same input at 1, 3, and 17 input
 partitions (1 exercises the single-partition fast path, 17 is prime and
-co-prime with the 8 shuffle partitions, forcing bucket groups to span
-Arrow batches) and require set-identical output.
+co-prime with the 8 shuffle partitions) and require set-identical
+output. Groups spanning Arrow batches need more rows than a batch holds,
+so ``test_groups_spanning_arrow_batches`` shrinks the batch to 2 rows.
 """
 
 from __future__ import annotations
@@ -26,6 +27,9 @@ from ondine_spark.operators.dedup import (
     embedding_neardup_pairs,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
+    seed_centroids,
+    semantic_dedup,
+    semantic_dup_pairs,
     simhash_pairs,
     winnow_overlap_pairs,
 )
@@ -123,10 +127,14 @@ def test_simhash_pairs_invariant(docs):
     )
 
 
-def test_embedding_neardup_invariant(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+def _embeddings(spark, sf_dir):
+    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
     )
+
+
+def test_embedding_neardup_invariant(spark, sf_dir):
+    emb = _embeddings(spark, sf_dir)
     dup = emb.filter(F.col("vec_id") % 7 == 0).withColumn(
         "vec_id", F.col("vec_id") + 10_000
     )
@@ -139,6 +147,82 @@ def test_embedding_neardup_invariant(spark, sf_dir):
         ["a", "b", "cos_sim"],
         round_floats={"cos_sim"},
     )
+
+
+def _semantic(spark, sf_dir, run):
+    emb = _embeddings(spark, sf_dir).filter(F.col("vec_id") < 200)
+    return run(emb, seed_centroids(emb, "vec_id", "embedding", k=4))
+
+
+# every kernel on the sorted-group pair driver, run at Arrow batches of 2
+# rows so nearly every group spans a batch boundary and takes the carry
+# path; (run, columns, float columns to round)
+BATCH_CASES = {
+    "jaccard_counting": (
+        lambda spark, sf_dir, d: ngram_jaccard_pairs(
+            d, "doc_id", "text", n=3, threshold=0.2
+        ),
+        ["a", "b", "jaccard"], {"jaccard"},
+    ),
+    "minhash_pairs": (
+        lambda spark, sf_dir, d: minhash_lsh_pairs(
+            d, "doc_id", "text", num_hashes=8, bands=4, threshold=0.25
+        ),
+        ["a", "b", "est_jaccard"], {"est_jaccard"},
+    ),
+    "minhash_connectivity_only": (
+        lambda spark, sf_dir, d: minhash_lsh_pairs(
+            d, "doc_id", "text", num_hashes=8, bands=4, threshold=0.25,
+            connectivity_only=True,
+        ),
+        ["a", "b"], None,
+    ),
+    "minhash_max_bucket_size": (
+        lambda spark, sf_dir, d: minhash_lsh_pairs(
+            d, "doc_id", "text", num_hashes=8, bands=4, threshold=0.25,
+            max_bucket_size=50,
+        ),
+        ["a", "b", "est_jaccard"], {"est_jaccard"},
+    ),
+    "winnow": (
+        lambda spark, sf_dir, d: winnow_overlap_pairs(
+            d, "doc_id", "text", k=8, w=4, min_shared=5, max_df=40
+        ),
+        ["a", "b", "shared"], None,
+    ),
+    "semantic_dup_pairs": (
+        lambda spark, sf_dir, d: _semantic(
+            spark, sf_dir,
+            lambda e, c: semantic_dup_pairs(e, "vec_id", "embedding", c, 0.35),
+        ),
+        ["a", "b", "cell", "cos_sim"], {"cos_sim"},
+    ),
+    "semantic_dedup": (
+        lambda spark, sf_dir, d: _semantic(
+            spark, sf_dir,
+            lambda e, c: semantic_dedup(e, "vec_id", "embedding", c, 0.35),
+        ),
+        ["vec_id"], None,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(BATCH_CASES))
+def test_groups_spanning_arrow_batches(spark, sf_dir, docs, case):
+    """Groups that span Arrow batches give the same rows as at the default
+    batch size: the driver's carry-over is exact."""
+    run, cols, floats = BATCH_CASES[case]
+    small = docs.filter(F.col("doc_id") % 10_000 < 60)
+    want = _rows(run(spark, sf_dir, small), cols, floats)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        got = _rows(run(spark, sf_dir, small), cols, floats)
+    finally:
+        spark.conf.set(key, old)
+    assert got == want
+    assert want, "empty result — the check saw no rows"
 
 
 def test_connected_components_distributed_invariant(spark):

@@ -11,8 +11,10 @@ import os
 from decimal import Decimal
 
 import pytest
+from pyspark.sql import functions as F
 
 from ondine_spark import PipelineBuilder, mock_client_factory
+from ondine_spark.plans.pipeline import RESPONSE_META
 from ondine_spark.streaming.runner import (
     BudgetExceededError,
     chunked_result_frame,
@@ -76,6 +78,40 @@ def test_crash_resume_zero_reinvocations(spark, tmp_path):
     assert rows["k0001"] == "negative"
     assert rows["k0002"] == "neutral"
     assert None not in rows.values()  # 0 rows lost
+
+
+def _upper_parser(responses, out_cols):
+    return responses.withColumn(out_cols[0], F.upper("response_text"))
+
+
+@pytest.mark.parametrize("parse", ["structured", "custom_parser"])
+def test_chunked_result_frame_uses_pipeline_parser(spark, tmp_path, parse):
+    """The chunked assembly parses the cached responses exactly as
+    ``result_frame()`` does: schema-typed structured output and a custom
+    parser both reach the chunked path."""
+    b = (
+        PipelineBuilder(spark)
+        .from_dataframe(spark.createDataFrame(_rows(20)), ["review"], id_column="id")
+        .with_prompt("Classify: {review}", ["label", "score"])
+        .with_custom_llm_client(
+            mock_client_factory(json_fields=("label", "score"))
+        )
+        .with_checkpoint_dir(str(tmp_path / "ckpt"), "sess1")
+    )
+    if parse == "structured":
+        b.with_structured_output("label STRING, score DOUBLE")
+    else:
+        b.with_custom_parser(_upper_parser)
+    p = b.build()
+    execute_chunked(p, chunk_size=10)
+    chunked = chunked_result_frame(p, str(tmp_path / "ckpt"), "sess1")
+    direct = p.result_frame()  # replays the same cache: no new calls
+    direct = direct.drop(*[c for c in RESPONSE_META if c != "cost"])
+    assert chunked.columns == direct.columns
+    got = sorted(map(tuple, chunked.collect()))
+    assert got == sorted(map(tuple, direct.collect()))
+    label = chunked.columns.index("label")
+    assert len(got) == 20 and all(r[label] for r in got)
 
 
 def test_resume_full_cache_zero_calls(spark, tmp_path):
