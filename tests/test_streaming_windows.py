@@ -1,6 +1,7 @@
 """Event-time streaming: watermarked windows + stateful first-seen dedup."""
 
 import sys
+import time
 
 from pyspark import cloudpickle
 from pyspark.sql import functions as F
@@ -75,7 +76,7 @@ def test_streaming_first_seen_across_batches(spark, tmp_path):
         ("a", base, "x", 1.0), ("a", base, "x", 2.0), ("b", base, "x", 3.0),
     ])
 
-    def run_once():
+    def run_once(n_new):
         stream = spark.readStream.schema(
             "id STRING, ts TIMESTAMP, event_type STRING, value DOUBLE"
         ).json(src)
@@ -88,9 +89,23 @@ def test_streaming_first_seen_across_batches(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        # the TTL's processing-time timeout makes Spark schedule a no-data
+        # batch after every batch, so this availableNow query never stops
+        # by itself; a batch's progress is reported after its sink commit,
+        # so once the run's progress counts the n_new appended rows, all
+        # of them are in the output
+        try:
+            deadline = time.monotonic() + 120
+            while q.isActive and sum(
+                p["numInputRows"] for p in q.recentProgress
+            ) < n_new:
+                assert time.monotonic() < deadline, "stream did not drain"
+                time.sleep(0.2)
+            assert q.exception() is None
+        finally:
+            q.stop()
 
-    run_once()
+    run_once(3)
     first = {r["id"] for r in spark.read.parquet(out).collect()}
     assert first == {"a", "b"}
 
@@ -98,7 +113,7 @@ def test_streaming_first_seen_across_batches(spark, tmp_path):
     _write_events(spark, src, [
         ("a", base, "x", 9.0), ("c", base, "x", 4.0),
     ])
-    run_once()
+    run_once(2)
     rows = spark.read.parquet(out).collect()
     ids = sorted(r["id"] for r in rows)
     assert ids == ["a", "b", "c"]  # 'a' emitted exactly once, ever
