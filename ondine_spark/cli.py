@@ -256,7 +256,8 @@ def cmd_submit(args) -> int:
 
 
 def cmd_collect(args) -> int:
-    """Provider Batch back half: poll → download → parse/merge → write."""
+    """Provider Batch back half: poll → download → assemble → write the
+    public output (``public_frame``)."""
     from ondine_spark.llm.provider_batch import RunHandle, collect
 
     p = _pipeline(args.config)
@@ -269,13 +270,10 @@ def cmd_collect(args) -> int:
     out_cols = p.spec.dataset.output_columns
     n = result.count()
     if args.output:
-        from ondine_spark.plans.pipeline import RESPONSE_META, write_output
+        from ondine_spark.plans.pipeline import public_frame, write_output
         from ondine_spark.core.specs import OutputSpec
 
-        write_output(
-            result.drop(*[c for c in RESPONSE_META if c in result.columns]),
-            OutputSpec(path=args.output),
-        )
+        write_output(public_frame(result), OutputSpec(path=args.output))
     print(json.dumps({"run_id": handle.run_id, "rows": n,
                       "output": args.output}))
     return 0

@@ -21,8 +21,10 @@ Spark-first split:
   ``OpenAIBatchProvider`` / ``AnthropicBatchProvider`` speak the real
   HTTP APIs through an injectable transport (stdlib urllib by default,
   fake transports in tests — no network needed).
+- Both halves render prompts with the live plan's context + prompt step,
+  so a compiled request carries exactly the prompt live mode would send.
 - BACK half joins the downloaded responses back on ``custom_id`` = row_id
-  and reuses the same parse/merge plan as live mode.
+  and runs the live plan's assembly (``Pipeline.assemble``).
 - The RunRegistry carries the handoff across processes (submit and collect
   can be different drivers).
 """
@@ -40,6 +42,11 @@ from typing import Callable, Protocol
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ondine_spark.operators.batching import (
+    BATCH_ID,
+    aggregate_batches,
+    disaggregate_batches,
+)
 from ondine_spark.plans.pipeline import Pipeline
 from ondine_spark.sources.readers import ROW_ID
 
@@ -445,21 +452,14 @@ def compile_requests(
     upload is constant-memory AND respects provider per-job caps (OpenAI:
     50K requests/job). The prompts frame reuses the live plan up to (and
     including) mega-batch aggregation, so batch mode gets the same call
-    reduction as live mode."""
+    reduction as live mode, and runs live mode's pre-spend batch-size
+    check before anything is written."""
     spec = pipeline.spec
-    df = pipeline.input_frame()
-    from ondine_spark.functions.templates import prompt_column
-
-    df = df.withColumn(
-        "prompt",
-        prompt_column(spec.prompt.template, spec.prompt.use_jinja2,
-                      spec.prompt.few_shot_examples),
-    )
+    df = _prompt_rows(pipeline)
     if spec.prompt.batch_size > 1:
-        from ondine_spark.operators.batching import aggregate_batches
-
+        pipeline._check_batch_size(df)
         df = aggregate_batches(df, spec.prompt.batch_size)
-        id_col = F.concat(F.lit("batch-"), F.col("_batch_id").cast("string"))
+        id_col = F.concat(F.lit("batch-"), F.col(BATCH_ID).cast("string"))
     else:
         id_col = F.concat(F.lit("row-"), F.col(ROW_ID).cast("string"))
     msgs = []
@@ -504,6 +504,14 @@ def compile_requests(
     return n, parts
 
 
+def _prompt_rows(pipeline: Pipeline) -> DataFrame:
+    """Input rows with retrieval context and the live-mode ``prompt``.
+    Compile and collect build this same frame, so the batch ids collect
+    recomputes name the rows compile grouped."""
+    df = pipeline._with_context(pipeline.input_frame())
+    return df.withColumn("prompt", pipeline._prompt_col(df))
+
+
 def submit(
     pipeline: Pipeline,
     provider: BatchProvider,
@@ -542,8 +550,11 @@ def collect(
     registry=None,
 ) -> DataFrame:
     """BACK half: poll every job → download → join on custom_id →
-    disaggregate/parse → merged result frame (same columns as live-mode
-    result_frame)."""
+    disaggregate → :meth:`Pipeline.assemble`. Returns the same columns as
+    live-mode ``result_frame()``: ``RESPONSE_META`` kept (tokens and the
+    batch-discounted cost), ``_batch_id`` when batched;
+    :func:`~ondine_spark.plans.pipeline.public_frame` of it is the public
+    output contract."""
     spec = pipeline.spec
     pending = list(handle.provider_job_ids)
     done: list[str] = []
@@ -587,21 +598,10 @@ def collect(
          / 2000).cast("decimal(38,18)"),
     ).withColumn("latency_ms", F.lit(0.0))
 
-    df = pipeline.input_frame()
+    rows = _prompt_rows(pipeline)
+    df = rows.drop("prompt")
     if spec.prompt.batch_size > 1:
-        from ondine_spark.operators.batching import (
-            BATCH_ID,
-            aggregate_batches,
-            disaggregate_batches,
-        )
-        from ondine_spark.functions.templates import prompt_column
-
-        prompts = df.withColumn(
-            "prompt",
-            prompt_column(spec.prompt.template, spec.prompt.use_jinja2,
-                          spec.prompt.few_shot_examples),
-        )
-        batches = aggregate_batches(prompts, spec.prompt.batch_size)
+        batches = aggregate_batches(rows, spec.prompt.batch_size)
         # custom_id = "batch-<n>": strip the 6-char prefix (never split on
         # "-" — row ids are strings that may contain dashes)
         keyed = responses.withColumn(
@@ -616,17 +616,9 @@ def collect(
         ).drop("custom_id")
         joined = df.join(keyed, on=ROW_ID, how="left")
 
-    from ondine_spark.functions.parsing import apply_parser
-
-    parsed = apply_parser(
-        joined, spec.dataset.output_columns,
-        spec.prompt.response_format.value
-        if hasattr(spec.prompt.response_format, "value")
-        else spec.prompt.response_format,
-        spec.prompt.regex_patterns,
-    )
+    result = pipeline.assemble(joined)
     if registry is not None:
         from ondine_spark.orchestration.registry import RunState
 
         registry.transition(handle.run_id, RunState.SUCCEEDED)
-    return parsed
+    return result

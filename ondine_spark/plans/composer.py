@@ -16,7 +16,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 
-from ondine_spark.plans.pipeline import RESPONSE_META, Pipeline
+from ondine_spark.plans.pipeline import Pipeline, public_frame
 
 
 @dataclass
@@ -77,6 +77,5 @@ class PipelineComposer:
                     f"step {step.name!r} must output exactly [{step.name!r}], "
                     f"got {out_cols}"
                 )
-            produced = step.pipeline.result_frame(df)
-            df = produced.drop(*[c for c in RESPONSE_META if c in produced.columns])
+            df = public_frame(step.pipeline.result_frame(df))
         return df

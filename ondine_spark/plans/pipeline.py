@@ -6,8 +6,8 @@ declarative DataFrame chain and Catalyst owns physical planning — column
 pruning, filter pushdown into the scan, and whole-stage codegen around the
 two Python hops (LLM invoke; JSON parse). Stage order preserved:
 
-  load → preprocess? → resume-filter? → prompt → [aggregate → invoke →
-  disaggregate | invoke] → parse → merge → write?
+  load → preprocess? → context? → resume-filter? → prompt → [aggregate →
+  invoke → disaggregate | invoke] → parse → after_parse? → verify? → write?
 
 Unbatched runs never join: output columns are computed in place on the
 input frame. Batched runs join the disaggregated responses back on
@@ -33,7 +33,11 @@ from ondine_spark.functions.parsing import apply_parser
 from ondine_spark.functions.preprocessing import preprocess_udf
 from ondine_spark.functions.templates import prompt_column
 from ondine_spark.llm.invoke import invoke_llm
-from ondine_spark.operators.batching import aggregate_batches, disaggregate_batches
+from ondine_spark.operators.batching import (
+    BATCH_ID,
+    aggregate_batches,
+    disaggregate_batches,
+)
 from ondine_spark.operators.merge import merge_results, patch_retried_rows
 from ondine_spark.operators.quality import (
     QualityReport,
@@ -43,10 +47,8 @@ from ondine_spark.operators.quality import (
     run_stats,
     run_stats_and_quality,
 )
+from ondine_spark.sources.cache import RESPONSE_META
 from ondine_spark.sources.readers import ROW_ID, infer_format, load_dataset
-
-RESPONSE_META = ["response_text", "tokens_in", "tokens_out", "resp_model",
-                 "cost", "latency_ms", "error"]
 
 
 @dataclass
@@ -129,6 +131,8 @@ class Pipeline:
             raise ValueError("rows_only requires resume=False")
         if df is None:
             df = self.input_frame()
+        # context before the resume split: replayed rows carry it too
+        df = self._with_context(df)
         if resume and spec.processing.session_id and spec.processing.checkpoint_dir:
             from ondine_spark.sources.cache import resume_filter
 
@@ -139,12 +143,13 @@ class Pipeline:
         else:
             self._cached_responses = None
 
-        df, p = self._rendered_prompt(df)
+        p = self._prompt_col(df)
         self._ensure_accumulators()
-        has_after_prompt = any(
-            pos == "after_prompt" for pos, _ in spec.processing.stages
-        )
-        if spec.prompt.batch_size > 1 and not has_after_prompt:
+        # user after_prompt stages need the prompt column eagerly
+        eager = any(pos == "after_prompt" for pos, _ in spec.processing.stages)
+        if eager or spec.prompt.batch_size == 1:
+            df = self._apply_stages(df.withColumn("prompt", p), "after_prompt")
+        if spec.prompt.batch_size > 1:
             # The frame is consumed three times in this branch: the
             # global-index count pass, the batch-assembly pass, and the
             # row join below. Persist it ONCE here (the count pass
@@ -153,16 +158,15 @@ class Pipeline:
             # avoidable cost in the batched spine. Released in execute();
             # lazy consumers fall back to Spark's LRU eviction.
             #
-            # The persist happens BEFORE the prompt projection: the
-            # rendered prompt is consumed exactly once (batch assembly),
-            # so rendering it on top of the cache costs one projection
-            # that the count pass prunes away entirely, while keeping
-            # the prompt strings OUT of the cached blocks — measured
-            # ~0.25 s (~40%) of the cache-materialize cost at 100K rows.
-            # The cache pins partition layout and intra-partition order,
-            # so the global index computed above it is stable across the
-            # count and assembly passes. (With user after_prompt stages
-            # the prompt column must exist eagerly — fallback below.)
+            # Without after_prompt stages the persist happens BEFORE the
+            # prompt projection: the rendered prompt is consumed exactly
+            # once (batch assembly), so rendering it on top of the cache
+            # costs one projection that the count pass prunes away
+            # entirely, while keeping the prompt strings OUT of the cached
+            # blocks — measured ~0.25 s (~40%) of the cache-materialize
+            # cost at 100K rows. The cache pins partition layout and
+            # intra-partition order, so the global index computed above
+            # it is stable across the count and assembly passes.
             # Chunked callers (seq_col set) skip the persist: their input
             # is already a materialized, file-pruned parquet slice of the
             # chunk spill, so the re-scan the cache would save is a tiny
@@ -170,43 +174,20 @@ class Pipeline:
             # block manager and accumulates a _persisted handle per chunk
             # for the lifetime of the run (1000 chunks = 1000 pinned
             # frames, measured as part of the 0.52 s/chunk fixed cost).
-            if seq_col is None:
+            if seq_col is None or eager:
                 from pyspark import StorageLevel
 
-                base = df.persist(StorageLevel.MEMORY_AND_DISK)
-                self._persisted.append(base)
-            else:
-                base = df
+                df = df.persist(StorageLevel.MEMORY_AND_DISK)
+                self._persisted.append(df)
             batches = aggregate_batches(
-                base.withColumn("prompt", p),
+                df if eager else df.withColumn("prompt", p),
                 spec.prompt.batch_size, persist=False, seq_col=seq_col,
             )
-            invoked = self._invoke(batches)
-            responses = disaggregate_batches(invoked)
+            responses = disaggregate_batches(self._invoke(batches))
             if rows_only:
                 return responses
-            out = base.join(responses, on=ROW_ID, how="left")
-        elif spec.prompt.batch_size > 1:
-            from pyspark import StorageLevel
-
-            df = df.withColumn("prompt", p)
-            df = self._apply_stages(df, "after_prompt")
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
-            self._persisted.append(df)
-            batches = aggregate_batches(
-                df, spec.prompt.batch_size, persist=False, seq_col=seq_col,
-            )
-            invoked = self._invoke(batches)
-            responses = disaggregate_batches(invoked)
-            if rows_only:
-                return responses
-            keep = [
-                c for c in df.columns if c != "prompt" and c != seq_col
-            ]
-            out = df.select(*keep).join(responses, on=ROW_ID, how="left")
+            out = df.drop("prompt").join(responses, on=ROW_ID, how="left")
         else:
-            df = df.withColumn("prompt", p)
-            df = self._apply_stages(df, "after_prompt")
             input_cols = set(df.columns)
             if seq_col is None:
                 # The per-row invoke inherits the INPUT's partitioning —
@@ -236,19 +217,14 @@ class Pipeline:
             out = out.unionByName(self._cached_responses, allowMissingColumns=True)
         return out
 
-    def _rendered_prompt(self, df: DataFrame) -> tuple[DataFrame, Column]:
-        """Attach retrieval context and return ``(df, prompt Column)``.
+    def _with_context(self, df: DataFrame) -> DataFrame:
+        """Attach the retrieval context columns (``_kb_context``/
+        ``_kb_count``, ``_evidence_*``) to input rows.
 
         R3/R4: per-row retrieval BEFORE prompt formatting (reference stage
         order: ondine/api/pipeline.py:694-758) — both are one
-        inverted-index join over the whole frame, not per-row store calls.
-        F4: retrieved context is prepended to the prompt when non-empty.
-        The parsed prompt Column is cached per input-column set (plan
-        construction is pure py4j latency, paid per chunk in chunked
-        mode). Shared by response_frame and the chunked runner's
-        assemble-once spill."""
-        spec = self.spec
-        ctx = spec.context
+        inverted-index join over the whole frame, not per-row store calls."""
+        ctx = self.spec.context
         if ctx.kb_path and ctx.kb_query_columns:
             from ondine_spark.knowledge.retrieval import attach_context
             from ondine_spark.knowledge.store import KnowledgeStore
@@ -266,7 +242,13 @@ class Pipeline:
                 df, ctx.evidence_query_columns,
                 ctx.evidence_top_k, ctx.evidence_min_score,
             )
+        return df
 
+    def _prompt_col(self, df: DataFrame) -> Column:
+        """The prompt Column for ``df`` (context attached): F4, non-empty
+        retrieved context is prepended. The parsed template is cached per
+        input-column set (py4j latency, paid per chunk in chunked mode)."""
+        spec = self.spec
         pkey = tuple(df.columns)
         p = self._prompt_cols.get(pkey)
         if p is None:
@@ -283,7 +265,19 @@ class Pipeline:
                     (F.col(c).isNotNull()) & (F.col(c) != ""),
                     F.concat(F.lit("Context:\n"), F.col(c), F.lit("\n\n"), p),
                 ).otherwise(p)
-        return df, p
+        return p
+
+    def _check_batch_size(self, rows: DataFrame) -> None:
+        """§4 pre-spend context-window check of the mega-batch size on a
+        sample of ``rows`` rendered as the LLM sees it, context included.
+        Batched entry points call it before any LLM call or upload."""
+        from ondine_spark.llm.context_limits import validate_batch_size
+
+        if "prompt" not in rows.columns:
+            rows = rows.withColumn("prompt", self._prompt_col(rows))
+        validate_batch_size(
+            rows, self.spec.prompt.batch_size, self.spec.llm.model
+        )
 
     def _ensure_accumulators(self) -> None:
         """Create the call/cost/event accumulators once per Pipeline, not
@@ -350,8 +344,6 @@ class Pipeline:
         self._memo_pending.append((fresh, memo_path))
         from pyspark.sql import Window
 
-        from ondine_spark.operators.batching import BATCH_ID
-
         order_col = ROW_ID if ROW_ID in misses.columns else BATCH_ID
         first = F.row_number().over(
             Window.partitionBy(MEMO_KEY).orderBy(order_col)
@@ -384,20 +376,39 @@ class Pipeline:
     def result_frame(
         self, df: DataFrame | None = None, resume: bool = True
     ) -> DataFrame:
-        """Full plan: responses parsed into output columns, meta dropped.
+        """Full plan: :meth:`response_frame` → :meth:`assemble`. The frame
+        KEEPS ``RESPONSE_META`` (and ``_batch_id`` when batched) — run
+        stats, quality and the budget check read them; ``execute().data``
+        is this frame through :func:`public_frame`.
 
         ``resume=False`` bypasses the response-cache replay — required by
         the auto-retry pass, whose failed rows are already IN the cache
         (written by the main pass); with resume on, the retry plan would
         replay those failed responses instead of re-invoking."""
-        parsed = self.parse_responses(self.response_frame(df, resume=resume))
-        parsed = self._apply_stages(parsed, "after_parse")
-        return self._verify(parsed)
+        return self.assemble(self.response_frame(df, resume=resume))
+
+    def assemble(self, responses: DataFrame) -> DataFrame:
+        """The one result assembly (``result_frame``, ``chunked_result_frame``
+        over the durable cache, provider-batch ``collect``): rows with their
+        context and responses → parse → ``after_parse`` stages → verify.
+        Never invokes the LLM.
+
+        Output contract: every public output — ``execute().data``,
+        ``chunked_result_frame``, ``run_file_stream``'s rows,
+        ``PipelineComposer.execute``, ``cli collect`` — is
+        :func:`public_frame` of this frame, so one spec gives the same
+        columns, in order, and rows at every entry point: ``_row_id``, the
+        input columns, the context columns (``_kb_*``/``_evidence_*``), the
+        output columns, ``after_parse`` stage columns, then verification
+        columns (``_grounding_score``, ``_grounded``, ...). ``RESPONSE_META``
+        and ``_batch_id`` stay here for stats and are dropped there."""
+        parsed = self.parse_responses(responses)
+        return self._verify(self._apply_stages(parsed, "after_parse"))
 
     def parse_responses(self, responses: DataFrame) -> DataFrame:
         """Parse a response frame into the output columns: the custom
-        parser if one is set, else the response format's parser. Shared by
-        :meth:`result_frame` and the chunked runner's final assembly."""
+        parser if one is set, else the response format's parser. Called
+        only by :meth:`assemble`."""
         spec = self.spec
         if spec.prompt.custom_parser is not None:
             return spec.prompt.custom_parser(
@@ -524,23 +535,8 @@ class Pipeline:
         # validation still runs before any action that could call the LLM.
         result = self.result_frame()
         if spec.prompt.batch_size > 1:
-            # §4: context-window validation of the mega-batch size — a
-            # driver-side sample check before any LLM spend
-            from ondine_spark.functions.templates import prompt_column
-            from ondine_spark.llm.context_limits import validate_batch_size
-
-            base = self._persisted[-1] if self._persisted else self.input_frame()
-            sample = base.limit(200)
-            if "prompt" not in sample.columns:
-                sample = sample.withColumn(
-                    "prompt",
-                    prompt_column(
-                        spec.prompt.template, spec.prompt.use_jinja2,
-                        spec.prompt.few_shot_examples,
-                        available_columns=base.columns,
-                    ),
-                )
-            validate_batch_size(sample, spec.prompt.batch_size, spec.llm.model)
+            # the batched spine persisted its context-attached base
+            self._check_batch_size(self._persisted[-1])
         if spec.processing.session_id and spec.processing.checkpoint_dir:
             # localCheckpoint, not persist: with resume active the lineage
             # reads the cache parquet dir, and write_responses appends to that
@@ -591,7 +587,6 @@ class Pipeline:
             result = self._auto_retry(result, out_cols)
             stats, report, _ = run_stats_and_quality(result, out_cols)
         assert_some_output(report, stats)
-        result = result.drop(*[c for c in RESPONSE_META if c != "cost"] )
         # result is materialized (checkpointed or persisted + aggregated):
         # the prompt-frame cache pinned in response_frame is no longer
         # reachable from any pending action — release the blocks
@@ -604,7 +599,7 @@ class Pipeline:
             # post-run here; hard mid-run stop happens at micro-batch
             # boundaries in the streaming runner (SURVEY.md §4 hard-part 2).
             self.errors = [f"budget exceeded: {stats.total_cost}"]
-        final = result.drop("cost")
+        final = public_frame(result)
 
         if spec.output and spec.output.path:
             write_output(final.drop(ROW_ID), spec.output)
@@ -619,11 +614,10 @@ class Pipeline:
         """O9: re-run the plan for rows whose every output cell failed
         (≤ max_auto_retries rounds; reference: ondine/api/pipeline.py:1741-1879)."""
         proc = self.spec.processing
+        # retry from the input columns only: the plan re-derives the rest
+        inputs = self.input_frame().columns
         for _ in range(proc.max_auto_retries):
-            failed = failed_rows(result, out_cols)
-            failed_inputs = failed.select(
-                *[c for c in failed.columns if c not in out_cols and c not in RESPONSE_META]
-            )
+            failed_inputs = failed_rows(result, out_cols).select(*inputs)
             if not failed_inputs.take(1):
                 break
             # resume=False: the failed rows are already in the response
@@ -648,13 +642,9 @@ class Pipeline:
                 from ondine_spark.sources.cache import write_responses
 
                 write_responses(retried, proc.checkpoint_dir, proc.session_id)
-            # patch response meta too (cost/tokens/error), not just the
-            # output columns — otherwise the retry invocations' spend is
-            # invisible to total_cost and the max_budget check
-            patch_cols = out_cols + [
-                c for c in RESPONSE_META if c in retried.columns
-                and c in result.columns
-            ]
+            # patch every derived column: meta (the retry's spend must reach
+            # total_cost and max_budget), stage and verification columns
+            patch_cols = [c for c in retried.columns if c not in inputs]
             result = patch_retried_rows(
                 result, retried.select(ROW_ID, *patch_cols), patch_cols
             )
@@ -713,6 +703,16 @@ class Pipeline:
             "estimated_tokens_out": s.tokens_out * n // k,
             "confidence": "sample-based",
         }
+
+
+def public_frame(assembled: DataFrame) -> DataFrame:
+    """An assembled result (:meth:`Pipeline.assemble`) as every public
+    output returns it: ``RESPONSE_META`` and ``_batch_id`` dropped,
+    ``_row_id`` first — the output contract documented there."""
+    internal = {ROW_ID, BATCH_ID, *RESPONSE_META}
+    return assembled.select(
+        ROW_ID, *[f"`{c}`" for c in assembled.columns if c not in internal]
+    )
 
 
 def write_output(df: DataFrame, output) -> None:

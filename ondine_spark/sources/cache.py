@@ -55,8 +55,9 @@ def append_parquet_atomic(df: DataFrame, target_dir: str) -> None:
     finally:
         shutil.rmtree(staging, ignore_errors=True)
 
-CACHE_COLS = ["response_text", "tokens_in", "tokens_out", "resp_model",
-              "cost", "latency_ms", "error"]
+# per-row response columns: invoke output, cache schema, dropped by public_frame
+RESPONSE_META = ["response_text", "tokens_in", "tokens_out", "resp_model",
+                 "cost", "latency_ms", "error"]
 
 
 def _cache_path(checkpoint_dir: str) -> str:
@@ -143,7 +144,7 @@ def write_responses(
     session ids land in the same directory either path would produce;
     if that JVM helper ever disappears, the partitionBy fallback keeps
     correctness."""
-    cols = [ROW_ID] + [c for c in CACHE_COLS if c in result.columns]
+    cols = [ROW_ID] + [c for c in RESPONSE_META if c in result.columns]
     spark = result.sparkSession
     part_dir = _session_part_dir(spark, checkpoint_dir, session_id)
     if part_dir is not None:

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ondine_spark.operators.batching import with_global_index
-from ondine_spark.plans.pipeline import Pipeline, RESPONSE_META
+from ondine_spark.plans.pipeline import Pipeline, public_frame
 from ondine_spark.sources.cache import read_cache, write_responses
 from ondine_spark.sources.readers import ROW_ID
 
@@ -169,12 +169,16 @@ def iter_chunks(
     )
     mega = spec.prompt.batch_size > 1 and not has_after_prompt
     if mega:
-        work, prompt_col = pipeline._rendered_prompt(todo)
+        work = pipeline._with_context(todo)
+        prompt_col = pipeline._prompt_col(work)
         pipeline._ensure_accumulators()
     else:
         work = todo
 
     seq = with_global_index(work, "_seq")
+    if mega:
+        # pre-spend: the sample reads the index pass's cached rows
+        pipeline._check_batch_size(seq.withColumn("prompt", prompt_col))
     # total rows fall out of the index's offset pass — no count job
     n_rows = int(getattr(seq, "_ondine_total_rows", 0))
     n_chunks = -(-n_rows // chunk_size) if n_rows else 0
@@ -446,15 +450,18 @@ def iter_chunks(
 
 
 def chunked_result_frame(pipeline: Pipeline, checkpoint_dir: str, session_id: str) -> DataFrame:
-    """Assemble the final parsed result from the durable cache (after
-    execute_chunked): input ⋈ cached responses → the pipeline's parser
-    (:meth:`Pipeline.parse_responses`) → output columns."""
-    df = pipeline.input_frame()
+    """The final result of an ``execute_chunked`` run, from the durable
+    cache alone: input rows with their retrieval context re-attached ⋈
+    cached responses → :meth:`Pipeline.assemble` (parse, ``after_parse``
+    stages, verification) → :func:`public_frame`. Same columns and rows
+    as ``execute().data``; never calls the LLM."""
     cached = read_cache(pipeline.spark, checkpoint_dir, session_id)
     if cached is None:
         raise ValueError("no cached responses for session")
-    parsed = pipeline.parse_responses(df.join(cached, on=ROW_ID, how="left"))
-    return parsed.drop(*[c for c in RESPONSE_META if c != "cost"])
+    df = pipeline._with_context(pipeline.input_frame())
+    return public_frame(
+        pipeline.assemble(df.join(cached, on=ROW_ID, how="left"))
+    )
 
 
 def run_file_stream(
@@ -470,9 +477,10 @@ def run_file_stream(
     timeout_s: float | None = None,
 ):
     """Structured Streaming: watch ``input_path`` for new files, run the
-    enrichment plan per micro-batch, append results to ``output_path``.
-    Backpressure via maxFilesPerTrigger (the reference's
-    max_pending_chunks analog); exactly-once via checkpointLocation."""
+    enrichment plan per micro-batch, append its public rows
+    (:func:`public_frame`) to ``output_path``. Backpressure via
+    maxFilesPerTrigger (the reference's max_pending_chunks analog);
+    exactly-once via checkpointLocation."""
     spark = pipeline.spark
     spec = pipeline.spec
     reader = spark.readStream.format(input_format).option(
@@ -490,8 +498,7 @@ def run_file_stream(
         from ondine_spark.sources.readers import with_row_id
 
         keyed = with_row_id(batch_df, spec.dataset.id_column)
-        result = pipeline.result_frame(keyed)
-        out = result.drop(*[c for c in RESPONSE_META])
+        out = public_frame(pipeline.result_frame(keyed))
         out.write.mode("append").format(output_format).save(output_path)
 
     query = (

@@ -23,6 +23,48 @@ def test_context_limit_validation(spark):
         validate_batch_size(prompts, batch_size=500, model="deepseek-chat")
 
 
+@pytest.mark.parametrize("entry", ["execute", "execute_chunked"])
+def test_batch_size_check_counts_retrieved_context(spark, tmp_path, entry):
+    """The pre-spend batch-size check measures the prompt the model sees:
+    ~300 words of prepended KB context per row overflow a 32K window at
+    batch 100 although the bare template (~5 tokens) would fit. Both
+    batched entry points raise before any LLM call."""
+    from ondine_spark import PipelineBuilder, mock_client_factory
+    from ondine_spark.knowledge import KnowledgeStore
+    from ondine_spark.streaming.runner import execute_chunked
+
+    passage = "Madrid is the capital of Spain " + "and a city " * 100
+    store = KnowledgeStore(spark, str(tmp_path / "kb"))
+    store.ingest(
+        spark.createDataFrame([(1, passage)], ["doc_id", "text"]),
+        "doc_id", "text", max_tokens=1000,
+    )
+    calls = tmp_path / "calls.txt"
+    p = (
+        PipelineBuilder(spark)
+        .from_dataframe(
+            spark.createDataFrame(
+                [(f"q{i}", "capital of Spain") for i in range(6)],
+                ["qid", "question"],
+            ),
+            ["question"], id_column="qid",
+        )
+        .with_prompt("Answer: {question}", ["answer"])
+        .with_custom_llm_client(mock_client_factory(count_file=str(calls)))
+        .with_llm("custom-x")  # not in CONTEXT_LIMITS: 32K × 0.8 usable
+        .with_knowledge_base(store.path, ["question"], top_k=1)
+        .with_batch_size(100)
+        .with_checkpoint_dir(str(tmp_path / "ckpt"), "s")
+        .build()
+    )
+    with pytest.raises(ValueError, match="exceeds custom-x"):
+        if entry == "execute":
+            p.execute()
+        else:
+            execute_chunked(p, chunk_size=50)
+    assert not calls.exists() or calls.read_text() == ""
+
+
 def test_integration_shared_body(spark, tmp_path):
     import csv
     import yaml

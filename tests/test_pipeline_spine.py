@@ -376,6 +376,56 @@ def test_auto_retry_recovers_failed_rows(spark, tmp_path):
     assert p._call_counter.value == 3
 
 
+@pytest.mark.parametrize("batch_size", [1, 3])
+def test_auto_retry_with_knowledge_base(spark, tmp_path, batch_size):
+    """The retry pass re-runs the plan from the failed rows' INPUT
+    columns: handing it the attached ``_kb_context``/``_kb_count`` (and
+    ``_batch_id``, grounding columns) made retrieval attach them twice —
+    AMBIGUOUS_REFERENCE from execute() as soon as a row failed. Patched
+    rows carry the retried output's grounding, not the failure's."""
+    from ondine_spark.knowledge import KnowledgeStore
+
+    store = KnowledgeStore(spark, str(tmp_path / "kb"))
+    store.ingest(
+        spark.createDataFrame(
+            [(1, "The flaky build got negative reviews and is terrible.")],
+            ["doc_id", "text"],
+        ),
+        "doc_id", "text", max_tokens=64,
+    )
+    rows = [
+        {"review_id": "r0", "review": "This product is great"},
+        {"review_id": "r1", "review": "flaky build"},
+        {"review_id": "r2", "review": "flaky but excellent build"},
+    ]
+    markers = tmp_path / "markers"
+    markers.mkdir()
+    p = (
+        PipelineBuilder(spark)
+        .from_dataframe(spark.createDataFrame(rows), ["review"], id_column="review_id")
+        .with_prompt("Classify: {review}", ["sentiment"])
+        .with_custom_llm_client(_flaky_factory(markers))
+        .with_knowledge_base(store.path, ["review"], top_k=1, min_score=0.1)
+        .with_grounding(threshold=0.1)
+        .with_batch_size(batch_size)
+        .with_max_retries(0)
+        .with_error_policy("skip")
+        .with_auto_retry(2)
+        .build()
+    )
+    res = p.execute()
+    got = {r["review_id"]: r for r in res.data.collect()}
+    # r1's label comes from the retrieved context ("... terrible")
+    assert {k: r["sentiment"] for k, r in got.items()} == {
+        "r0": "positive", "r1": "negative", "r2": "positive",
+    }
+    assert res.quality.valid_rows == 3
+    assert got["r1"]["_kb_count"] == got["r2"]["_kb_count"] == 1
+    # "negative" is in the context: the retried output is grounded
+    assert got["r1"]["_grounding_score"] > 0 and got["r1"]["_grounded"]
+    assert "_batch_id" not in res.data.columns
+
+
 def test_auto_retry_no_failures_single_pass(spark, tmp_path):
     """With zero failed rows the retry machinery must not run at all —
     result_frame is built exactly once (the retry pass would construct a

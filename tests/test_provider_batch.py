@@ -383,3 +383,117 @@ def test_collect_fails_cleanly_on_bad_job(spark, tmp_path):
     failing = FailingProvider(str(tmp_path / "spool"))
     with pytest.raises(RuntimeError, match="failed"):
         collect(p, failing, handle)
+
+
+def _upper_parser(responses, out_cols):
+    from pyspark.sql import functions as F
+
+    return responses.withColumn(out_cols[0], F.upper("response_text"))
+
+
+def _collect_built(spark, tmp_path, configure):
+    b = (
+        PipelineBuilder(spark)
+        .from_dataframe(spark.createDataFrame(_rows(9)), ["review"],
+                        id_column="id")
+        .with_custom_llm_client(mock_client_factory())
+    )
+    p = configure(b).build()
+    provider = LocalMockBatchProvider(str(tmp_path / "spool"))
+    handle = submit(p, provider, str(tmp_path / "work"))
+    return collect(p, provider, handle)
+
+
+def test_collect_structured_output_is_typed(spark, tmp_path, monkeypatch):
+    """collect parses through the pipeline's parser: schema-typed
+    structured output (it used to raise 'schema parser requires
+    output_schema')."""
+    import functools
+
+    from ondine_spark.llm import client
+
+    # the mock provider answers with a default DeterministicMockClient;
+    # make it emit the JSON object the schema describes
+    monkeypatch.setattr(client, "DeterministicMockClient", functools.partial(
+        client.DeterministicMockClient, json_fields=("label", "score")))
+    result = _collect_built(spark, tmp_path, lambda b: b.with_prompt(
+        "Classify: {review}", ["label", "score"],
+    ).with_structured_output("label STRING, score DOUBLE"))
+    assert dict(result.dtypes)["score"] == "double"
+    rows = {r["id"]: r for r in result.collect()}
+    assert len(rows) == 9
+    assert rows["k000"]["label"] == "positive"
+    assert rows["k001"]["label"] == "negative"
+
+
+def test_collect_applies_custom_parser(spark, tmp_path):
+    result = _collect_built(spark, tmp_path, lambda b: b.with_prompt(
+        "Classify: {review}", ["sentiment"],
+    ).with_custom_parser(_upper_parser))
+    rows = {r["id"]: r for r in result.collect()}
+    assert rows["k000"]["sentiment"] == "POSITIVE"
+    assert rows["k002"]["sentiment"] == "NEUTRAL"
+
+
+def _recording_factory(path):
+    def factory():
+        import json
+
+        from ondine_spark.llm.client import DeterministicMockClient
+
+        class Recording(DeterministicMockClient):
+            def complete(self, prompt, system=None):
+                with open(path, "a") as f:
+                    f.write(json.dumps(prompt) + "\n")
+                return super().complete(prompt, system)
+
+        return Recording()
+
+    return factory
+
+
+def test_compiled_requests_carry_retrieved_context(spark, tmp_path):
+    """With a knowledge base, every compiled request's user content is
+    exactly the prompt live mode sends for that row, context block
+    included."""
+    import json
+    import os
+
+    from ondine_spark.knowledge import KnowledgeStore
+
+    store = KnowledgeStore(spark, str(tmp_path / "kb"))
+    store.ingest(
+        spark.createDataFrame(
+            [(1, "A great row is rare."), (2, "Terrible rows are common.")],
+            ["doc_id", "text"],
+        ),
+        "doc_id", "text", max_tokens=64,
+    )
+    live_log = str(tmp_path / "live.jsonl")
+
+    def build(factory):
+        return (
+            PipelineBuilder(spark)
+            .from_dataframe(spark.createDataFrame(_rows(9)), ["review"],
+                            id_column="id")
+            .with_prompt("Classify: {review}", ["sentiment"])
+            .with_custom_llm_client(factory)
+            .with_knowledge_base(store.path, ["review"], top_k=1,
+                                 min_score=0.1)
+            .build()
+        )
+
+    build(_recording_factory(live_log)).execute().data.collect()
+    live = sorted(json.loads(line) for line in open(live_log))
+
+    spool = str(tmp_path / "spool")
+    handle = submit(build(mock_client_factory()),
+                    LocalMockBatchProvider(spool), str(tmp_path / "work"))
+    compiled = sorted(
+        json.loads(line)["body"]["messages"][-1]["content"]
+        for job in handle.provider_job_ids
+        for line in open(os.path.join(spool, job, "input.jsonl"))
+    )
+    assert len(compiled) == 9
+    assert compiled == live
+    assert any(c.startswith("Context:\n") for c in compiled)

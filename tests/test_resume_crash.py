@@ -106,7 +106,7 @@ def test_chunked_result_frame_uses_pipeline_parser(spark, tmp_path, parse):
     execute_chunked(p, chunk_size=10)
     chunked = chunked_result_frame(p, str(tmp_path / "ckpt"), "sess1")
     direct = p.result_frame()  # replays the same cache: no new calls
-    direct = direct.drop(*[c for c in RESPONSE_META if c != "cost"])
+    direct = direct.drop(*RESPONSE_META)
     assert chunked.columns == direct.columns
     got = sorted(map(tuple, chunked.collect()))
     assert got == sorted(map(tuple, direct.collect()))
