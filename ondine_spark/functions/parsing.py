@@ -226,26 +226,48 @@ def apply_schema_parser(
     ``_parse_error`` flagging rows whose response didn't validate
     (from_json null / missing required fields). The reference re-validates
     with Pydantic per row in Python; the declarative schema gives the same
-    contract without leaving the JVM."""
+    contract without leaving the JVM.
+
+    Top-level numeric fields are read as text and coerced with
+    ``try_cast``, like Pydantic's lax mode: ``"4"``, ``4`` and ``"4.5e0"``
+    all validate, and a value that is present but not a number (``"abc"``)
+    is null with ``_parse_error`` set instead of silently lost."""
     st = normalize_schema(schema)
     missing = [c for c in output_cols if c not in st.fieldNames()]
     if missing:
         raise ValueError(f"output columns {missing} not in output_schema")
+    numeric = {
+        f.name: f.dataType for f in st.fields
+        if isinstance(f.dataType, T.NumericType)
+    }
+    lax = T.StructType([
+        T.StructField(f.name, T.StringType(), f.nullable)
+        if f.name in numeric else f
+        for f in st.fields
+    ])
     col = F.col(response_col)
     not_skipped = col.isNotNull() & (col != SKIPPED)
     # strip ```json fences and take the outermost {...}
     cleaned = F.regexp_replace(col, r"(?s)^\s*```(?:json)?\s*|\s*```\s*$", "")
     cleaned = F.regexp_extract(cleaned, r"(?s)(\{.*\})", 1)
-    parsed = F.from_json(cleaned, st)
-    out = df.withColumn("_parsed", F.when(not_skipped, parsed))
+    out = df.withColumn("_raw", F.when(not_skipped, F.from_json(cleaned, lax)))
+    out = out.withColumn("_parsed", F.when(F.col("_raw").isNotNull(), F.struct(*[
+        F.col(f"_raw.{c}").try_cast(numeric[c]).alias(c) if c in numeric
+        else F.col(f"_raw.{c}")
+        for c in st.fieldNames()
+    ])))
     for c in output_cols:
         out = out.withColumn(c, F.col(f"_parsed.{c}"))
-    any_field_set = None
+    any_field_set = F.lit(False)
     for c in st.fieldNames():
-        cond = F.col(f"_parsed.{c}").isNotNull()
-        any_field_set = cond if any_field_set is None else (any_field_set | cond)
+        any_field_set = any_field_set | F.col(f"_parsed.{c}").isNotNull()
+    uncoerced = F.lit(False)
+    for c in numeric:
+        uncoerced = uncoerced | (
+            F.col(f"_raw.{c}").isNotNull() & F.col(f"_parsed.{c}").isNull()
+        )
     out = out.withColumn(
         "_parse_error",
-        not_skipped & (F.col("_parsed").isNull() | ~any_field_set),
+        not_skipped & (F.col("_parsed").isNull() | ~any_field_set | uncoerced),
     )
-    return out.drop("_parsed")
+    return out.drop("_raw", "_parsed")

@@ -21,8 +21,9 @@ Spark-first split:
   ``OpenAIBatchProvider`` / ``AnthropicBatchProvider`` speak the real
   HTTP APIs through an injectable transport (stdlib urllib by default,
   fake transports in tests — no network needed).
-- Both halves render prompts with the live plan's context + prompt step,
-  so a compiled request carries exactly the prompt live mode would send.
+- Both halves build prompts with the live plan's context + request step
+  (``after_prompt`` stages included), so a compiled request carries
+  exactly the prompt live mode would send.
 - BACK half joins the downloaded responses back on ``custom_id`` = row_id
   and runs the live plan's assembly (``Pipeline.assemble``).
 - The RunRegistry carries the handoff across processes (submit and collect
@@ -450,12 +451,13 @@ def compile_requests(
     never holds the request set — only streams each bounded part to the
     provider. ``max_requests_per_file`` caps rows per part so any single
     upload is constant-memory AND respects provider per-job caps (OpenAI:
-    50K requests/job). The prompts frame reuses the live plan up to (and
-    including) mega-batch aggregation, so batch mode gets the same call
+    50K requests/job). The prompts frame is live mode's request step
+    (context, prompt, ``after_prompt`` stages) and mega-batch
+    aggregation, so batch mode sends the live prompts, gets the same call
     reduction as live mode, and runs live mode's pre-spend batch-size
     check before anything is written."""
     spec = pipeline.spec
-    df = _prompt_rows(pipeline)
+    df = pipeline._with_prompt(pipeline._with_context(pipeline.input_frame()))
     if spec.prompt.batch_size > 1:
         pipeline._check_batch_size(df)
         df = aggregate_batches(df, spec.prompt.batch_size)
@@ -502,14 +504,6 @@ def compile_requests(
         )
     n = sum(1 for p in parts for _ in open(p, "rb"))
     return n, parts
-
-
-def _prompt_rows(pipeline: Pipeline) -> DataFrame:
-    """Input rows with retrieval context and the live-mode ``prompt``.
-    Compile and collect build this same frame, so the batch ids collect
-    recomputes name the rows compile grouped."""
-    df = pipeline._with_context(pipeline.input_frame())
-    return df.withColumn("prompt", pipeline._prompt_col(df))
 
 
 def submit(
@@ -598,7 +592,11 @@ def collect(
          / 2000).cast("decimal(38,18)"),
     ).withColumn("latency_ms", F.lit(0.0))
 
-    rows = _prompt_rows(pipeline)
+    # the request step compile_requests ran: the batch ids recomputed
+    # here name the rows compile grouped
+    rows = pipeline._with_prompt(
+        pipeline._with_context(pipeline.input_frame())
+    )
     df = rows.drop("prompt")
     if spec.prompt.batch_size > 1:
         batches = aggregate_batches(rows, spec.prompt.batch_size)

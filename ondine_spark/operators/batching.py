@@ -115,8 +115,8 @@ def _mega_prompt_sql(items_json_sql: str, n_sql: str) -> str:
     (json_batch_strategy.py:80-99) — braces and wording kept identical so a
     deterministic mock client (and the oracle) can recognize it. Built as
     ONE parseable SQL expression instead of a 12-call ``F.concat`` chain:
-    plan construction is pure py4j latency, paid per run AND per chunk in
-    chunked mode, so the whole expression ships as a single string
+    plan construction is pure py4j latency, paid per plan build, so the
+    whole expression ships as a single string
     (byte-parity with the previous Column form is pinned by
     test_batching_sql_exprs)."""
     n = f"CAST({n_sql} AS STRING)"
@@ -140,7 +140,7 @@ def _mega_prompt_sql(items_json_sql: str, n_sql: str) -> str:
 
 def aggregate_batches(
     df: DataFrame, batch_size: int, prompt_col: str = "prompt",
-    persist: bool = True, seq_col: str | None = None,
+    persist: bool = True,
 ) -> DataFrame:
     """A1: rows → one row per batch with ``prompt`` = mega-prompt and
     ``_row_ids`` = array of member row ids (position-aligned with batch ids
@@ -155,84 +155,62 @@ def aggregate_batches(
     the saved count job is nearly free against the cached input.)
 
     Pass ``persist=False`` when the caller already cached ``df`` (the
-    pipeline does — the prompt frame also feeds the keep-columns join).
-
-    Pass ``seq_col`` when the caller ALREADY has a contiguous 0-based
-    index on the frame (the chunked runner does: every chunk inherits a
-    rebased slice of the run-level global index) — this skips
-    ``with_global_index``'s per-partition count job entirely, which at
-    1000 chunks is 1000 fewer driver-blocking jobs. The column must be
-    contiguous from 0 for exact ceil(N/batch_size) call counts."""
+    pipeline does — the prompt frame also feeds the keep-columns join)."""
     if batch_size <= 1:
         raise ValueError("batch_size must be > 1 for aggregation")
-    if seq_col is None:
-        seq = with_global_index(df, persist=persist)
-        cached = getattr(seq, "_ondine_cached", [])
-        seq_col = "_seq"
-    else:
-        seq = df
-        cached = []
-    # One parsed expression per projection: plan construction here is
-    # pure py4j latency paid per run and per chunk (the previous
-    # Column-chain form was ~430 round trips ≈ 0.2 s per plan build;
-    # byte-parity pinned by test_batching_sql_exprs).
-    items = (
-        seq.selectExpr(
-            f"CAST(`{seq_col}` / {batch_size} AS LONG) AS {BATCH_ID}",
-            f"`{seq_col}` AS _seq",
-            ROW_ID,
-            f"`{prompt_col}` AS _p",
-        )
-        .groupBy(BATCH_ID)
-        .agg(
-            F.expr(
-                f"array_sort(collect_list(struct(_seq, {ROW_ID}, _p)))"
-            ).alias("_items")
-        )
+    seq = with_global_index(df, persist=persist)
+    out = _assemble_batches(
+        seq, f"CAST(_seq / {batch_size} AS LONG)", prompt_col
     )
-    ids_json_sql = (
-        "to_json(transform(_items, (x, i) -> "
-        "struct(CAST(i + 1 AS INT) AS id, x._p AS input)))"
-    )
-    out = items.selectExpr(
-        BATCH_ID,
-        f"transform(_items, x -> x.{ROW_ID}) AS _row_ids",
-        _mega_prompt_sql(ids_json_sql, "size(_items)") + f" AS `{prompt_col}`",
-    )
-    out._ondine_cached = cached
+    out._ondine_cached = getattr(seq, "_ondine_cached", [])
     return out
 
 
 def aggregate_batches_per_chunk(
     df: DataFrame, batch_size: int, chunk_size: int,
-    prompt_col: str = "prompt", seq_col: str = "_seq",
-    chunk_col: str = "_chunk",
+    prompt_col: str = "prompt",
 ) -> DataFrame:
     """Chunk-aligned batch assembly for the chunked runner: assemble EVERY
-    chunk's mega-prompt batches in ONE job, so each per-chunk job is a
-    shuffle-free scan of its own pre-assembled batch rows (the per-chunk
-    groupBy exchange was the largest slice of the ~0.4 s/chunk fixed cost
-    at 1000 chunks, tools/chunk_overhead.py). Batch membership depends
-    only on the static global index, so nothing about it is per-chunk
-    work.
+    chunk's mega-prompt batches in ONE job over the run-level ``_seq`` and
+    ``_chunk`` columns, so each per-chunk job is a shuffle-free scan of
+    its own pre-assembled batch rows (the per-chunk groupBy exchange was
+    the largest slice of the ~0.4 s/chunk fixed cost at 1000 chunks,
+    tools/chunk_overhead.py). Batch membership depends only on the static
+    global index, so nothing about it is per-chunk work.
 
     ``BATCH_ID`` is globally unique and ``_seq``-ordered:
     ``chunk * ceil(chunk_size/batch_size) + (chunk-rebased _seq) //
     batch_size``. Membership — and therefore the mega-prompt BYTES,
     ``api_calls = ceil(chunk_rows/batch_size)`` per chunk, and memo keys
-    — is identical to running :func:`aggregate_batches` on each rebased
-    chunk slice (pinned by test_batching's chunked-assembly parity test).
-    Output: one row per batch with ``chunk_col``, ``BATCH_ID``,
-    ``_row_ids`` and the rendered mega-prompt.
+    — is identical to running :func:`aggregate_batches` on each chunk
+    slice (pinned by test_batching's chunked-assembly parity test).
+    Output: one row per batch with ``_chunk``, ``BATCH_ID``, ``_row_ids``
+    and the rendered mega-prompt.
     """
     if batch_size <= 1:
         raise ValueError("batch_size must be > 1 for aggregation")
     mbpc = -(-chunk_size // batch_size)  # max batches per chunk
+    return _assemble_batches(
+        df,
+        f"_chunk * {mbpc}L + CAST((_seq - _chunk * {chunk_size}L)"
+        f" / {batch_size} AS LONG)",
+        prompt_col, lead=f"{BATCH_ID} DIV {mbpc} AS _chunk",
+    )
+
+
+def _assemble_batches(
+    seq: DataFrame, batch_id_sql: str, prompt_col: str, lead: str = ""
+) -> DataFrame:
+    """The one batch-assembly body: group ``_seq``-indexed rows by
+    ``batch_id_sql`` and render each group's mega-prompt. One parsed
+    expression per projection: plan construction here is pure py4j
+    latency paid per run (the previous Column-chain form was ~430 round
+    trips ≈ 0.2 s per plan build; byte-parity pinned by
+    test_batching_sql_exprs)."""
     items = (
-        df.selectExpr(
-            f"`{chunk_col}` * {mbpc}L + CAST((`{seq_col}` - `{chunk_col}`"
-            f" * {chunk_size}L) / {batch_size} AS LONG) AS {BATCH_ID}",
-            f"`{seq_col}` AS _seq",
+        seq.selectExpr(
+            f"{batch_id_sql} AS {BATCH_ID}",
+            "_seq",
             ROW_ID,
             f"`{prompt_col}` AS _p",
         )
@@ -248,7 +226,7 @@ def aggregate_batches_per_chunk(
         "struct(CAST(i + 1 AS INT) AS id, x._p AS input)))"
     )
     return items.selectExpr(
-        f"{BATCH_ID} DIV {mbpc} AS `{chunk_col}`",
+        *([lead] if lead else []),
         BATCH_ID,
         f"transform(_items, x -> x.{ROW_ID}) AS _row_ids",
         _mega_prompt_sql(ids_json_sql, "size(_items)") + f" AS `{prompt_col}`",

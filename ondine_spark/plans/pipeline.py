@@ -6,8 +6,9 @@ declarative DataFrame chain and Catalyst owns physical planning — column
 pruning, filter pushdown into the scan, and whole-stage codegen around the
 two Python hops (LLM invoke; JSON parse). Stage order preserved:
 
-  load → preprocess? → context? → resume-filter? → prompt → [aggregate →
-  invoke → disaggregate | invoke] → parse → after_parse? → verify? → write?
+  load → preprocess? → context? → resume-filter? → prompt → after_prompt? →
+  [aggregate → invoke → disaggregate | invoke] → parse → after_parse? →
+  verify? → write?
 
 Unbatched runs never join: output columns are computed in place on the
 input frame. Batched runs join the disaggregated responses back on
@@ -82,8 +83,9 @@ class Pipeline:
         self._cost_acc = None
         self._persisted: list[DataFrame] = []
         # prompt Column cache keyed by the input frame's column tuple: the
-        # expression tree is immutable and identical for every chunk of a
-        # chunked run — rebuilding it was ~100 py4j round-trips per chunk
+        # expression tree is immutable, and rebuilding it is ~100 py4j
+        # round-trips per plan build (execute, the retry pass, the
+        # batch-size check and result assembly render the same shape)
         self._prompt_cols: dict[tuple, object] = {}
         # (invoked frame still carrying _memo_key, memo path) pairs awaiting
         # write-back — flushed by execute()/the chunked runner AFTER the
@@ -101,34 +103,10 @@ class Pipeline:
         return self._apply_stages(df, "after_load")
 
     def response_frame(
-        self, df: DataFrame | None = None, resume: bool = True,
-        seq_col: str | None = None, rows_only: bool = False,
+        self, df: DataFrame | None = None, resume: bool = True
     ) -> DataFrame:
-        """Input rows → rows + response columns (pre-parse).
-
-        ``seq_col`` names a contiguous 0-based index column the caller
-        already computed (the chunked runner rebases the run-level global
-        index per chunk) — the batched path then skips its per-chunk
-        count job. Only valid with ``resume=False``: the resume anti-join
-        would puncture the contiguity the batch grouping relies on for
-        exact ceil(N/batch_size) call counts.
-
-        ``rows_only`` returns the per-row response frame WITHOUT
-        re-attaching the input columns. The batch disaggregator is 1:N
-        row-preserving (one output row per ``_row_ids`` member, error
-        rows included), so the frame already carries ``_row_id`` + every
-        response-cache column — the ``base ⋈ responses`` join exists only
-        to put input columns next to responses for in-memory consumers.
-        The chunked runner's durable write drops those columns anyway, so
-        it passes rows_only=True and sheds one full shuffle per chunk
-        (measured: the join was most of the per-chunk fixed cost at 1000
-        chunks, tools/chunk_overhead.py). Only valid with resume=False:
-        the resumed-rows union replays input columns from the cache."""
+        """Input rows → rows + response columns (pre-parse)."""
         spec = self.spec
-        if seq_col is not None and resume:
-            raise ValueError("seq_col requires resume=False")
-        if rows_only and resume:
-            raise ValueError("rows_only requires resume=False")
         if df is None:
             df = self.input_frame()
         # context before the resume split: replayed rows carry it too
@@ -143,12 +121,7 @@ class Pipeline:
         else:
             self._cached_responses = None
 
-        p = self._prompt_col(df)
         self._ensure_accumulators()
-        # user after_prompt stages need the prompt column eagerly
-        eager = any(pos == "after_prompt" for pos, _ in spec.processing.stages)
-        if eager or spec.prompt.batch_size == 1:
-            df = self._apply_stages(df.withColumn("prompt", p), "after_prompt")
         if spec.prompt.batch_size > 1:
             # The frame is consumed three times in this branch: the
             # global-index count pass, the batch-assembly pass, and the
@@ -164,55 +137,37 @@ class Pipeline:
             # costs one projection that the count pass prunes away
             # entirely, while keeping the prompt strings OUT of the cached
             # blocks — measured ~0.25 s (~40%) of the cache-materialize
-            # cost at 100K rows. The cache pins partition layout and
-            # intra-partition order, so the global index computed above
-            # it is stable across the count and assembly passes.
-            # Chunked callers (seq_col set) skip the persist: their input
-            # is already a materialized, file-pruned parquet slice of the
-            # chunk spill, so the re-scan the cache would save is a tiny
-            # pruned read — while a persist PER CHUNK both churns the
-            # block manager and accumulates a _persisted handle per chunk
-            # for the lifetime of the run (1000 chunks = 1000 pinned
-            # frames, measured as part of the 0.52 s/chunk fixed cost).
-            if seq_col is None or eager:
-                from pyspark import StorageLevel
+            # cost at 100K rows. A stage may add columns the row join
+            # keeps, so with stages the request step runs below the cache.
+            # The cache pins partition layout and intra-partition order,
+            # so the global index computed above it is stable across the
+            # count and assembly passes.
+            from pyspark import StorageLevel
 
-                df = df.persist(StorageLevel.MEMORY_AND_DISK)
-                self._persisted.append(df)
+            staged = any(
+                pos == "after_prompt" for pos, _ in spec.processing.stages
+            )
+            if staged:
+                df = self._with_prompt(df)
+            df = df.persist(StorageLevel.MEMORY_AND_DISK)
+            self._persisted.append(df)
             batches = aggregate_batches(
-                df if eager else df.withColumn("prompt", p),
-                spec.prompt.batch_size, persist=False, seq_col=seq_col,
+                df if staged else self._with_prompt(df),
+                spec.prompt.batch_size, persist=False,
             )
             responses = disaggregate_batches(self._invoke(batches))
-            if rows_only:
-                return responses
             out = df.drop("prompt").join(responses, on=ROW_ID, how="left")
         else:
-            input_cols = set(df.columns)
-            if seq_col is None:
-                # The per-row invoke inherits the INPUT's partitioning —
-                # a single-file source (or a broadcast-join output) feeds
-                # the whole Python invocation stage to ONE worker while
-                # every other core idles (measured 6.3 s vs 1.4 s for
-                # 100K mock calls at local[32]). One cheap shuffle of the
-                # prompt rows buys full parallelism for the stage that
-                # dominates this path. Chunked callers (seq_col set) are
-                # exempt: their input is a pruned per-chunk scan and the
-                # per-chunk fixed cost budget excludes extra exchanges.
-                from ondine_spark.core.partitioning import spread_small
+            # The per-row invoke inherits the INPUT's partitioning — a
+            # single-file source (or a broadcast-join output) feeds the
+            # whole Python invocation stage to ONE worker while every
+            # other core idles (measured 6.3 s vs 1.4 s for 100K mock
+            # calls at local[32]). One cheap shuffle of the prompt rows
+            # buys full parallelism for the stage that dominates this path.
+            from ondine_spark.core.partitioning import spread_small
 
-                df = spread_small(df)
-            out = self._invoke(df).drop("prompt")
-            if rows_only:
-                # Same contract as the batched branches: _row_id + the
-                # invocation-produced columns only, no input columns.
-                keep = [ROW_ID] + [
-                    c for c in out.columns
-                    if c not in input_cols and c != ROW_ID
-                ]
-                out = out.select(*keep)
-        if seq_col is not None:
-            out = out.drop(seq_col)
+            out = self._invoke(spread_small(self._with_prompt(df)))
+            out = out.drop("prompt")
         if self._cached_responses is not None:
             out = out.unionByName(self._cached_responses, allowMissingColumns=True)
         return out
@@ -247,7 +202,7 @@ class Pipeline:
     def _prompt_col(self, df: DataFrame) -> Column:
         """The prompt Column for ``df`` (context attached): F4, non-empty
         retrieved context is prepended. The parsed template is cached per
-        input-column set (py4j latency, paid per chunk in chunked mode)."""
+        input-column set (py4j latency, paid per plan build)."""
         spec = self.spec
         pkey = tuple(df.columns)
         p = self._prompt_cols.get(pkey)
@@ -267,14 +222,24 @@ class Pipeline:
                 ).otherwise(p)
         return p
 
+    def _with_prompt(self, df: DataFrame) -> DataFrame:
+        """The request step: context-attached rows → ``prompt`` column →
+        ``after_prompt`` stages. The only place those stages run, so every
+        entry point (``execute()``, the chunked runner, provider batch)
+        sends the same prompts and carries the same stage columns."""
+        return self._apply_stages(
+            df.withColumn("prompt", self._prompt_col(df)), "after_prompt"
+        )
+
     def _check_batch_size(self, rows: DataFrame) -> None:
         """§4 pre-spend context-window check of the mega-batch size on a
-        sample of ``rows`` rendered as the LLM sees it, context included.
-        Batched entry points call it before any LLM call or upload."""
+        sample of ``rows`` rendered as the LLM sees it, context and
+        ``after_prompt`` stages included. Batched entry points call it
+        before any LLM call or upload."""
         from ondine_spark.llm.context_limits import validate_batch_size
 
         if "prompt" not in rows.columns:
-            rows = rows.withColumn("prompt", self._prompt_col(rows))
+            rows = self._with_prompt(rows)
         validate_batch_size(
             rows, self.spec.prompt.batch_size, self.spec.llm.model
         )

@@ -26,8 +26,13 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from ondine_spark.operators.batching import with_global_index
+from ondine_spark.operators.batching import (
+    aggregate_batches_per_chunk,
+    disaggregate_batches,
+    with_global_index,
+)
 from ondine_spark.plans.pipeline import Pipeline, public_frame
 from ondine_spark.sources.cache import read_cache, write_responses
 from ondine_spark.sources.readers import ROW_ID
@@ -115,6 +120,14 @@ def iter_chunks(
     ChunkResult is already DURABLY COMMITTED; the consumer can stop at any
     point and resume later with the same session id.
 
+    One plan for every spec: the rows still to do get their retrieval
+    context, prompt and ``after_prompt`` stages once (the pipeline's
+    request step), a global index, the pre-spend batch-size check when
+    batched, and one spill of the requests (mega-prompt batch rows, or
+    ``(_row_id, prompt)`` rows at batch 1). Each chunk is then one job:
+    pruned read of its requests → invoke → disaggregate when batched →
+    durable append to the response cache.
+
     CONSUMER-CRASH CONTRACT: the chunk commit (the durable response-cache
     append, which happens BEFORE the yield) is the single source of
     truth. If the consumer crashes between receiving a yield and applying
@@ -155,46 +168,35 @@ def iter_chunks(
     else:
         todo = df
 
-    # Assemble-once fast path (round-6): with mega-batching and no user
-    # after_prompt stages, batch membership depends only on the static
-    # global index — so render prompts, attach retrieval context, and
-    # assemble EVERY chunk's mega-prompt batch rows in the one spill job.
-    # Each per-chunk job then degenerates to: pruned scan of its own
-    # ~ceil(chunk/batch) pre-assembled batch rows → invoke UDF → explode
-    # → durable write. ONE narrow stage, zero per-chunk shuffles (the
-    # per-chunk groupBy exchange + base ⋈ responses join were most of the
-    # 0.4-0.5 s/chunk fixed cost at 1000 chunks, tools/chunk_overhead.py).
-    has_after_prompt = any(
-        pos == "after_prompt" for pos, _ in spec.processing.stages
-    )
-    mega = spec.prompt.batch_size > 1 and not has_after_prompt
-    if mega:
-        work = pipeline._with_context(todo)
-        prompt_col = pipeline._prompt_col(work)
-        pipeline._ensure_accumulators()
-    else:
-        work = todo
-
-    seq = with_global_index(work, "_seq")
-    if mega:
+    # One path for every spec: attach retrieval context, render the
+    # prompt and run the after_prompt stages ONCE over the rows still to
+    # do, then spill the requests — at batch > 1 every chunk's mega-prompt
+    # batch rows, at batch 1 the (_row_id, prompt) rows. Batch membership
+    # depends only on the static global index, so nothing about a
+    # request is per-chunk work: each per-chunk job is a pruned scan of
+    # its own requests → invoke UDF → (explode) → durable write. ONE
+    # narrow stage, zero per-chunk shuffles, no per-chunk retrieval.
+    requests = pipeline._with_prompt(pipeline._with_context(todo))
+    pipeline._ensure_accumulators()
+    batch_size = spec.prompt.batch_size
+    seq = with_global_index(requests, "_seq")
+    if batch_size > 1:
         # pre-spend: the sample reads the index pass's cached rows
-        pipeline._check_batch_size(seq.withColumn("prompt", prompt_col))
+        pipeline._check_batch_size(seq)
     # total rows fall out of the index's offset pass — no count job
     n_rows = int(getattr(seq, "_ondine_total_rows", 0))
     n_chunks = -(-n_rows // chunk_size) if n_rows else 0
     sc = spark.sparkContext
-    # Chunk SPILL, not localCheckpoint (round-5): the chunk assignment is
+    # Chunk SPILL, not localCheckpoint (round-5): the requests are
     # written ONCE as parquet partitioned BY _chunk, so each chunk's job
-    # reads only its own partition directory via file-level partition
-    # pruning — O(chunk_size) per job. The previous localCheckpoint held
-    # the whole todo set as pinned RDD blocks AND made every chunk job
-    # re-scan all N cached rows just to filter one chunk out: O(N) per
-    # chunk, O(N × n_chunks) per run — 1000 chunks over 1M rows paid a
-    # billion row-filter evaluations of pure overhead (measured in
-    # tools/chunk_overhead.py). The spill also freezes the assignment
-    # against write_responses' refreshByPath (separate directory, static
-    # files) exactly like the checkpoint did, without pinning executor
-    # memory for the run's lifetime.
+    # reads only its own partition directory — O(chunk_size) per job. A
+    # localCheckpoint held the whole todo set as pinned RDD blocks AND
+    # made every chunk job re-scan all N cached rows just to filter one
+    # chunk out: O(N × n_chunks) per run (tools/chunk_overhead.py). The
+    # spill also freezes the requests against write_responses'
+    # refreshByPath (separate directory, static files) without pinning
+    # executor memory for the run's lifetime. Its columns are all
+    # internal, so parquet's column-name rules never bite.
     spill = f"{ckpt}/chunk_spill/session_id={sid}"
     if spec.processing.coordinate:
         # concurrent workers each spill their own copy: the spill is
@@ -206,56 +208,29 @@ def iter_chunks(
     chunked = seq.withColumn(
         "_chunk", (F.col("_seq") / chunk_size).cast("long")
     )
-    in_cols: list[str] = []
-    if mega:
-        from ondine_spark.operators.batching import (
-            aggregate_batches_per_chunk,
-        )
-
+    if batch_size > 1:
         spillable = aggregate_batches_per_chunk(
-            chunked.withColumn("prompt", prompt_col),
-            spec.prompt.batch_size, chunk_size,
+            chunked, batch_size, chunk_size
         )
     else:
-        spillable = chunked
+        spillable = chunked.select(ROW_ID, "prompt", "_chunk")
     if n_chunks >= sc.defaultParallelism:
         # many small chunks: co-locate each chunk's rows in one writer
         # task so the spill is ~1 file per chunk, not tasks × chunks
         spillable = spillable.repartition(sc.defaultParallelism, "_chunk")
-    if not mega:
-        # parquet rejects some user column names (spaces, '=', ...); spill
-        # under positional aliases and restore on read (the mega spill's
-        # columns are all internal — no aliasing needed)
-        in_cols = [
-            c for c in spillable.columns if c not in ("_seq", "_chunk")
-        ]
-        spillable = spillable.select(
-            *[F.col(c).alias(f"_c{i}") for i, c in enumerate(in_cols)],
-            "_seq", "_chunk",
-        )
     if n_rows:
         spillable.write.mode("overwrite").partitionBy("_chunk").parquet(spill)
     # the spill materialized from the index's internal cache (one source
     # scan total for offsets + spill); release those blocks now
     for _c in getattr(seq, "_ondine_cached", []):
         _c.unpersist()
-    chunked = None
-    bat_schema = None
-    if n_rows and mega:
-        # per-chunk reads go straight at the chunk's partition directory
-        # with the schema pinned driver-side: no per-chunk partition
-        # pruning over n_chunks directories and no per-chunk footer-based
-        # schema inference (measured ~25 ms/chunk at 1000 chunks)
-        from pyspark.sql.types import StructType
-
-        bat_schema = StructType(
-            [f for f in spillable.schema.fields if f.name != "_chunk"]
-        )
-    elif n_rows:
-        chunked = spark.read.parquet(spill).select(
-            *[F.col(f"_c{i}").alias(c) for i, c in enumerate(in_cols)],
-            "_seq", "_chunk",
-        )
+    # per-chunk reads go straight at the chunk's partition directory with
+    # the schema pinned driver-side: no per-chunk partition pruning over
+    # n_chunks directories and no per-chunk footer-based schema inference
+    # (measured ~25 ms/chunk at 1000 chunks)
+    spill_schema = StructType(
+        [f for f in spillable.schema.fields if f.name != "_chunk"]
+    )
     # Multi-process coordination (opt-in): disjoint chunk claims + a
     # shared cost ledger (orchestration/coordination.py). The claim
     # GENERATION digests the chunk assignment's inputs — workers that
@@ -340,15 +315,6 @@ def iter_chunks(
                 chunks_total=int(n_chunks),
                 rows_total=min(chunk_size, n_rows - cid * chunk_size),
             )
-            if not mega:
-                # rebase the run-level global index to 0 within the chunk
-                # and hand it to the pipeline: the batched spine then skips
-                # its per-chunk count job, and batch grouping stays exactly
-                # ceil(chunk_rows / batch_size)
-                chunk = chunked.where(f"_chunk = {cid}").selectExpr(
-                    *[f"`{c}`" for c in in_cols],
-                    f"_seq - {cid * chunk_size} AS _seq",
-                )
             # ONE job per chunk: the durable write is the only action. The
             # row count needs no job at all — chunk assignment is a
             # contiguous slice of the global index, so it is
@@ -369,29 +335,14 @@ def iter_chunks(
             # serialize (measured on 4.1.2 — one Observation broke every
             # subsequent ML transform on the shared session).
             n_chunk_rows = int(min(chunk_size, n_rows - cid * chunk_size))
-            if mega:
-                # pre-assembled batch rows: pruned scan → invoke → explode
-                # → write, one narrow stage (see the spill comment above).
-                # rows_only insight applies here too: the durable write
-                # needs _row_id + response cols only, and the disaggregator
-                # is row-preserving, so the base ⋈ responses join never
-                # happens in chunked mode.
-                from ondine_spark.operators.batching import (
-                    disaggregate_batches,
-                )
-
-                batch_rows = (
-                    spark.read.schema(bat_schema)
-                    .parquet(f"{spill}/_chunk={cid}")
-                    .select("_batch_id", "_row_ids", "prompt")
-                )
-                responses = disaggregate_batches(
-                    pipeline._invoke(batch_rows)
-                )
-            else:
-                responses = pipeline.response_frame(
-                    chunk, resume=False, seq_col="_seq", rows_only=True
-                )
+            # the disaggregator is 1:N row-preserving and the durable write
+            # keeps _row_id + response columns only, so no base ⋈ responses
+            # join ever happens in chunked mode
+            responses = pipeline._invoke(
+                spark.read.schema(spill_schema).parquet(f"{spill}/_chunk={cid}")
+            )
+            if batch_size > 1:
+                responses = disaggregate_batches(responses)
             # commit this chunk's responses durably BEFORE touching the next
             write_responses(responses, ckpt, sid)
             cost = _drain_cost(pipeline._cost_acc)
@@ -451,14 +402,17 @@ def iter_chunks(
 
 def chunked_result_frame(pipeline: Pipeline, checkpoint_dir: str, session_id: str) -> DataFrame:
     """The final result of an ``execute_chunked`` run, from the durable
-    cache alone: input rows with their retrieval context re-attached ⋈
-    cached responses → :meth:`Pipeline.assemble` (parse, ``after_parse``
-    stages, verification) → :func:`public_frame`. Same columns and rows
-    as ``execute().data``; never calls the LLM."""
+    cache alone: the request step's rows (retrieval context and
+    ``after_prompt`` stage columns, ``prompt`` dropped) ⋈ cached responses
+    → :meth:`Pipeline.assemble` (parse, ``after_parse`` stages,
+    verification) → :func:`public_frame`. Same columns and rows as
+    ``execute().data``; never calls the LLM."""
     cached = read_cache(pipeline.spark, checkpoint_dir, session_id)
     if cached is None:
         raise ValueError("no cached responses for session")
-    df = pipeline._with_context(pipeline.input_frame())
+    df = pipeline._with_prompt(
+        pipeline._with_context(pipeline.input_frame())
+    ).drop("prompt")
     return public_frame(
         pipeline.assemble(df.join(cached, on=ROW_ID, how="left"))
     )

@@ -23,12 +23,22 @@ def test_context_limit_validation(spark):
         validate_batch_size(prompts, batch_size=500, model="deepseek-chat")
 
 
-@pytest.mark.parametrize("entry", ["execute", "execute_chunked"])
-def test_batch_size_check_counts_retrieved_context(spark, tmp_path, entry):
+def _suffix(df):
+    return df.withColumn("prompt", F.concat("prompt", F.lit(" Be brief.")))
+
+
+@pytest.mark.parametrize("entry,stage", [
+    pytest.param(entry, stage, id=entry + ("-stage" if stage else ""))
+    for stage in (False, True) for entry in ("execute", "execute_chunked")
+])
+def test_batch_size_check_counts_retrieved_context(
+    spark, tmp_path, entry, stage
+):
     """The pre-spend batch-size check measures the prompt the model sees:
     ~300 words of prepended KB context per row overflow a 32K window at
     batch 100 although the bare template (~5 tokens) would fit. Both
-    batched entry points raise before any LLM call."""
+    batched entry points raise before any LLM call, with or without an
+    after_prompt stage."""
     from ondine_spark import PipelineBuilder, mock_client_factory
     from ondine_spark.knowledge import KnowledgeStore
     from ondine_spark.streaming.runner import execute_chunked
@@ -55,8 +65,10 @@ def test_batch_size_check_counts_retrieved_context(spark, tmp_path, entry):
         .with_knowledge_base(store.path, ["question"], top_k=1)
         .with_batch_size(100)
         .with_checkpoint_dir(str(tmp_path / "ckpt"), "s")
-        .build()
     )
+    if stage:
+        p.with_stage(_suffix, position="after_prompt")
+    p = p.build()
     with pytest.raises(ValueError, match="exceeds custom-x"):
         if entry == "execute":
             p.execute()

@@ -1,9 +1,12 @@
 """One output contract at every entry point: ``execute()``,
 ``execute_chunked`` + ``chunked_result_frame``, ``run_file_stream`` and
-provider-batch ``submit``/``collect`` run one spec — KB retrieval, a custom
-parser, an ``after_parse`` stage and grounding — and return the same
-columns, in the same order, and the same rows."""
+provider-batch ``submit``/``collect`` run one spec — KB retrieval, an
+``after_prompt`` stage, a custom parser, an ``after_parse`` stage and
+grounding — and return the same columns, in the same order, and the same
+rows, from the same prompts."""
 
+import json
+import os
 import sys
 
 import pytest
@@ -12,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ondine_spark import PipelineBuilder, mock_client_factory
 from ondine_spark.knowledge import KnowledgeStore
+from ondine_spark.llm.client import _parse_batch_items
 from ondine_spark.llm.provider_batch import (
     LocalMockBatchProvider,
     collect,
@@ -36,7 +40,9 @@ QUESTIONS = [
 ]
 
 CONTRACT = ["_row_id", "qid", "question", "_kb_context", "_kb_count",
-            "answer", "_tagged", "_grounding_score", "_grounded"]
+            "_prompt_len", "answer", "_tagged", "_grounding_score",
+            "_grounded"]
+SUFFIX = " Reply in one word."
 
 
 def _upper_parser(responses, out_cols):
@@ -45,6 +51,41 @@ def _upper_parser(responses, out_cols):
 
 def _tag(df):
     return df.withColumn("_tagged", F.concat(F.col("answer"), F.lit("!")))
+
+
+def _suffix(df):
+    return df.withColumn("_prompt_len", F.length("prompt")).withColumn(
+        "prompt", F.concat(F.col("prompt"), F.lit(SUFFIX))
+    )
+
+
+def _recording_factory(path):
+    def factory():
+        from ondine_spark.llm.client import DeterministicMockClient
+
+        class Recording(DeterministicMockClient):
+            def complete(self, prompt, system=None):
+                with open(path, "a") as f:
+                    f.write(json.dumps(prompt) + "\n")
+                return super().complete(prompt, system)
+
+        return Recording()
+
+    return factory
+
+
+def _row_prompts(requests):
+    """Per-row prompts inside LLM requests: a mega-prompt's item inputs,
+    or the request itself when unbatched."""
+    out = []
+    for r in requests:
+        items = _parse_batch_items(r)
+        out += [inp for _, inp in items] if items is not None else [r]
+    return sorted(out)
+
+
+def _logged(path):
+    return [json.loads(line) for line in open(path)]
 
 
 @pytest.fixture(scope="module")
@@ -65,12 +106,15 @@ def kb(spark, tmp_path_factory):
 def test_every_entry_point_returns_one_contract(spark, kb, tmp_path, batch_size):
     rows = spark.createDataFrame(QUESTIONS, ["qid", "question"])
 
-    def build(ckpt=None, count_file=None):
+    def build(ckpt=None, log=None):
         b = (
             PipelineBuilder(spark)
             .from_dataframe(rows, ["question"], id_column="qid")
             .with_prompt("Answer: {question}", ["answer"])
-            .with_custom_llm_client(mock_client_factory(count_file=count_file))
+            .with_custom_llm_client(
+                _recording_factory(log) if log else mock_client_factory()
+            )
+            .with_stage(_suffix, position="after_prompt")
             .with_custom_parser(_upper_parser)
             .with_stage(_tag, position="after_parse")
             .with_knowledge_base(kb.path, ["question"], top_k=1,
@@ -82,12 +126,17 @@ def test_every_entry_point_returns_one_contract(spark, kb, tmp_path, batch_size)
             b.with_checkpoint_dir(ckpt, "contract")
         return b.build()
 
-    outputs = {"execute": build().execute().data}
+    live_log = str(tmp_path / "live.jsonl")
+    outputs = {"execute": build(log=live_log).execute().data}
+    live = _row_prompts(_logged(live_log))
+    assert len(live) == len(QUESTIONS)
+    assert all(p.endswith(SUFFIX) for p in live)
 
-    ckpt, calls = str(tmp_path / "ckpt"), tmp_path / "calls.txt"
-    chunked = build(ckpt, str(calls))
+    ckpt, calls = str(tmp_path / "ckpt"), str(tmp_path / "calls.jsonl")
+    chunked = build(ckpt, calls)
     execute_chunked(chunked, chunk_size=5)
-    n_calls = len(calls.read_text().splitlines())
+    n_calls = len(_logged(calls))
+    assert _row_prompts(_logged(calls)) == live
     outputs["chunked"] = chunked_result_frame(chunked, ckpt, "contract")
 
     src = str(tmp_path / "stream_in")
@@ -100,8 +149,15 @@ def test_every_entry_point_returns_one_contract(spark, kb, tmp_path, batch_size)
     outputs["file_stream"] = spark.read.parquet(str(tmp_path / "stream_out"))
 
     batch = build()
-    provider = LocalMockBatchProvider(str(tmp_path / "spool"))
+    spool = str(tmp_path / "spool")
+    provider = LocalMockBatchProvider(spool)
     handle = submit(batch, provider, str(tmp_path / "work"))
+    compiled = [
+        json.loads(line)["body"]["messages"][-1]["content"]
+        for job in handle.provider_job_ids
+        for line in open(os.path.join(spool, job, "input.jsonl"))
+    ]
+    assert _row_prompts(compiled) == live
     # collect returns result_frame()'s columns; cli collect writes them
     # through public_frame
     outputs["provider_batch"] = public_frame(collect(batch, provider, handle))
@@ -110,12 +166,12 @@ def test_every_entry_point_returns_one_contract(spark, kb, tmp_path, batch_size)
     assert want.columns == CONTRACT
     expected = sorted(map(tuple, want.collect()))
     assert len(expected) == len(QUESTIONS)
-    answers = {r[1]: r[5] for r in expected}
+    answers = {r[1]: r[CONTRACT.index("answer")] for r in expected}
     assert answers["q00"] == "POSITIVE" and answers["q01"] == "NEGATIVE"
     assert answers["q02"] == "NEUTRAL"
     for name, got in outputs.items():
         assert got.columns == CONTRACT, name
         assert sorted(map(tuple, got.collect())) == expected, name
     # chunked assembly verifies from the durable cache: no LLM call
-    assert len(calls.read_text().splitlines()) == n_calls
+    assert len(_logged(calls)) == n_calls
     assert chunked._call_counter.value == n_calls

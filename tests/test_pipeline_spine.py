@@ -581,7 +581,7 @@ def test_batching_sql_exprs(spark):
 def test_chunked_assembly_parity(spark):
     """aggregate_batches_per_chunk (the assemble-once spill of the chunked
     runner) must produce the SAME batches as running aggregate_batches on
-    each chunk-rebased slice: same membership, same _seq-order, and
+    each chunk's slice: same membership, same _seq-order, and
     byte-identical mega-prompt text (memo keys and the mock client's
     parser both key on the bytes). Chunk size deliberately not a multiple
     of batch size so tail batches differ per chunk."""
@@ -611,12 +611,8 @@ def test_chunked_assembly_parity(spark):
         )
     mbpc = -(-cs // bs)
     for cid in range(-(-n // cs)):
-        slice_df = df.where(F.col("_chunk") == cid).selectExpr(
-            "_row_id", "prompt", f"_seq - {cid * cs} AS _seq"
-        )
-        want_rows = aggregate_batches(
-            slice_df, bs, persist=False, seq_col="_seq"
-        ).collect()
+        slice_df = df.where(F.col("_chunk") == cid).select("_row_id", "prompt")
+        want_rows = aggregate_batches(slice_df, bs, persist=False).collect()
         want = sorted(
             (tuple(r["_row_ids"]), r["prompt"]) for r in want_rows
         )
@@ -628,35 +624,10 @@ def test_chunked_assembly_parity(spark):
         assert ids == [cid * mbpc + j for j in range(len(want))]
 
 
-def test_aggregate_batches_seq_col_skips_index(spark, monkeypatch):
-    """With a caller-supplied contiguous index, aggregate_batches must not
-    re-derive one (the chunked runner relies on this to avoid a count job
-    per chunk) and must keep exact ceil(N/b) grouping."""
-    import math
-
-    from ondine_spark.operators import batching
-
-    def boom(*a, **k):
-        raise AssertionError("with_global_index must not run when seq_col given")
-
-    monkeypatch.setattr(batching, "with_global_index", boom)
-    df = spark.range(57).selectExpr(
-        "cast(id as string) as _row_id", "id as _myseq",
-        "concat('p', id) as prompt",
-    ).repartition(5)
-    batches = batching.aggregate_batches(df, 10, seq_col="_myseq")
-    sizes = sorted(
-        (r["n"] for r in batches.selectExpr("size(_row_ids) as n").collect()),
-        reverse=True,
-    )
-    assert len(sizes) == math.ceil(57 / 10)
-    assert sizes[:-1] == [10] * (len(sizes) - 1) and sum(sizes) == 57
-
-
 def test_chunked_batched_calls_exact(spark, tmp_path):
     """Chunked + batched: total api calls must be exactly
-    sum over chunks of ceil(chunk_rows / batch_size) — the seq-passthrough
-    rebase must keep per-chunk grouping contiguous from 0."""
+    sum over chunks of ceil(chunk_rows / batch_size) — the chunk-aligned
+    batch ids must keep per-chunk grouping contiguous from 0."""
     from ondine_spark.streaming.runner import execute_chunked
 
     rows = [{"id": f"k{i:03d}", "review": f"row {i}"} for i in range(95)]
@@ -674,25 +645,6 @@ def test_chunked_batched_calls_exact(spark, tmp_path):
     assert summary.total_rows == 95
     # chunks: 30,30,30,5 -> ceil/7 = 5+5+5+1 = 16 calls
     assert sum(1 for _ in open(calls)) == 16
-
-
-def test_rows_only_unbatched_contract(spark):
-    """ADVICE r6: rows_only=True with batch_size == 1 must honor the
-    documented contract — _row_id + response columns, NO input columns —
-    exactly like the batched branches."""
-    p = _pipeline(spark)  # batch_size defaults to 1 (unbatched path)
-    out = p.response_frame(resume=False, rows_only=True)
-    cols = set(out.columns)
-    assert "_row_id" in cols
-    assert "response_text" in cols
-    assert "review" not in cols and "review_id" not in cols
-    assert "prompt" not in cols
-    assert out.count() == len(REVIEWS)
-    # and the batched path returns the same column set for the same spec
-    # (modulo _batch_id, which only the disaggregator produces)
-    pb = _pipeline(spark, batch_size=3)
-    cols_b = set(pb.response_frame(resume=False, rows_only=True).columns)
-    assert cols == cols_b - {"_batch_id"}, (cols, cols_b)
 
 
 def test_custom_client_returning_dict(spark):

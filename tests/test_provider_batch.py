@@ -89,20 +89,42 @@ def test_batched_mode_matches_live(spark, tmp_path):
 def test_driver_never_materializes_requests(spark, tmp_path, monkeypatch):
     """The request set must reach the provider via executor-written part
     files, never via a driver-side collect of the full frame (driver OOM
-    at 10⁸ requests). Any DataFrame.collect/toPandas/toLocalIterator during
-    submit() fails the test."""
-    from pyspark.sql import DataFrame
+    at 10⁸ requests). Every collect/toPandas/toLocalIterator during
+    submit() is recorded on the class sessions actually return: none may
+    read the JSONL request lines, and none over a frame carrying prompts
+    may return more rows than the batch-size check's sample."""
+    import inspect
 
-    def _boom(self, *a, **k):
-        raise AssertionError("driver materialized the request set")
+    from ondine_spark.llm.context_limits import validate_batch_size
 
-    monkeypatch.setattr(DataFrame, "collect", _boom)
-    monkeypatch.setattr(DataFrame, "toPandas", _boom)
-    monkeypatch.setattr(DataFrame, "toLocalIterator", _boom)
+    sample = inspect.signature(validate_batch_size).parameters["sample"].default
+    cls = type(spark.range(1))
+    calls = []
+
+    def recording(name):
+        orig = getattr(cls, name)
+
+        def wrapper(self, *a, **k):
+            out = orig(self, *a, **k)
+            rows = len(out) if hasattr(out, "__len__") else None
+            calls.append((name, tuple(self.columns), rows))
+            return out
+
+        return wrapper
+
+    for name in ("collect", "toPandas", "toLocalIterator"):
+        monkeypatch.setattr(cls, name, recording(name))
     provider = LocalMockBatchProvider(str(tmp_path / "spool"))
     p = _build(spark, batch_size=10)
     handle = submit(p, provider, str(tmp_path / "work"))
     assert handle.provider_job_ids
+    # the recorder is live: the global index's partition counts and the
+    # batch-size check's sample are small driver-side collects
+    assert calls
+    for name, cols, rows in calls:
+        assert "line" not in cols, (name, cols)
+        if "prompt" in cols:
+            assert rows is not None and rows <= sample, (name, cols, rows)
 
 
 def test_multipart_sharded_submit(spark, tmp_path):
@@ -424,6 +446,9 @@ def test_collect_structured_output_is_typed(spark, tmp_path, monkeypatch):
     assert len(rows) == 9
     assert rows["k000"]["label"] == "positive"
     assert rows["k001"]["label"] == "negative"
+    # the mock quotes the prompt's word count: "Classify: row i is <label>"
+    assert {r["score"] for r in rows.values()} == {5.0}
+    assert not any(r["_parse_error"] for r in rows.values())
 
 
 def test_collect_applies_custom_parser(spark, tmp_path):

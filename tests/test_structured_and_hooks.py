@@ -61,6 +61,27 @@ def test_structured_output_validates(spark, schema):
     assert rows["b"]["_parse_error"] is True
 
 
+def test_schema_parser_coerces_quoted_numbers(spark):
+    """Numeric fields sent as JSON strings coerce like Pydantic's lax mode;
+    a present value that is not a number flags the row instead of being
+    silently nulled."""
+    from ondine_spark.functions.parsing import apply_schema_parser
+
+    df = spark.createDataFrame([
+        ("quoted", '{"label":"positive","score":"4"}'),
+        ("number", '{"label":"positive","score":4}'),
+        ("text", '{"label":"positive","score":"abc"}'),
+    ], ["id", "response_text"])
+    rows = {r["id"]: r for r in apply_schema_parser(
+        df, ["label", "score"], "label STRING, score DOUBLE"
+    ).collect()}
+    for k in ("quoted", "number"):
+        assert rows[k]["score"] == 4.0 and rows[k]["_parse_error"] is False
+    assert rows["text"]["score"] is None
+    assert rows["text"]["label"] == "positive"
+    assert rows["text"]["_parse_error"] is True
+
+
 def test_structured_output_rejects_missing_column(spark):
     with pytest.raises(ValueError, match="not in output_schema"):
         _run(spark, "label STRING")

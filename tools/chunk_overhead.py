@@ -1,20 +1,21 @@
-"""Per-chunk fixed-cost measurement (round-5 verdict item 4).
+"""Per-chunk fixed-cost measurement of the chunked runner.
 
-The chunked runner's ``seq_col`` fast path (operators/batching.py)
-claims one fewer driver-blocking count job per chunk — at 1000 chunks
-that is 1000 saved jobs. Measure the claim instead of asserting it:
-run the SAME 1M-row mega-batched spine as execute_chunked at
-chunk_size=200_000 (5 chunks) and chunk_size=1_000 (1000 chunks) and
-report total wall + the derived per-chunk fixed cost
+The chunked runner renders, stages and spills every request once, so a
+chunk's job should be a pruned read → invoke → durable write whatever the
+spec. Measure that instead of asserting it: run the SAME spine through
+execute_chunked at two chunk sizes (5 chunks vs 1000 chunks) and report
+total wall + the derived per-chunk fixed cost
 
     fixed = (wall_1000_chunks - wall_5_chunks) / (1000 - 5)
 
 (the per-row work is identical across arms, so the wall difference is
-pure per-chunk overhead: plan build, filter job, durable parquet
-commit, memento write). Appends the result to
+pure per-chunk overhead: plan build, the chunk job, durable parquet
+commit, memento write). ``--batch-size 1`` measures the row-wise arm,
+anything larger the mega-batched arm. Appends the result to
 benchmarks/CHUNK_OVERHEAD.json and prints one JSON line.
 
-Usage: python tools/chunk_overhead.py [n_rows]  (run ALONE, like bench)
+Usage: python tools/chunk_overhead.py [n_rows] [--batch-size N]
+(run ALONE, like bench)
 """
 
 from __future__ import annotations
@@ -26,11 +27,18 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-N_ROWS = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
-ARMS = [200_000, 1_000]  # chunks: 5 vs 1000
-
 
 def main() -> None:
+    import argparse
+
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("n_rows", nargs="?", type=int, default=1_000_000)
+    ap.add_argument("--batch-size", type=int, default=25,
+                    help="rows per LLM call; 1 measures the row-wise arm")
+    args = ap.parse_args()
+    n_rows = args.n_rows
+    arms = [n_rows // 5, max(1, n_rows // 1000)]  # chunks: 5 vs 1000
+
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
@@ -63,7 +71,7 @@ def main() -> None:
 
     import tempfile
 
-    df = spark.range(N_ROWS).select(
+    df = spark.range(n_rows).select(
         F.col("id"),
         F.concat(F.lit("review number "), F.col("id")).alias("review"),
     )
@@ -75,7 +83,7 @@ def main() -> None:
             .from_dataframe(df, ["review"], id_column="id")
             .with_prompt("Sentiment of: {review}", ["sentiment"])
             .with_custom_llm_client(mock_client_factory())
-            .with_batch_size(25)
+            .with_batch_size(args.batch_size)
             .with_checkpoint_dir(work, f"ovh{chunk_size}")
             .build()
         )
@@ -84,7 +92,7 @@ def main() -> None:
         t0 = time.monotonic()
         summary = execute_chunked(p, chunk_size=chunk_size)
         wall = time.monotonic() - t0
-        assert summary.total_rows == N_ROWS, summary.total_rows
+        assert summary.total_rows == n_rows, summary.total_rows
         n_chunks = len(summary.chunks)
         import shutil
 
@@ -93,11 +101,11 @@ def main() -> None:
             "chunk_size": chunk_size,
             "n_chunks": n_chunks,
             "wall_sec": round(wall, 3),
-            "rows_per_sec": round(N_ROWS / wall),
+            "rows_per_sec": round(n_rows / wall),
         }
 
-    arms = [run(cs) for cs in ARMS]
-    big, small = arms[0], arms[1]
+    runs = [run(cs) for cs in arms]
+    big, small = runs[0], runs[1]
     fixed = (small["wall_sec"] - big["wall_sec"]) / (
         small["n_chunks"] - big["n_chunks"]
     )
@@ -128,8 +136,9 @@ def main() -> None:
         "metric": "per_chunk_fixed_cost",
         "value": round(fixed, 4),
         "unit": "sec/chunk",
-        "n_rows": N_ROWS,
-        "arms": arms,
+        "n_rows": n_rows,
+        "batch_size": args.batch_size,
+        "arms": runs,
         "job_floor_sec": round(floor, 4),
         "job_floor_note": (
             "median of 12 no-op jobs (python stage + parquet append on a "
