@@ -118,16 +118,18 @@ def _sorted_group_pairs(
     max_group: int | None = None,
     forest: bool = False,
     matrix: tuple[str, str] | None = None,
+    partitions: int | None = None,
 ) -> DataFrame:
     """The one pair driver behind every grouped pair kernel (counting
     jaccard, LSH buckets, winnowing, semantic cells): ONE shuffle on
     ``keys``, a local sort on ``keys + order``, and one streaming numpy
     pass over each sorted partition (``mapInPandas``).
 
-    ``rows`` carries an ``_id`` column. Group boundaries come from
-    vectorized compares of the key columns; a group spanning Arrow
-    batches is carried over to the next batch inside the partition
-    iterator. Groups of size < 2 or over ``max_group`` (the operator's
+    ``rows`` carries an ``_id`` column; ``partitions`` fixes the task
+    count of the shuffle (default: the session's shuffle partitions).
+    Group boundaries come from vectorized compares of the key columns; a
+    group spanning Arrow batches is carried over to the next batch inside
+    the partition iterator. Groups of size < 2 or over ``max_group`` (the operator's
     stop-shingle / stop-gram / bucket-occupancy cap: a group's length in
     the sorted partition IS its key's frequency) are dropped with numpy
     before any per-group Python call; the surviving rows are compacted
@@ -221,8 +223,9 @@ def _sorted_group_pairs(
             if out is not None:
                 yield out
 
+    parts = (partitions,) if partitions else ()
     return (
-        rows.repartition(*keys)
+        rows.repartition(*parts, *keys)
         .sortWithinPartitions(*keys, *order)
         .mapInPandas(gen, schema=schema)
     )
@@ -528,9 +531,17 @@ def minhash_signature(
     ZERO algorithmic shuffles either way. Output: id, sig
     array<bigint>; docs with no shingles are excluded.
     """
+    return _minhash_sig_rows(spread_small(df), id_col, text_col, num_hashes, ngram)
+
+
+def _minhash_sig_rows(
+    df: DataFrame, id_col: str, text_col: str, num_hashes: int, ngram: int
+) -> DataFrame:
+    """:func:`minhash_signature` over ``df``'s partitions as they are: one
+    Python task per input partition (callers size the partitioning)."""
     grams = word_ngrams(F.col(text_col), ngram)  # already distinct
     id_type = dict(df.dtypes)[id_col]
-    base = spread_small(df).select(
+    base = df.select(
         F.col(id_col).alias("_id"),
         F.transform(grams, lambda s: md5_long(s)).alias("_hs"),
     )
@@ -549,19 +560,16 @@ def minhash_band_rows(
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
     r = num_hashes // bands
-    return sig.select(
-        "_id",
-        "sig",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("band"),
-                    F.concat_ws(",", *[F.col("sig")[i * r + j].cast("string") for j in range(r)]).alias("key"),
-                )
-                for i in range(bands)
-            ])
-        ).alias("bk"),
-    ).select("_id", "sig", "bk.band", "bk.key")
+    # one SQL projection: inline() yields (band, key) as columns, and one
+    # expression string is one parse instead of bands × r Column objects
+    # built over py4j per call
+    structs = ", ".join(
+        f"named_struct('band', {i}, 'key', concat_ws(',', "
+        + ", ".join(f"CAST(sig[{i * r + j}] AS STRING)" for j in range(r))
+        + "))"
+        for i in range(bands)
+    )
+    return sig.selectExpr("_id", "sig", f"inline(array({structs}))")
 
 
 def minhash_lsh_pairs(
@@ -624,6 +632,7 @@ def _lsh_bucket_edges(
     threshold: float | None = None,
     max_bucket_size: int | None = None,
     forest: bool = False,
+    partitions: int | None = None,
 ) -> DataFrame:
     """Near-dup edges from :func:`minhash_band_rows` output: the one LSH
     detection kernel shared by batch pair-finding and streaming dedup.
@@ -640,7 +649,8 @@ def _lsh_bucket_edges(
     emitted (pair mode) or thresholded.
 
     Runs on :func:`_sorted_group_pairs` (one group per (band, key)
-    bucket, ``max_bucket_size`` as the group cap). Pair mode emits
+    bucket, ``max_bucket_size`` as the group cap, ``partitions`` as its
+    task count). Pair mode emits
     (a, b, est_jaccard); ``forest`` mode emits the driver's star edges
     only — at most k−1 rows per k-doc bucket, with the same connected
     components as the pairs (see :func:`minhash_lsh_pairs`).
@@ -689,7 +699,7 @@ def _lsh_bucket_edges(
     out = _sorted_group_pairs(
         band_rows, ["band", "key"], ["_id"], bucket_pairs,
         extras="est_jaccard double", max_group=max_bucket_size,
-        forest=forest, matrix=("sig", "int64"),
+        forest=forest, matrix=("sig", "int64"), partitions=partitions,
     )
     if not own:
         # capped mode emits per surviving bucket (see ownership note)
@@ -1051,12 +1061,31 @@ def _star_round(edges: DataFrame, large: bool) -> DataFrame:
     )
 
 
+# edges connected_components solves on the driver: two ids each, ~16 MB
+_CC_DRIVER_EDGES = 1_000_000
+
+
+def _min_labels(a, b):
+    """Union-find over collected edge columns ``a``, ``b`` (numpy arrays of
+    comparable ids): ``(nodes, component)`` arrays, component = the
+    smallest node of each node's connected component. Vectorized
+    min-hooking over the sorted distinct nodes' positions, so the
+    smallest position of a component is its smallest id."""
+    import numpy as np
+
+    nodes, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    parent = _min_hook_union(
+        np.arange(len(nodes), dtype=np.int64), inv[: len(a)], inv[len(a):]
+    )
+    return nodes, nodes[parent]
+
+
 def connected_components(
     pairs: DataFrame,
     a: str = "a",
     b: str = "b",
     max_iter: int = 25,
-    driver_threshold: int = 1_000_000,
+    driver_threshold: int = _CC_DRIVER_EDGES,
 ) -> DataFrame:
     """Resolve duplicate PAIRS into clusters: (node, component) where
     component = the smallest node id in the node's connected component.
@@ -1121,43 +1150,12 @@ def connected_components(
         _unpersist(edges_ids)  # consumed; free now
         if len(pdf) == 0:
             return spark.createDataFrame([], schema=out_schema)
-        import numpy as np
+        import pandas as pd
 
-        ua = pdf["a"].to_numpy()
-        vb = pdf["b"].to_numpy()
-        if np.issubdtype(ua.dtype, np.integer):
-            # vectorized min-hooking over compacted node positions
-            nodes, inv = np.unique(np.concatenate([ua, vb]),
-                                   return_inverse=True)
-            parent = _min_hook_union(
-                np.arange(len(nodes), dtype=np.int64),
-                inv[: len(ua)], inv[len(ua):],
-            )
-            import pandas as pd
-
-            labels_pdf = pd.DataFrame(
-                {"node": nodes, "component": nodes[parent]}
-            )
-            return spark.createDataFrame(labels_pdf, schema=out_schema)
-        # non-integer node ids: classic dict union-find over the collected
-        # columns (same output, no numpy fast path)
-        parent_d: dict = {}
-
-        def find(x):
-            parent_d.setdefault(x, x)
-            root = x
-            while parent_d[root] != root:
-                root = parent_d[root]
-            while parent_d[x] != root:  # path compression
-                parent_d[x], x = root, parent_d[x]
-            return root
-
-        for x, y in zip(ua.tolist(), vb.tolist()):
-            ra, rb = find(x), find(y)
-            if ra != rb:
-                parent_d[max(ra, rb)] = min(ra, rb)
-        labels = [(n_, find(n_)) for n_ in parent_d]
-        return spark.createDataFrame(labels, schema=out_schema)
+        nodes, comp = _min_labels(pdf["a"].to_numpy(), pdf["b"].to_numpy())
+        return spark.createDataFrame(
+            pd.DataFrame({"node": nodes, "component": comp}), schema=out_schema
+        )
     for _ in range(max_iter):
         nxt, nxt_ids = checkpoint_df(
             _star_round(_star_round(edges, large=True), large=False)

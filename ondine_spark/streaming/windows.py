@@ -15,7 +15,8 @@ chunked runner:
 - ``streaming_first_seen``: cross-micro-batch exact dedup — emit only the
   FIRST occurrence of each key — via ``applyInPandasWithState`` (the
   custom-stateful-operator surface; state = "seen" flag per key group,
-  with a TTL so state doesn't grow unbounded).
+  with an event-time TTL so state doesn't grow unbounded and one-shot
+  ``availableNow`` runs still end).
 """
 
 from __future__ import annotations
@@ -108,20 +109,31 @@ def streaming_sessions(
 
 
 _FIRST_SEEN_STATE = T.StructType([T.StructField("seen", T.BooleanType())])
+_SEEN_AT = "_first_seen_at"
 
 
 def streaming_first_seen(
     stream: DataFrame,
     key_col: str,
-    state_ttl_minutes: int | None = 60,
+    state_ttl_minutes: float | None = 60,
 ) -> DataFrame:
     """Exact first-occurrence filter across micro-batches
     (``applyInPandasWithState``): the first row of each key ever observed
     is emitted; subsequent occurrences (same or later micro-batches) are
-    dropped. Per-key state is one boolean with an optional processing-time
-    TTL (after which a key may be emitted again — the unbounded-state
-    trade every streaming dedup must choose)."""
+    dropped. Per-key state is one boolean with an optional TTL from the
+    key's first sighting (after which a key may be emitted again — the
+    unbounded-state trade every streaming dedup must choose).
+
+    The TTL is an event-time timeout over a watermark on each row's batch
+    time, so a key expires once data arriving more than the TTL after its
+    first sighting has moved the watermark past it. A processing-time
+    timeout would make Spark schedule a no-data batch after every batch,
+    so a ``trigger(availableNow=True)`` query would never end; the
+    watermark moves only with data, so such a query ends after at most
+    one no-data batch."""
     out_schema = stream.schema
+    names = out_schema.names
+    ttl_ms = int(state_ttl_minutes * 60_000) if state_ttl_minutes else None
 
     def dedup(
         key: Tuple,
@@ -135,20 +147,25 @@ def streaming_first_seen(
         if not already:
             for pdf in pdfs:
                 if len(pdf):
-                    yield pdf.head(1)
+                    yield pdf.head(1)[names]
                     break
             state.update((True,))
-            if state_ttl_minutes:
-                state.setTimeoutDuration(state_ttl_minutes * 60 * 1000)
+            if ttl_ms:
+                state.setTimeoutTimestamp(
+                    state.getCurrentProcessingTimeMs() + ttl_ms
+                )
         else:
             for _ in pdfs:  # drain
                 pass
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_minutes
-        else GroupStateTimeout.NoTimeout
-    )
+    timeout = GroupStateTimeout.NoTimeout
+    if ttl_ms:
+        timeout = GroupStateTimeout.EventTimeTimeout
+        # streaming current_timestamp() is the batch's timestamp, which
+        # grows from batch to batch: no row is ever behind the watermark
+        stream = stream.withColumn(_SEEN_AT, F.current_timestamp()).withWatermark(
+            _SEEN_AT, "0 seconds"
+        )
     return stream.groupBy(key_col).applyInPandasWithState(
         dedup,
         outputStructType=out_schema,

@@ -126,6 +126,22 @@ def test_empty_pair_set(spark):
     assert connected_components(pairs).count() == 0
 
 
+@pytest.mark.parametrize("driver_threshold", [1_000_000, 0],
+                         ids=["driver-unionfind", "distributed-stars"])
+def test_components_string_ids(spark, driver_threshold):
+    """Non-integer node ids: the component is the smallest id in Spark's
+    string order (UTF-8 bytes, the same order as Python's code points)."""
+    edges = [("b", "c"), ("c", "ä"), ("é", "a"), ("x", "y"), ("z", "y")]
+    df = spark.createDataFrame(edges, "a: string, b: string")
+    got = {
+        (r.node, r.component)
+        for r in connected_components(
+            df, driver_threshold=driver_threshold
+        ).collect()
+    }
+    assert got == set(_uf_components(edges).items())
+
+
 def test_near_dedup_end_to_end(spark):
     from ondine_spark.operators.dedup import near_dedup
 

@@ -65,23 +65,10 @@ def test_first_seen_dedup_across_restarts(spark, tmp_path):
     assert {r.doc_id for r in spark.read.parquet(dirs["out"]).collect()} == {1, 2, 5}
 
 
-def test_mass_duplicated_batch_keeps_cluster_min(spark):
-    """One micro-batch that is mostly a single near-duplicate cluster: 300
-    docs differing only in letter case and trailing spaces (one shingle
-    set, so one signature) plus three uniques, no store. The cluster's
-    smallest id and the uniques survive, and the bucket kernel hands
-    connected_components at most k−1 star edges, not the k(k−1)/2 pairs.
-    Called without a stream so it stays cheap."""
-    from ondine_spark.operators.dedup import (
-        _lsh_bucket_edges,
-        minhash_band_rows,
-        minhash_signature,
-    )
-    from ondine_spark.streaming.incremental_dedup import (
-        dedup_batch_against_store,
-    )
-
-    k, words = 300, T1.split()
+def _mass_batch(spark, k):
+    """k docs differing only in letter case and trailing spaces (one
+    shingle set, so one signature, ids 10..k+9) plus three uniques."""
+    words = T1.split()
     dups = [
         (10 + i, " ".join(
             w.upper() if (i >> j) & 1 else w for j, w in enumerate(words)
@@ -90,14 +77,42 @@ def test_mass_duplicated_batch_keeps_cluster_min(spark):
     ]
     uniques = [(1, T2), (2, T3), (500, "ledger entries for the quarterly "
                                       "audit of warehouse inventory counts")]
-    batch = spark.createDataFrame(dups + uniques, SCHEMA)
+    return spark.createDataFrame(dups + uniques, SCHEMA)
 
-    kept_docs, _, cached = dedup_batch_against_store(
-        batch, None, "doc_id", "text", num_hashes=16, bands=8, threshold=0.5
+
+def _kept(spark, batch, store):
+    from ondine_spark.core.checkpoints import unpersist_rdd_ids
+    from ondine_spark.streaming.incremental_dedup import (
+        dedup_batch_against_store,
     )
-    kept = {r.doc_id for r in kept_docs.collect()}
-    for c in cached:
-        c.unpersist()
+
+    kept_docs, kept_rows, ids = dedup_batch_against_store(
+        batch, store, "doc_id", "text", num_hashes=16, bands=8, threshold=0.5
+    )
+    try:
+        return (
+            {r.doc_id for r in kept_docs.collect()},
+            sorted(tuple(r) for r in kept_rows.collect()),
+        )
+    finally:
+        unpersist_rdd_ids(spark.sparkContext, ids)
+
+
+def test_mass_duplicated_batch_keeps_cluster_min(spark):
+    """One micro-batch that is mostly a single near-duplicate cluster: 300
+    docs with one shingle set plus three uniques, no store. The cluster's
+    smallest id and the uniques survive, and the bucket kernel hands the
+    driver's union-find at most k−1 star edges, not the k(k−1)/2 pairs.
+    Called without a stream so it stays cheap."""
+    from ondine_spark.operators.dedup import (
+        _lsh_bucket_edges,
+        minhash_band_rows,
+        minhash_signature,
+    )
+
+    k = 300
+    batch = _mass_batch(spark, k)
+    kept, _ = _kept(spark, batch, None)
     assert kept == {10, 1, 2, 500}
 
     rows = minhash_band_rows(
@@ -106,6 +121,82 @@ def test_mass_duplicated_batch_keeps_cluster_min(spark):
     edges = _lsh_bucket_edges(rows, 16, 8, threshold=0.5, forest=True).collect()
     assert 0 < len(edges) <= k - 1
     assert {e.a for e in edges} == {10}
+
+
+def test_forest_collect_cap_falls_back_to_connected_components(
+    spark, monkeypatch
+):
+    """The driver collects (store hits, forest edges) are capped by
+    bands × B ≤ connected_components' driver threshold. Under the cap
+    connected_components is never called; with the threshold patched
+    below bands × B the step runs distributed (hits as a frame, the
+    forest through connected_components) and keeps the same docs and
+    band rows. The store holds doc 1's text under id 0, so doc 1 is a
+    store hit in both modes."""
+    from ondine_spark.operators import dedup
+    from ondine_spark.operators.dedup import (
+        minhash_band_rows,
+        minhash_signature,
+    )
+    from ondine_spark.streaming import incremental_dedup
+
+    calls = []
+    real = incremental_dedup.connected_components
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(incremental_dedup, "connected_components", spy)
+    batch = _mass_batch(spark, 40)
+    store = minhash_band_rows(
+        minhash_signature(
+            spark.createDataFrame([(0, T2)], SCHEMA), "doc_id", "text", 16, 3
+        ),
+        16, 8,
+    )
+    on_driver = _kept(spark, batch, store)
+    assert on_driver[0] == {10, 2, 500}
+    assert not calls
+
+    monkeypatch.setattr(dedup, "_CC_DRIVER_EDGES", 8 * 43 - 1)
+    assert _kept(spark, batch, store) == on_driver
+    assert calls == [1]
+
+
+def test_micro_batch_job_count(spark, tmp_path):
+    """Spark jobs per micro-batch, read from the status tracker under the
+    stream's job group: a 3-file stream whose batches 2 and 3 check the
+    signature store. Jobs are the fixed cost every micro-batch pays; the
+    plan runs 10 for a batch without a store and 15 with one (count, band
+    rows, store hits, forest, survivors, two writes, with their AQE stage
+    jobs)."""
+    from ondine_spark.streaming.incremental_dedup import run_dedup_stream
+
+    dirs = {k: str(tmp_path / k) for k in ("in", "out", "state", "ckpt")}
+    _write(spark, dirs["in"], [(1, T1), (2, T2), (3, T1)])
+    _write(spark, dirs["in"], [(4, T2), (5, T3), (6, T3)])
+    _write(spark, dirs["in"], [(7, T3), (8, T1 + " more"), (9, "x y z w")])
+    q = run_dedup_stream(
+        spark,
+        input_path=dirs["in"],
+        schema=SCHEMA,
+        id_col="doc_id",
+        text_col="text",
+        output_path=dirs["out"],
+        state_dir=dirs["state"],
+        checkpoint_location=dirs["ckpt"],
+        threshold=0.5,
+        timeout_s=120,
+    )
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    batches = [p for p in q.recentProgress if p.numInputRows]
+    jobs = len(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+    kept = {r.doc_id for r in spark.read.parquet(dirs["out"]).collect()}
+    assert kept == {1, 2, 5, 9}
+    assert len(batches) == 3
+    assert jobs <= 16 * len(batches), f"{jobs} jobs for {len(batches)} batches"
 
 
 def test_streaming_matches_batch_near_dedup_100k(spark, tmp_path):

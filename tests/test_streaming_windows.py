@@ -89,19 +89,11 @@ def test_streaming_first_seen_across_batches(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        # the TTL's processing-time timeout makes Spark schedule a no-data
-        # batch after every batch, so this availableNow query never stops
-        # by itself; a batch's progress is reported after its sink commit,
-        # so once the run's progress counts the n_new appended rows, all
-        # of them are in the output
+        # a one-shot catch-up run with the default TTL ends by itself
         try:
-            deadline = time.monotonic() + 120
-            while q.isActive and sum(
-                p["numInputRows"] for p in q.recentProgress
-            ) < n_new:
-                assert time.monotonic() < deadline, "stream did not drain"
-                time.sleep(0.2)
+            assert q.awaitTermination(60), "availableNow run did not end"
             assert q.exception() is None
+            assert sum(p["numInputRows"] for p in q.recentProgress) == n_new
         finally:
             q.stop()
 
@@ -117,6 +109,42 @@ def test_streaming_first_seen_across_batches(spark, tmp_path):
     rows = spark.read.parquet(out).collect()
     ids = sorted(r["id"] for r in rows)
     assert ids == ["a", "b", "c"]  # 'a' emitted exactly once, ever
+
+
+def test_streaming_first_seen_ttl_expires(spark, tmp_path):
+    """A key's state expires once data arriving more than the TTL after
+    its first sighting moves the watermark past it: the key may then be
+    emitted again. Each availableNow run ends by itself."""
+    import datetime as dt
+
+    from ondine_spark.streaming.windows import streaming_first_seen
+
+    src, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    base = dt.datetime(2026, 1, 1)
+
+    def run_once(rows):
+        _write_events(spark, src, [(k, base, "x", v) for k, v in rows])
+        stream = spark.readStream.schema(
+            "id STRING, ts TIMESTAMP, event_type STRING, value DOUBLE"
+        ).json(src)
+        q = (
+            streaming_first_seen(stream, "id", state_ttl_minutes=0.02)
+            .writeStream.format("parquet")
+            .option("checkpointLocation", ckpt)
+            .option("path", out)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            assert q.awaitTermination(60), "availableNow run did not end"
+        finally:
+            q.stop()
+        return sorted(r["value"] for r in spark.read.parquet(out).collect())
+
+    assert run_once([("a", 1.0), ("a", 2.0)]) == [1.0]
+    time.sleep(1.5)  # past the 1.2 s TTL
+    assert run_once([("b", 3.0)]) == [1.0, 3.0]  # its watermark expires 'a'
+    assert run_once([("a", 4.0)]) == [1.0, 3.0, 4.0]
 
 
 def test_streaming_sessions_match_batch_session_window(spark, tmp_path):

@@ -21,11 +21,13 @@ these — the cross-restart state under test), plus ~1% within-file dups
 (caught by the within-batch LSH bucket kernel); all other docs carry
 near-disjoint shingle sets so they genuinely survive.
 
-Usage: python tools/stream_1m.py [n_docs] [work_dir]   (spawns children)
+Usage: python tools/stream_1m.py [n_docs] [work_dir] [--kill-after N]
+(spawns children; ``python tools/stream_1m.py --help`` for details)
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import signal
@@ -35,9 +37,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-N_DOCS = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
 N_FILES = 20
-KILL_AFTER_BATCHES = int(os.environ.get("STREAM_KILL_AFTER", "8"))
 
 
 def session():
@@ -88,8 +88,8 @@ def _body(j):
     )
 
 
-def gen_corpus(spark, in_dir: str) -> None:
-    """1M docs over N_FILES files, ids increasing with arrival order.
+def gen_corpus(spark, in_dir: str, n_docs: int) -> None:
+    """``n_docs`` (1M by default) docs over N_FILES files, ids increasing with arrival order.
     Two duplicate classes, both exact copies of an earlier doc's text
     (the same pure body expression evaluated at the earlier id):
     ~3% cross-FILE dups (source 75,011 ids back = 1-2 files earlier at
@@ -98,7 +98,7 @@ def gen_corpus(spark, in_dir: str) -> None:
     (source 13 ids back — caught by the within-batch LSH bucket kernel)."""
     from pyspark.sql import functions as F
 
-    per_file = N_DOCS // N_FILES
+    per_file = n_docs // N_FILES
     for f in range(N_FILES):
         lo = f * per_file
         jid = F.col("id")
@@ -113,7 +113,7 @@ def gen_corpus(spark, in_dir: str) -> None:
         )
         # exactly ONE file per chunk: each arriving file is one
         # micro-batch (maxFilesPerTrigger=1), so the stream runs
-        # N_FILES batches of N_DOCS/N_FILES docs — per-batch fixed
+        # N_FILES batches of n_docs/N_FILES docs — per-batch fixed
         # cost (store re-read, plan build) stays a rounding error
         df.coalesce(1).write.mode("append").parquet(in_dir)
 
@@ -180,7 +180,7 @@ def run_child(dirs: dict, repo: str, kill_after: int | None) -> int:
         else:
             raise AssertionError(
                 "stream finished before the kill threshold — lower "
-                "KILL_AFTER_BATCHES"
+                "--kill-after"
             )
     else:
         proc.wait()
@@ -222,21 +222,38 @@ def snapshot(spark, dirs: dict):
     }
 
 
+def parse_args(argv=None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(
+        description="Streaming dedup crash parity: a golden run and a "
+        "SIGKILLed + restarted run over the same corpus must leave "
+        "identical output and signature store."
+    )
+    ap.add_argument("n_docs", nargs="?", type=int, default=1_000_000,
+                    help="corpus size, spread over %d files" % N_FILES)
+    ap.add_argument("work_dir", nargs="?", default=None,
+                    help="working directory (default: a new temp dir); "
+                    "an existing corpus under <work_dir>/in is reused")
+    ap.add_argument("--kill-after", type=int, default=8, metavar="N",
+                    help="SIGKILL the crashed arm once the signature store "
+                    "shows this many committed batches")
+    return ap.parse_args(argv)
+
+
 def main() -> None:
     import shutil
     import tempfile
 
+    args = parse_args()
+    n_docs, kill_after = args.n_docs, args.kill_after
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    work = sys.argv[2] if len(sys.argv) > 2 else tempfile.mkdtemp(
-        prefix="stream1m_"
-    )
+    work = args.work_dir or tempfile.mkdtemp(prefix="stream1m_")
     spark = session()
     in_dir = os.path.join(work, "in")
     if not os.path.isdir(in_dir):
-        gen_corpus(spark, in_dir)
+        gen_corpus(spark, in_dir, n_docs)
 
     results = {}
-    for arm, kill in (("golden", None), ("crashed", KILL_AFTER_BATCHES)):
+    for arm, kill in (("golden", None), ("crashed", kill_after)):
         dirs = {
             "in": in_dir,
             "out": os.path.join(work, arm, "out"),
@@ -275,14 +292,14 @@ def main() -> None:
         g["docs"] == g["docs_distinct"] and c["docs"] == c["docs_distinct"]
     )
     scale_tag = (
-        f"{N_DOCS // 1_000_000}M" if N_DOCS % 1_000_000 == 0
-        else str(N_DOCS)
+        f"{n_docs // 1_000_000}M" if n_docs % 1_000_000 == 0
+        else str(n_docs)
     )
     line = {
         "metric": f"stream_dedup_{scale_tag.lower()}_crash_parity",
-        "n_docs": N_DOCS,
+        "n_docs": n_docs,
         "n_files": N_FILES,
-        "kill_after_batches": KILL_AFTER_BATCHES,
+        "kill_after_batches": kill_after,
         "golden": g,
         "crashed": c,
         "identical": identical,
