@@ -66,11 +66,16 @@ def _retrieve_topk_dense(
     import numpy as np
 
     dim = store.ngram_dim
-    bk = store.buckets().toPandas()
-    chunk_ids = np.sort(bk["chunk_id"].unique())
-    col_of = np.searchsorted(chunk_ids, bk["chunk_id"].to_numpy())
+    # one Arrow collect whatever the session's Arrow setting (toPandas
+    # without it builds a Row per posting)
+    bk = store.buckets().toArrow()
+    bucket, chunk, tf = (
+        bk.column(c).to_numpy() for c in ("bucket", "chunk_id", "tf")
+    )
+    chunk_ids = np.unique(chunk)
+    col_of = np.searchsorted(chunk_ids, chunk)
     C = np.zeros((dim, chunk_ids.size), dtype=np.float64)
-    C[bk["bucket"].to_numpy(), col_of] = bk["tf"].to_numpy()
+    C[bucket, col_of] = tf
     cnorm = np.sqrt((C * C).sum(axis=0))
     bC = q.sparkSession.sparkContext.broadcast((chunk_ids, C, cnorm))
 

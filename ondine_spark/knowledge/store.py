@@ -30,6 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ondine_spark.core.partitioning import spread_small
 from ondine_spark.functions.similarity import tokens
 from ondine_spark.knowledge.chunker import fixed_chunks, semantic_chunks
 from ondine_spark.knowledge.embedders import ngram_buckets
@@ -132,8 +133,6 @@ def bm25_frame(
     # 1-row frame. Same BM25 floats per term; the OR-match sum runs in
     # fixed sorted-term order (the old groupBy summed in arrival order —
     # both land on the same 1e-6-rounded values the oracle pins).
-    from ondine_spark.core.partitioning import spread_small
-
     base = spread_small(df).select(
         F.col(id_col), tokens(F.col(text_col)).alias("_toks")
     ).withColumn("dl", F.size("_toks"))
@@ -207,8 +206,6 @@ def ngram_cosine_frame(
     # _dot / (cnorm · qnorm) division. Docs sharing no bucket (dot 0) are
     # absent, exactly like the old inner join on bucket.
     import numpy as np
-
-    from ondine_spark.core.partitioning import spread_small
 
     qv = np.zeros(dim, dtype=np.float64)
     for b_, v in counts.items():
@@ -316,9 +313,11 @@ class KnowledgeStore:
         """Load → chunk → write chunk table + both indexes (R1).
 
         One pass over the corpus; the chunker is pure window/array exprs and
-        the indexes are explode+groupBy — ingest is 3 jobs regardless of
-        corpus size (reference's batched-FFI ingest optimization is moot:
-        DataFrame writes are already batched)."""
+        the indexes are explode+groupBy, so the job count does not grow
+        with the corpus: 12 jobs for a 30-doc parquet corpus on 4 cores
+        (each adaptive stage of the chunk write and of the two concurrent
+        index writes is a job; reference's batched-FFI ingest optimization
+        is moot: DataFrame writes are already batched)."""
         chunker = fixed_chunks if chunking == "fixed" else semantic_chunks
         chunks = chunker(docs, id_col, text_col, max_tokens=max_tokens)
         src = (
@@ -346,16 +345,19 @@ class KnowledgeStore:
         self._chunks = self._terms = self._buckets = None
         self._chunk_count = None
         chunks = self.chunks()  # re-read: single source of truth
+        # the re-read is one file (one task) on a small corpus: spread it
+        # so both index builds hash the chunks on every core
+        spread = spread_small(chunks)
 
         terms = (
-            chunks.select(
+            spread.select(
                 "chunk_id", F.explode(tokens(F.col("text"))).alias("term")
             )
             .groupBy("term", "chunk_id")
             .agg(F.count(F.lit(1)).alias("tf"))
         )
         buckets = (
-            chunks.select(
+            spread.select(
                 "chunk_id",
                 F.explode(
                     ngram_buckets(F.col("text"), dim=self.ngram_dim)

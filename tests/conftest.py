@@ -1,4 +1,5 @@
 import os
+import uuid
 
 import pytest
 from pyspark.sql import SparkSession
@@ -31,3 +32,22 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def documents(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(run)`` → (Spark jobs ``run()`` launched, its result),
+    counted through a job group of its own."""
+    sc = spark.sparkContext
+
+    def count(run):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    return count

@@ -3,7 +3,6 @@
 leaves a persisted frame behind."""
 
 import sys
-import uuid
 
 import pytest
 from pyspark import cloudpickle
@@ -59,22 +58,10 @@ def kb(spark, tmp_path_factory):
     return store
 
 
-def _jobs(spark, run) -> int:
-    """Spark jobs ``run()`` launches, counted through its job group."""
-    sc = spark.sparkContext
-    group = f"chunked-plan-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        run()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("stage", [False, True], ids=["plain", "stage"])
 @pytest.mark.parametrize("batch_size", [1, 4])
-def test_fixed_jobs_per_chunk(spark, kb, tmp_path, batch_size, stage):
+def test_fixed_jobs_per_chunk(spark, kb, tmp_path, batch_size, stage,
+                              count_jobs):
     """(jobs at 6 chunks − jobs at 2 chunks) / 4 is the per-chunk cost:
     one pruned read → invoke → write job, whatever the spec. Retrieval,
     rendering and stages are per-run work; any of them rebuilt per chunk
@@ -82,7 +69,7 @@ def test_fixed_jobs_per_chunk(spark, kb, tmp_path, batch_size, stage):
 
     def run(tag, chunk_size):
         p = _build(spark, str(tmp_path / tag), batch_size, stage, kb)
-        return _jobs(spark, lambda: execute_chunked(p, chunk_size=chunk_size))
+        return count_jobs(lambda: execute_chunked(p, chunk_size=chunk_size))[0]
 
     run("warm", 30)
     six, two = run("six", N_ROWS // 6), run("two", N_ROWS // 2)

@@ -222,3 +222,55 @@ def test_kb_retrieval_chunked_matches_batch(spark, kb, tmp_path):
     assert "paris" in chunked["q00"].lower()
     assert "madrid" in chunked["q01"].lower()
     assert chunked["q02"] == "unsupported hallucinated claim xyz"
+
+
+def test_rowwise_execute_runs_retrieval_once(spark, kb, tmp_path, monkeypatch,
+                                            count_jobs):
+    """Row-wise execute() with a knowledge base and grounding pays for
+    each stage once: the dense retrieval kernel runs one task wave (the
+    invoke's spread must not run the retrieval plan ahead of the action),
+    and the whole call, result collect included, stays within its job
+    budget (17 jobs and 16 kernel tasks when it ran twice, 13 and 4 now
+    on 4 cores)."""
+    from ondine_spark import mock_client_factory
+
+    cls = type(spark.range(1))
+    runs = str(tmp_path / "kernel_tasks.txt")
+    map_in_pandas = cls.mapInPandas
+
+    def counting(self, func, schema, *a, **k):
+        if "score double, rank int" in str(schema):
+            kernel = func
+
+            def func(batches):
+                with open(runs, "a") as fh:
+                    fh.write("task\n")
+                yield from kernel(batches)
+
+        return map_in_pandas(self, func, schema, *a, **k)
+
+    monkeypatch.setattr(cls, "mapInPandas", counting)
+    path = str(tmp_path / "rows")
+    spark.createDataFrame(
+        [("q%02d" % i, "capital of %s %d" % (("France", "Spain")[i % 2], i))
+         for i in range(60)],
+        ["qid", "question"],
+    ).coalesce(1).write.parquet(path)
+    p = (
+        PipelineBuilder(spark)
+        .from_parquet(path, ["question"], id_column="qid")
+        .with_prompt("Answer: {question}", ["answer"])
+        .with_custom_llm_client(mock_client_factory())
+        .with_knowledge_base(kb.path, ["question"], top_k=2)
+        .with_grounding()
+        .build()
+    )
+    jobs, out = count_jobs(
+        lambda: p.execute().data.select("qid", "_grounding_score").collect()
+    )
+    assert len(out) == 60
+    assert all(r["_grounding_score"] is not None for r in out)
+    with open(runs) as fh:
+        tasks = len(fh.readlines())
+    assert 0 < tasks <= spark.sparkContext.defaultParallelism
+    assert jobs <= 13, jobs
