@@ -23,12 +23,14 @@ Spark-first redesign:
 
 from __future__ import annotations
 
+import json
 import logging
 import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ondine_spark.core.partitioning import spread_small
 from ondine_spark.functions.similarity import tokens
@@ -51,8 +53,6 @@ def _meta_fs_path(spark: SparkSession, path: str):
 
 
 def _read_store_meta(spark: SparkSession, path: str) -> dict | None:
-    import json
-
     try:
         fs, p = _meta_fs_path(spark, path)
         if not fs.exists(p):
@@ -72,8 +72,6 @@ def _read_store_meta(spark: SparkSession, path: str) -> dict | None:
 
 
 def _write_store_meta(spark: SparkSession, path: str, meta: dict) -> None:
-    import json
-
     fs, p = _meta_fs_path(spark, path)
     out = fs.create(p, True)
     try:
@@ -282,6 +280,11 @@ class KnowledgeStore:
         # answer.
         meta = _read_store_meta(spark, path)
         meta_dim = meta.get("ngram_dim") if meta else None
+        # the tables' schemas as ingest wrote them: reading with a given
+        # schema skips parquet's schema-inference job, which a fresh store
+        # (one per pipeline plan build) otherwise pays per table. A store
+        # written without them infers as before.
+        self._schemas = (meta or {}).get("schemas") or {}
         if ngram_dim is None:
             self.ngram_dim = meta_dim if meta_dim is not None else 2048
         else:
@@ -342,8 +345,10 @@ class KnowledgeStore:
         )
         chunks.write.mode(mode).parquet(os.path.join(self.path, "chunks"))
         # drop memoized readers — a re-ingest overwrote their file listings
+        # — and the recorded schemas, so the re-read infers what was written
         self._chunks = self._terms = self._buckets = None
         self._chunk_count = None
+        self._schemas = {}
         chunks = self.chunks()  # re-read: single source of truth
         # the re-read is one file (one task) on a small corpus: spread it
         # so both index builds hash the chunks on every core
@@ -401,17 +406,33 @@ class KnowledgeStore:
             )
         if errs:
             raise errs[0]
-        _write_store_meta(
-            self.spark, self.path, {"ngram_dim": self.ngram_dim, "version": 1}
-        )
         self._terms = self._buckets = None
+        # nullable, as a parquet read reports every column
+        self._schemas = {
+            name: T.StructType(
+                [T.StructField(f.name, f.dataType) for f in df.schema]
+            ).json()
+            for name, df in (
+                ("chunks", chunks), ("terms", terms), ("buckets", buckets)
+            )
+        }
+        _write_store_meta(
+            self.spark, self.path,
+            {"ngram_dim": self.ngram_dim, "version": 1,
+             "schemas": self._schemas},
+        )
         return chunks
+
+    def _read(self, name: str) -> DataFrame:
+        reader = self.spark.read
+        schema = self._schemas.get(name)
+        if schema:
+            reader = reader.schema(T.StructType.fromJson(json.loads(schema)))
+        return reader.parquet(os.path.join(self.path, name))
 
     def chunks(self) -> DataFrame:
         if self._chunks is None:
-            self._chunks = self.spark.read.parquet(
-                os.path.join(self.path, "chunks")
-            )
+            self._chunks = self._read("chunks")
         return self._chunks
 
     def chunk_count(self) -> int:
@@ -442,16 +463,12 @@ class KnowledgeStore:
 
     def terms(self) -> DataFrame:
         if self._terms is None:
-            self._terms = self.spark.read.parquet(
-                os.path.join(self.path, "terms")
-            )
+            self._terms = self._read("terms")
         return self._terms
 
     def buckets(self) -> DataFrame:
         if self._buckets is None:
-            self._buckets = self.spark.read.parquet(
-                os.path.join(self.path, "buckets")
-            )
+            self._buckets = self._read("buckets")
         return self._buckets
 
     # ------------------------------------------------------------ scoring

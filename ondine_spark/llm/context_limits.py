@@ -55,13 +55,20 @@ def validate_batch_size(
     """Check ceil(avg prompt tokens)×batch_size against the model window.
 
     Returns {'ok', 'est_batch_tokens', 'limit', 'max_batch_size'}; raises
-    ValueError when the configured batch cannot fit."""
-    row = (
-        prompts.limit(sample)
-        .agg(F.avg(estimate_tokens_expr(F.col(prompt_col))).alias("avg"))
-        .collect()[0]
-    )
-    avg_tokens = float(row["avg"] or 0.0)
+    ValueError when the configured batch cannot fit.
+
+    The ≤ ``sample`` estimates are collected and averaged on the driver:
+    a ``CollectLimit`` reads the first partition's rows in one job, where
+    an aggregate over the limit adds a single-partition exchange (a second
+    job under AQE)."""
+    est_tokens = [
+        r[0]
+        for r in prompts.select(estimate_tokens_expr(F.col(prompt_col)))
+        .limit(sample)
+        .collect()
+        if r[0] is not None
+    ]
+    avg_tokens = sum(est_tokens) / len(est_tokens) if est_tokens else 0.0
     per_item = avg_tokens + PER_ITEM_OVERHEAD_TOKENS
     est = int(per_item * batch_size + BATCH_FORMAT_OVERHEAD_TOKENS)
     limit = int(context_limit(model) * safety_margin)

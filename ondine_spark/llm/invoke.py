@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ondine_spark.core.specs import SKIPPED, ErrorPolicy, LLMSpec, ProcessingSpec
 from ondine_spark.llm.client import FatalLLMError, LLMResult, TransientLLMError
+from ondine_spark.operators.batching import SPLIT_SCHEMA, split_batch_rows
 
 from pyspark.sql import types as T
 
@@ -239,11 +240,20 @@ def invoke_llm(
     call_counter=None,
     call_events=None,
     cost_acc=None,
+    per_row: bool = False,
 ) -> DataFrame:
     """Append response columns to ``df`` by invoking the LLM per row.
 
     Output columns: response_text, tokens_in, tokens_out, resp_model,
     cost (decimal(38,18)), latency_ms, error.
+
+    ``per_row`` — ``df`` is a mega-batch frame (``_batch_id``,
+    ``_row_ids``, prompt): the worker that made each call splits its
+    answer with :func:`~ondine_spark.operators.batching.split_batch_rows`
+    and returns :func:`~ondine_spark.operators.batching.disaggregate_batches`'
+    per-row frame instead, so the batch never crosses back to the JVM
+    and the split runs no second Python worker. The default output stays
+    batch-level (one row per prompt, input columns kept).
 
     ``call_counter`` — optional Spark accumulator incremented once per API
     call actually issued (BASELINE.md's "API calls = ceil(N/batch_size)"
@@ -280,7 +290,10 @@ def invoke_llm(
 
     factory_key = uuid.uuid4().hex
 
-    out_schema = T.StructType(list(df.schema.fields) + RESPONSE_FIELDS)
+    out_schema = (
+        SPLIT_SCHEMA if per_row
+        else T.StructType(list(df.schema.fields) + RESPONSE_FIELDS)
+    )
 
     adaptive = proc.adaptive_concurrency
     event_every = proc.call_event_sample if call_events is not None else None
@@ -449,7 +462,8 @@ def invoke_llm(
                     ],
                     index=pdf.index,
                 )
-                yield pd.concat([pdf, res], axis=1)
+                out = pd.concat([pdf, res], axis=1)
+                yield split_batch_rows(out, "cost_str") if per_row else out
             if cost_acc is not None:
                 # keyed like the call events: (epoch, partition) — a
                 # retried/speculative attempt recomputes the IDENTICAL sum
@@ -469,6 +483,8 @@ def invoke_llm(
             pool.shutdown(wait=False)
 
     out = df.mapInPandas(run_partition, schema=out_schema)
+    if per_row:
+        return out.withColumn("cost", F.col("cost").cast("decimal(38,18)"))
     return out.withColumn("cost", F.col("cost_str").cast("decimal(38,18)")).drop(
         "cost_str"
     )

@@ -15,20 +15,21 @@ Spark-first design:
   → ``array_sort`` → ``to_json`` → ``concat`` (whole-stage codegen).
 - Disaggregation ports the reference's fallback-heavy parser (markdown
   fences, id- vs position-based matching, partial-parse padding) into one
-  Arrow-batched pandas UDF → ``explode`` → per-row responses.
+  pandas kernel, :func:`split_batch_rows`, that turns answered batch rows
+  into per-row responses. The invoke runs it in the same Python worker
+  that made the calls, so a mega-batch crosses the JVM↔Python boundary
+  once and the mega-prompt never travels back to the JVM.
 """
 
 from __future__ import annotations
 
 import json
 import re
-from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from ondine_spark.sources.readers import ROW_ID
 
@@ -310,60 +311,67 @@ def _result_str(v) -> str | None:
     return json.dumps(v, separators=(",", ":"))
 
 
-_PARSE_UDFS: "weakref.WeakKeyDictionary" = None  # type: ignore[assignment]
+#: the per-row frame every split returns, in this order; ``cost`` is the
+#: exact decimal string here and ``decimal(38,18)`` once cast JVM-side
+SPLIT_SCHEMA = (
+    f"{BATCH_ID} long, {ROW_ID} string, response_text string, "
+    "tokens_in int, tokens_out int, cost string, latency_ms double, "
+    "resp_model string, error string"
+)
 
 
-def _batch_parse_udf(session):
-    """One pandas UDF object per SparkSession, created lazily: the UDF is
-    stateless (pure ``parse_batch_response``), and re-creating it per
-    disaggregate call re-pickled and re-registered the function on every
-    chunk of a chunked run. Keyed WEAKLY by session so a stopped session's
-    stale ``_judf`` handle is never served to its successor."""
-    global _PARSE_UDFS
-    if _PARSE_UDFS is None:
-        import weakref
+def split_batch_rows(pdf: pd.DataFrame, cost_col: str = "cost") -> pd.DataFrame:
+    """A2 kernel: answered batch rows (``BATCH_ID``, ``_row_ids``,
+    ``response_text``, tokens, ``cost_col``, ``latency_ms``,
+    ``resp_model``, ``error``) → one row per member, in ``SPLIT_SCHEMA``
+    order. The batch's tokens and cost go to its first row (cost NULL on
+    the rest, so run totals stay exact, like the reference attributing
+    cost per API call); latency, model and error are copied to every
+    row. Cost values pass through untouched."""
+    n = np.array(
+        [0 if ids is None else len(ids) for ids in pdf["_row_ids"]],
+        dtype=np.int64,
+    )
+    take = np.repeat(np.arange(len(pdf)), n)
+    first = np.zeros(len(take), dtype=bool)
+    first[(np.cumsum(n) - n)[n > 0]] = True
 
-        _PARSE_UDFS = weakref.WeakKeyDictionary()
-    udf = _PARSE_UDFS.get(session)
-    if udf is None:
+    def rep(col):
+        return pdf[col].to_numpy()[take]
 
-        @F.pandas_udf(T.ArrayType(T.StringType()))
-        def parse(resp: pd.Series, n: pd.Series) -> pd.Series:
-            return pd.Series(
-                [parse_batch_response(r, int(k)) for r, k in zip(resp, n)]
-            )
+    def first_only(col, fill):
+        v = rep(col)
+        v[~first] = fill
+        return v
 
-        _PARSE_UDFS[session] = parse
-        udf = parse
-    return udf
+    texts = [
+        r for resp, k in zip(pdf["response_text"], n)
+        for r in parse_batch_response(resp, int(k))
+    ]
+    return pd.DataFrame({
+        BATCH_ID: rep(BATCH_ID),
+        ROW_ID: [r for ids in pdf["_row_ids"] if ids is not None for r in ids],
+        "response_text": texts,
+        "tokens_in": first_only("tokens_in", 0),
+        "tokens_out": first_only("tokens_out", 0),
+        "cost": first_only(cost_col, None),
+        "latency_ms": rep("latency_ms"),
+        "resp_model": rep("resp_model"),
+        "error": rep("error"),
+    })
 
 
 def disaggregate_batches(batch_df: DataFrame) -> DataFrame:
-    """A2: one batch row (``_row_ids``, ``response_text``, token/cost cols)
-    → per-row frame (``_row_id``, ``response_text``) with the batch's
-    tokens/cost attributed to its first row (run totals stay exact, like the
-    reference attributing cost per API call)."""
-    parse = _batch_parse_udf(batch_df.sparkSession)
-
-    # selectExpr keeps plan construction to a handful of py4j calls (the
-    # Column-chain form was ~515 round trips per plan build — paid per
-    # chunk in chunked mode); the pandas UDF column itself can't live in
-    # a SQL string, so it's attached with one withColumn first.
-    n = F.expr("size(_row_ids)")
-    parsed = batch_df.withColumn("_results", parse(F.col("response_text"), n))
-    exploded = parsed.selectExpr(
-        BATCH_ID, "error", "tokens_in", "tokens_out", "cost", "latency_ms",
-        "resp_model",
-        "posexplode(arrays_zip(_row_ids, _results)) AS (_pos, _z)",
+    """A2 over an answered batch frame (``_row_ids``, ``response_text``,
+    token/cost cols) → per-row frame through :func:`split_batch_rows` in
+    one ``mapInPandas``. The invoke itself splits in its own worker
+    (``invoke_llm(per_row=True)``); this serves the frames that arrive
+    batch-level: memoized responses and provider-batch results."""
+    src = batch_df.selectExpr(
+        BATCH_ID, "_row_ids", "response_text", "tokens_in", "tokens_out",
+        "CAST(cost AS STRING) AS cost", "latency_ms", "resp_model", "error",
     )
-    # arrays_zip names its struct fields after the zipped columns
-    # (_row_ids, _results) — static, so no schema-analysis round-trip
-    return exploded.selectExpr(
-        BATCH_ID,
-        f"_z._row_ids AS {ROW_ID}",
-        "_z._results AS response_text",
-        "IF(_pos = 0, tokens_in, 0) AS tokens_in",
-        "IF(_pos = 0, tokens_out, 0) AS tokens_out",
-        "IF(_pos = 0, cost, CAST(NULL AS decimal(38,18))) AS cost",
-        "latency_ms", "resp_model", "error",
-    )
+    return src.mapInPandas(
+        lambda batches: (split_batch_rows(pdf) for pdf in batches),
+        SPLIT_SCHEMA,
+    ).withColumn("cost", F.col("cost").cast("decimal(38,18)"))

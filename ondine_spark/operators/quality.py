@@ -10,7 +10,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 from decimal import Decimal
-from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -109,9 +108,22 @@ def profile_table(
     return row.select(F.explode(per_col).alias("_p")).select("_p.*")
 
 
-def _cell_is_empty(c):
-    col = F.col(c).cast("string")
-    return col.isNull() | (F.trim(col) == "") | (col == SKIPPED)
+_SKIPPED_SQL = "'" + SKIPPED.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _ident(c: str) -> str:
+    return "`" + c.replace("`", "``") + "`"
+
+
+def _empty_sql(c: str) -> str:
+    """SQL for "cell ``c`` failed": null, blank or ``SKIPPED``. Never
+    NULL itself (the ``IS NULL`` arm decides every null cell)."""
+    col = f"CAST({_ident(c)} AS STRING)"
+    return f"({col} IS NULL OR trim({col}) = '' OR {col} = {_SKIPPED_SQL})"
+
+
+def _count_sql(cond: str) -> str:
+    return f"sum(CASE WHEN {cond} THEN 1 ELSE 0 END)"
 
 
 def quality_report(df: DataFrame, output_cols: list[str]) -> QualityReport:
@@ -138,44 +150,39 @@ def run_stats_and_quality(
     folded into a single agg; the third return value is the count of rows
     whose EVERY output cell failed, letting the caller skip the auto-retry
     machinery without a probe job when it is zero.
+
+    The aggregate is one ``selectExpr`` of parsed SQL strings: built from
+    Column calls it was ~60 py4j round trips (0.10-0.13 s of driver time
+    per ``execute()`` for two output columns).
     """
     cols = set(df.columns)
-    aggs = [F.count(F.lit(1)).alias("n")]
+    aggs = ["count(1) AS n"]
     if "cost" in cols:
-        aggs.append(F.sum("cost").alias("cost"))
+        aggs.append("sum(cost) AS cost")
     if "tokens_in" in cols:
-        aggs.append(F.sum("tokens_in").alias("tin"))
-        aggs.append(F.sum("tokens_out").alias("tout"))
-    for c in output_cols:
-        col = F.col(c).cast("string")
-        aggs.append(F.sum(F.when(col.isNull(), 1).otherwise(0)).alias(f"null_{c}"))
-        aggs.append(
-            F.sum(F.when(col.isNotNull() & (F.trim(col) == ""), 1).otherwise(0)).alias(
-                f"empty_{c}"
-            )
-        )
-        aggs.append(F.sum(F.when(col == SKIPPED, 1).otherwise(0)).alias(f"skip_{c}"))
+        aggs += ["sum(tokens_in) AS tin", "sum(tokens_out) AS tout"]
+    for i, c in enumerate(output_cols):
+        col = f"CAST({_ident(c)} AS STRING)"
+        aggs += [
+            _count_sql(f"{col} IS NULL") + f" AS null_{i}",
+            _count_sql(f"{col} IS NOT NULL AND trim({col}) = ''")
+            + f" AS empty_{i}",
+            _count_sql(f"{col} = {_SKIPPED_SQL}") + f" AS skip_{i}",
+        ]
     if output_cols:
-        all_valid = reduce(
-            lambda a, b: a & b, [~_cell_is_empty(c) for c in output_cols]
-        )
-        all_failed = reduce(
-            lambda a, b: a & b, [_cell_is_empty(c) for c in output_cols]
-        )
-        aggs.append(F.sum(F.when(all_valid, 1).otherwise(0)).alias("valid"))
-        aggs.append(F.sum(F.when(all_failed, 1).otherwise(0)).alias("failed"))
+        empty = [_empty_sql(c) for c in output_cols]
+        aggs += [
+            _count_sql(" AND ".join(f"NOT {e}" for e in empty)) + " AS valid",
+            _count_sql(" AND ".join(empty)) + " AS failed",
+        ]
     else:
         # no quality columns: every row is vacuously valid, none failed
-        aggs.append(F.count(F.lit(1)).alias("valid"))
-        aggs.append(F.sum(F.lit(0)).alias("failed"))
+        aggs += ["count(1) AS valid", "sum(0) AS failed"]
     if "error" in cols:
         # ONE sample cause, folded into the same pass: when every row
         # failed, "what went wrong" should not require a second job
-        aggs.append(
-            F.first(F.col("error"), ignorenulls=True).alias("sample_error")
-        )
-    row = df.agg(*aggs).collect()[0]
-    d = row.asDict()
+        aggs.append("first(error, true) AS sample_error")
+    d = df.selectExpr(*aggs).collect()[0].asDict()
     n = d["n"]
     stats = RunStats(
         rows=n,
@@ -183,12 +190,13 @@ def run_stats_and_quality(
         tokens_in=int(d.get("tin") or 0),
         tokens_out=int(d.get("tout") or 0),
     )
+    idx = range(len(output_cols))
     report = QualityReport(
         total_rows=n,
         valid_rows=d["valid"] or 0,
-        null_cells=sum(d[f"null_{c}"] or 0 for c in output_cols),
-        empty_cells=sum(d[f"empty_{c}"] or 0 for c in output_cols),
-        skipped_cells=sum(d[f"skip_{c}"] or 0 for c in output_cols),
+        null_cells=sum(d[f"null_{i}"] or 0 for i in idx),
+        empty_cells=sum(d[f"empty_{i}"] or 0 for i in idx),
+        skipped_cells=sum(d[f"skip_{i}"] or 0 for i in idx),
         success_rate=((d["valid"] or 0) / n) if n else 0.0,
         sample_error=d.get("sample_error"),
     )
@@ -198,8 +206,7 @@ def run_stats_and_quality(
 def failed_rows(df: DataFrame, output_cols: list[str]) -> DataFrame:
     """P6: rows where ALL output cells are null/empty/skipped
     (reference: ondine/api/pipeline.py:1794-1823) — the auto-retry set."""
-    cond = reduce(lambda a, b: a & b, [_cell_is_empty(c) for c in output_cols])
-    return df.filter(cond)
+    return df.filter(" AND ".join(_empty_sql(c) for c in output_cols))
 
 
 def assert_some_output(report: QualityReport, stats: RunStats) -> None:

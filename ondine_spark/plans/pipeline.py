@@ -4,10 +4,11 @@ The reference hand-orders an imperative stage list
 (reference: ondine/api/pipeline.py:626-927). Here the spec compiles to ONE
 declarative DataFrame chain and Catalyst owns physical planning — column
 pruning, filter pushdown into the scan, and whole-stage codegen around the
-two Python hops (LLM invoke; JSON parse). Stage order preserved:
+two Python hops (LLM invoke, which also splits mega-batch answers into
+rows; JSON parse). Stage order preserved:
 
   load → preprocess? → context? → resume-filter? → prompt → after_prompt? →
-  [aggregate → invoke → disaggregate | invoke] → parse → after_parse? →
+  [aggregate → invoke + split | invoke] → parse → after_parse? →
   verify? → write?
 
 Unbatched runs never join: output columns are computed in place on the
@@ -155,7 +156,7 @@ class Pipeline:
                 df if staged else self._with_prompt(df),
                 spec.prompt.batch_size, persist=False,
             )
-            responses = disaggregate_batches(self._invoke(batches))
+            responses = self._invoke(batches, per_row=True)
             out = df.drop("prompt").join(responses, on=ROW_ID, how="left")
         else:
             # The per-row invoke inherits the INPUT's partitioning — a
@@ -267,8 +268,14 @@ class Pipeline:
                 self.spark.sparkContext
             )
 
-    def _invoke(self, frame: DataFrame) -> DataFrame:
+    def _invoke(self, frame: DataFrame, per_row: bool = False) -> DataFrame:
         """LLM invocation with optional cross-run memoization.
+
+        ``per_row`` — ``frame`` holds mega-batches and the caller wants
+        per-row responses (:func:`disaggregate_batches`' frame). Without a
+        memo the invoke worker splits each answer itself; the memo keeps
+        batch-level text under the mega-prompt key, so its output is
+        split after the memo join instead.
 
         Without a memo path this is a straight ``invoke_llm``. With one
         (with_response_memo / with_disk_cache), the to-invoke frame is
@@ -287,7 +294,9 @@ class Pipeline:
         )
         memo_path = spec.processing.memo_path
         if not memo_path:
-            return invoke_llm(frame, spec.llm, spec.processing, **kw)
+            return invoke_llm(
+                frame, spec.llm, spec.processing, per_row=per_row, **kw
+            )
         from pyspark import StorageLevel
 
         from ondine_spark.llm.memo import (
@@ -328,7 +337,8 @@ class Pipeline:
             )
         )
         out = invoked if hits is None else invoked.unionByName(hits)
-        return out.drop(MEMO_KEY)
+        out = out.drop(MEMO_KEY)
+        return disaggregate_batches(out) if per_row else out
 
     def flush_memo(self) -> None:
         """Append this run's fresh responses to the prompt-keyed memo.

@@ -30,7 +30,6 @@ from pyspark.sql.types import StructType
 
 from ondine_spark.operators.batching import (
     aggregate_batches_per_chunk,
-    disaggregate_batches,
     with_global_index,
 )
 from ondine_spark.plans.pipeline import Pipeline, public_frame
@@ -125,8 +124,9 @@ def iter_chunks(
     request step), a global index, the pre-spend batch-size check when
     batched, and one spill of the requests (mega-prompt batch rows, or
     ``(_row_id, prompt)`` rows at batch 1). Each chunk is then one job:
-    pruned read of its requests → invoke → disaggregate when batched →
-    durable append to the response cache.
+    pruned read of its requests → invoke (whose worker splits batch
+    answers into rows when batched) → durable append to the response
+    cache.
 
     CONSUMER-CRASH CONTRACT: the chunk commit (the durable response-cache
     append, which happens BEFORE the yield) is the single source of
@@ -320,11 +320,12 @@ def iter_chunks(
             # contiguous slice of the global index, so it is
             # min(chunk_size, n_rows - cid*chunk_size) by construction
             # (the response frame is row-preserving: error-policy rows are
-            # written as [SKIPPED], the disaggregator is 1:1 per input
-            # row). The Decimal cost rides an (epoch, partition)-keyed
-            # accumulator filled by the invoke stage — retry/speculation
-            # safe because both attempts of a partition deliver the
-            # IDENTICAL sum under the same key and the drain keeps one
+            # written as [SKIPPED], and the invoke worker's batch split
+            # yields one row per member row). The Decimal cost rides an
+            # (epoch, partition)-keyed accumulator filled by the invoke
+            # stage — retry/speculation safe because both attempts of a
+            # partition deliver the IDENTICAL sum under the same key and
+            # the drain keeps one
             # (same scheme as the sampled call events). The old shape paid
             # a second driver-blocking job per chunk (an aggregate over a
             # persisted responses frame) — ~0.2 s/chunk of fixed cost at
@@ -335,14 +336,15 @@ def iter_chunks(
             # serialize (measured on 4.1.2 — one Observation broke every
             # subsequent ML transform on the shared session).
             n_chunk_rows = int(min(chunk_size, n_rows - cid * chunk_size))
-            # the disaggregator is 1:N row-preserving and the durable write
-            # keeps _row_id + response columns only, so no base ⋈ responses
-            # join ever happens in chunked mode
+            # batched chunks come back per-row from the invoke worker that
+            # made the calls (it splits each answer), so the chunk's plan
+            # has one Python stage; the split is 1:N row-preserving and the
+            # durable write keeps _row_id + response columns only, so no
+            # base ⋈ responses join ever happens in chunked mode
             responses = pipeline._invoke(
-                spark.read.schema(spill_schema).parquet(f"{spill}/_chunk={cid}")
+                spark.read.schema(spill_schema).parquet(f"{spill}/_chunk={cid}"),
+                per_row=batch_size > 1,
             )
-            if batch_size > 1:
-                responses = disaggregate_batches(responses)
             # commit this chunk's responses durably BEFORE touching the next
             write_responses(responses, ckpt, sid)
             cost = _drain_cost(pipeline._cost_acc)

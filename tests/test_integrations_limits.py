@@ -23,6 +23,28 @@ def test_context_limit_validation(spark):
         validate_batch_size(prompts, batch_size=500, model="deepseek-chat")
 
 
+def test_batch_size_check_is_one_job(spark, tmp_path, count_jobs):
+    """The ≤ 200-row sample is collected and averaged on the driver: one
+    job over the first partition (an aggregate over the limit added a
+    single-partition exchange, a second job under AQE)."""
+    from ondine_spark.llm.context_limits import validate_batch_size
+
+    spark.createDataFrame(
+        [(i, "word " * (i % 7 + 1)) for i in range(400)], ["id", "prompt"]
+    ).coalesce(1).write.parquet(str(tmp_path / "prompts"))
+    prompts = spark.read.parquet(str(tmp_path / "prompts"))
+    jobs, ok = count_jobs(
+        lambda: validate_batch_size(prompts, batch_size=10, model="mock")
+    )
+    assert jobs == 1
+    # first 200 rows: words cycle 1..7 → ceil(words * 1.3) averaged, + 12
+    est = [-(-(i % 7 + 1) * 13 // 10) for i in range(200)]
+    per_item = sum(est) / len(est) + 12
+    assert ok["est_batch_tokens"] == int(per_item * 10 + 160)
+    with pytest.raises(ValueError, match="exceeds"):
+        validate_batch_size(prompts, batch_size=20_000, model="deepseek-chat")
+
+
 def _suffix(df):
     return df.withColumn("prompt", F.concat("prompt", F.lit(" Be brief.")))
 

@@ -313,6 +313,49 @@ def test_store_without_meta_defaults(spark, docs_df, tmp_path_factory):
     assert KnowledgeStore(spark, path, ngram_dim=4096).ngram_dim == 4096
 
 
+def test_reopened_store_reads_tables_without_jobs(
+    spark, store, count_jobs
+):
+    """Ingest records the tables' schemas next to ngram_dim, so a fresh
+    store (one per pipeline plan build) reads chunks, terms and buckets
+    without a parquet schema-inference job each, and reads the same
+    rows."""
+    reopened = KnowledgeStore(spark, store.path)
+    jobs, frames = count_jobs(
+        lambda: (reopened.chunks(), reopened.terms(), reopened.buckets())
+    )
+    assert jobs == 0
+    for got, name in zip(frames, ("chunks", "terms", "buckets")):
+        inferred = spark.read.parquet(f"{store.path}/{name}")
+        assert got.dtypes == inferred.dtypes
+        assert sorted(got.collect()) == sorted(inferred.collect())
+
+
+def test_store_meta_without_schemas_still_opens(
+    spark, docs_df, tmp_path_factory
+):
+    """A store whose sidecar predates the recorded schemas (ngram_dim
+    only) opens and reads its tables by inference."""
+    import json as _json
+    import os as _os
+
+    path = str(tmp_path_factory.mktemp("kb_v1meta"))
+    st = KnowledgeStore(spark, path, ngram_dim=4096)
+    st.ingest(docs_df, "doc_id", "text", max_tokens=12)
+    with open(_os.path.join(path, "store_meta.json"), "w") as fh:
+        _json.dump({"ngram_dim": 4096, "version": 1}, fh)
+    crc = _os.path.join(path, ".store_meta.json.crc")  # Hadoop checksum
+    if _os.path.exists(crc):
+        _os.remove(crc)
+    old = KnowledgeStore(spark, path)
+    assert old.ngram_dim == 4096
+    assert old.chunks().count() == st.chunks().count()
+    q = "Catalyst optimizes the plan"
+    assert [r["chunk_id"] for r in old.search(q, top_k=2).collect()] == [
+        r["chunk_id"] for r in st.search(q, top_k=2).collect()
+    ]
+
+
 def test_ingest_raises_first_and_logs_second_index_error(
     spark, docs_df, tmp_path_factory, caplog
 ):
