@@ -36,6 +36,9 @@ _TOKS = "len(regexp_extract_all({col}, '\\S+'))"
 # 60-bit md5 prefix as BIGINT — portable hash contract (see
 # ondine_spark/functions/similarity.py:md5_long)
 _MD5L = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
+# the winnow_fps / winnow_pairs gates' parameters, shared with their
+# oracles and tools/oracle_sharded.py (winnow_fps reads k and w)
+_WINNOW = {"k": 12, "w": 8, "min_shared": 10, "max_df": 20}
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -463,7 +466,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # whole tree per field after projection collapse
         from ondine_spark.core.partitioning import spread_small
 
-        s = let_bind(winnow_fingerprints(F.col("text"), 12, 8), summarize)
+        s = let_bind(
+            winnow_fingerprints(F.col("text"), _WINNOW["k"], _WINNOW["w"]),
+            summarize,
+        )
         # spread (r8): the md5 winnow chain is the CPU stage and the
         # single-file local scan otherwise runs it on one core —
         # measured 4.9 s -> sub-second at sf0.1
@@ -485,12 +491,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         the join keeps both truths visible per row.)"""
         from ondine_spark.operators.dedup import winnow_overlap_pairs
 
-        kw = dict(k=12, w=8, min_shared=10, max_df=20)
         expr = winnow_overlap_pairs(
-            _docs(spark, sf_dir), "doc_id", "text", impl="expr", **kw
+            _docs(spark, sf_dir), "doc_id", "text", impl="expr", **_WINNOW
         ).select("a", "b", F.col("shared").alias("shared_expr"))
         fast = winnow_overlap_pairs(
-            _docs(spark, sf_dir), "doc_id", "text", impl="arrow", **kw
+            _docs(spark, sf_dir), "doc_id", "text", impl="arrow", **_WINNOW
         ).select("a", "b", F.col("shared").alias("shared_fast"))
         return expr.join(fast, on=["a", "b"], how="full").select(
             "a", "b",
@@ -848,41 +853,27 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # `Window.orderBy` with no partition key moved EVERY row through
         # one SinglePartition exchange + sort — serial at any scale.
         # Same batch ids now come from range partitioning on the sort
-        # key (globally ordered across partitions), per-partition row
-        # counts prefix-summed on the driver (one tiny job over the
-        # persisted partitions), and rank = partition offset + local
-        # index from monotonically_increasing_id (pid·2³³ + i with i
-        # sequential in partition order, which sortWithinPartitions
-        # pins). (l_orderkey, l_linenumber) is a unique key, so the
-        # global order — and every batch boundary — is identical to the
-        # single-partition window's.
+        # key (globally ordered across partitions, pinned within each
+        # partition by sortWithinPartitions) and the engine's global
+        # index (operators/batching.py:with_global_index — per-partition
+        # counts prefix-summed on the driver, rank = partition offset +
+        # local position). (l_orderkey, l_linenumber) is a unique key, so
+        # the global order — and every batch boundary — is identical to
+        # the single-partition window's.
+        from ondine_spark.operators.batching import with_global_index
+
         li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
             "l_orderkey", "l_linenumber", "l_quantity"
         )
         n_parts = int(
             spark.conf.get("spark.sql.shuffle.partitions", "32")
         )
-        parts = (
-            li.repartitionByRange(n_parts, "l_orderkey", "l_linenumber")
-            .sortWithinPartitions("l_orderkey", "l_linenumber")
-            .persist()
+        parts = li.repartitionByRange(
+            n_parts, "l_orderkey", "l_linenumber"
+        ).sortWithinPartitions("l_orderkey", "l_linenumber")
+        chunked = with_global_index(parts, "rank0").withColumn(
+            "batch_id", F.floor(F.col("rank0") / 1000)
         )
-        cnts = {
-            r["_p"]: r["count"]
-            for r in parts.groupBy(
-                F.spark_partition_id().alias("_p")
-            ).count().collect()
-        }
-        offs, run = [], 0
-        for p in range(n_parts):
-            offs.append(run)
-            run += cnts.get(p, 0)
-        off_arr = F.array(*[F.lit(int(o)).cast("long") for o in offs])
-        mid = F.monotonically_increasing_id()
-        pid = F.shiftrightunsigned(mid, 33).cast("int")
-        local = mid.bitwiseAND(F.lit((1 << 33) - 1))
-        rank0 = F.element_at(off_arr, pid + 1) + local  # = row_number - 1
-        chunked = parts.withColumn("batch_id", F.floor(rank0 / 1000))
         return chunked.groupBy("batch_id").agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("l_quantity").cast("decimal(18,6)")).cast("double").alias("sum_qty"),
@@ -1790,67 +1781,21 @@ def oracle_sql() -> dict[str, str]:
             ) f ON l.doc_id = f.doc_id
         """,
         "winnow_fps": f"""
-            WITH g AS (
-              SELECT doc_id, lower(text) AS s,
-                     greatest(length(text) - 11, 0) AS p
-              FROM documents
-            ), h AS (
-              SELECT doc_id, p,
-                     list_transform(generate_series(1, p),
-                       i -> {_MD5L.format(x="substr(s, i::INT, 12)")}) AS hs
-              FROM g WHERE p >= 1
-            ), fps AS (
-              SELECT doc_id,
-                CASE WHEN p >= 8
-                  THEN list_distinct(list_transform(
-                         generate_series(1, p - 7),
-                         j -> list_min(hs[j:j+7])))
-                  ELSE [list_min(hs)] END AS fps
-              FROM h
-            )
+            WITH {_winnow_fps_ctes("md5", _WINNOW["k"], _WINNOW["w"])}
             SELECT d.doc_id,
-                   coalesce(len(f.fps), 0)::BIGINT AS n_fps,
-                   coalesce(list_sum(list_transform(f.fps,
-                     x -> x % 1000000007)), 0)::BIGINT AS fp_sum
-            FROM documents d LEFT JOIN fps f USING (doc_id)
+                   coalesce(f.n_fps, 0)::BIGINT AS n_fps,
+                   coalesce(f.fp_sum, 0)::BIGINT AS fp_sum
+            FROM documents d LEFT JOIN (
+              SELECT doc_id, count(*) AS n_fps,
+                     sum(fp % 1000000007) AS fp_sum
+              FROM e GROUP BY doc_id
+            ) f USING (doc_id)
         """,
         # both winnowing impls in one gate: the md5 expression path and
         # the Arrow polynomial kernel, each replayed exactly, full-joined
         "winnow_pairs": f"""
-            WITH ex AS (
-              WITH g AS (
-                SELECT doc_id, lower(text) AS s,
-                       greatest(length(text) - 11, 0) AS p
-                FROM documents
-              ), h AS (
-                SELECT doc_id, p,
-                       list_transform(generate_series(1, p),
-                         i -> {_MD5L.format(x="substr(s, i::INT, 12)")}) AS hs
-                FROM g WHERE p >= 1
-              ), fps AS (
-                SELECT doc_id,
-                  CASE WHEN p >= 8
-                    THEN list_distinct(list_transform(
-                           generate_series(1, p - 7),
-                           j -> list_min(hs[j:j+7])))
-                    ELSE [list_min(hs)] END AS fps
-                FROM h
-              ), e AS (
-                SELECT doc_id, unnest(fps) AS fp FROM fps
-              ), fdf AS (
-                SELECT fp, count(*) AS dfc FROM e GROUP BY fp
-              ), kept AS (
-                SELECT e.doc_id, e.fp FROM e JOIN fdf USING (fp)
-                WHERE fdf.dfc <= 20
-              )
-              SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS shared
-              FROM kept a JOIN kept b
-                ON a.fp = b.fp AND a.doc_id < b.doc_id
-              GROUP BY 1, 2
-              HAVING count(*) >= 10
-            ), fa AS (
-              {_winnow_poly_sql(k=12, w=8, min_shared=10, max_df=20)}
-            )
+            WITH ex AS ({_winnow_pairs_sql("md5", **_WINNOW)}),
+            fa AS ({_winnow_pairs_sql("poly", **_WINNOW)})
             SELECT coalesce(ex.a, fa.a) AS a, coalesce(ex.b, fa.b) AS b,
                    coalesce(ex.shared, 0)::BIGINT AS shared_expr,
                    coalesce(fa.shared, 0)::BIGINT AS shared_fast
@@ -2380,37 +2325,56 @@ def oracle_sql() -> dict[str, str]:
 # generated oracle SQL for the hash-based operators
 
 
-def _winnow_poly_sql(k: int, w: int, min_shared: int, max_df: int) -> str:
-    """Exact oracle for the Arrow winnowing kernel
-    (operators/dedup.py:_winnow_arrow_fn): replay its two 31-bit
-    polynomial rolling hashes over the byte values of lower(text) —
-    fp = (h1 << 31) | h2, h_x = Σ byte[i+j]·b_x^(k-1-j) mod m_x — then
-    the same w-window min, distinct, df-cap and pair join as the md5
-    path. BYTE-faithful for any unicode text: byte i of the utf-8
-    payload is read as hex pair i of hex(encode(lower(text))), matching
-    the kernel's text.lower().encode('utf-8') exactly (duckdb and Python
-    lower() agree on the full-unicode simple+special mappings).
+def _winnow_fps_ctes(path: str, k: int, w: int,
+                     documents: str = "documents") -> str:
+    """CTEs for a WITH clause, ending in ``e(doc_id, fp)``: each
+    document's distinct winnowing fingerprints, replayed exactly for one
+    of the two implementations. ``documents`` is the source relation (the
+    table, or a parenthesized subquery such as one doc_id shard).
 
-    Relational, one row per byte: byte i+j is ``lead(b, j)`` and the
-    window min is a ROWS frame. A list lambda that captures the row's
-    hex string costs ~100x more on non-ASCII text (176 s against 1.7 s
-    on the unicode-mutated sf0.001 documents, 4-CPU host, same
-    fingerprints)."""
-    m1, b1 = 2147483647, 131
-    m2, b2 = 2147483629, 137
-    pw1 = [pow(b1, k - 1 - j, m1) for j in range(k)]
-    pw2 = [pow(b2, k - 1 - j, m2) for j in range(k)]
-    leads = ", ".join(
-        f"lead(b, {j}) OVER (PARTITION BY doc_id ORDER BY i) AS b{j}"
-        for j in range(1, k)
-    )
-    h1 = " + ".join(f"b{j} * {pw1[j]}" for j in range(k))
-    h2 = " + ".join(f"b{j} * {pw2[j]}" for j in range(k))
-    return f"""
-        WITH g AS (
+    - ``path="md5"``: the expression path
+      (functions/similarity.py:winnow_fingerprints) — the 60-bit md5
+      prefix of every k-char substring of lower(text).
+    - ``path="poly"``: the Arrow kernel (operators/dedup.py:
+      _winnow_arrow_fn) — its two 31-bit polynomial rolling hashes over
+      the byte values of lower(text), fp = (h1 << 31) | h2,
+      h_x = Σ byte[i+j]·b_x^(k-1-j) mod m_x. BYTE-faithful for any
+      unicode text: byte i of the utf-8 payload is read as hex pair i of
+      hex(encode(lower(text))), matching the kernel's
+      text.lower().encode('utf-8') exactly (duckdb and Python lower()
+      agree on the full-unicode simple+special mappings).
+
+    Both are relational, one row per position: the w-window min is a
+    ROWS frame, and the poly path reads byte i+j as ``lead(b, j)``. A
+    list lambda that captures the row's hex string costs ~100x more on
+    non-ASCII text (176 s against 1.7 s on the unicode-mutated sf0.001
+    documents, 4-CPU host, same fingerprints)."""
+    if path == "md5":
+        h = f"""g AS (
+          SELECT doc_id, lower(text) AS s,
+                 greatest(length(text) - {k - 1}, 0) AS p
+          FROM {documents}
+        ), h AS (
+          SELECT doc_id, p, i,
+                 {_MD5L.format(x=f"substr(s, i::INT, {k})")} AS hv
+          FROM (SELECT doc_id, p, s, unnest(generate_series(1, p)) AS i
+                FROM g WHERE p >= 1)
+        )"""
+    else:
+        m1, b1 = 2147483647, 131
+        m2, b2 = 2147483629, 137
+        pw1 = [pow(b1, k - 1 - j, m1) for j in range(k)]
+        pw2 = [pow(b2, k - 1 - j, m2) for j in range(k)]
+        leads = ", ".join(
+            f"lead(b, {j}) OVER (PARTITION BY doc_id ORDER BY i) AS b{j}"
+            for j in range(1, k)
+        )
+        h1 = " + ".join(f"b{j} * {pw1[j]}" for j in range(k))
+        h2 = " + ".join(f"b{j} * {pw2[j]}" for j in range(k))
+        h = f"""g AS (
           SELECT doc_id, hex(encode(lower(text))) AS s,
                  octet_length(encode(lower(text))) AS n
-          FROM documents
+          FROM {documents}
         ), u AS (
           SELECT doc_id, n - {k - 1} AS p, s,
                  unnest(generate_series(1, n)) AS i
@@ -2426,7 +2390,8 @@ def _winnow_poly_sql(k: int, w: int, min_shared: int, max_df: int) -> str:
           SELECT doc_id, p, i,
                  (({h1}) % {m1}) * 2147483648 + (({h2}) % {m2}) AS hv
           FROM bt WHERE i <= p
-        ), e AS (
+        )"""
+    return f"""{h}, e AS (
           SELECT DISTINCT doc_id, fp FROM (
             SELECT doc_id, p, i,
               CASE WHEN p >= {w}
@@ -2435,7 +2400,16 @@ def _winnow_poly_sql(k: int, w: int, min_shared: int, max_df: int) -> str:
                 ELSE min(hv) OVER (PARTITION BY doc_id) END AS fp
             FROM h
           ) WHERE p < {w} OR i <= p - {w - 1}
-        ), fdf AS (
+        )"""
+
+
+def _winnow_pairs_sql(path: str, k: int, w: int, min_shared: int,
+                      max_df: int) -> str:
+    """Exact oracle for winnow_overlap_pairs on one implementation:
+    ``_winnow_fps_ctes``' fingerprints, then the df cap and the pair
+    join."""
+    return f"""
+        WITH {_winnow_fps_ctes(path, k, w)}, fdf AS (
           SELECT fp, count(*) AS dfc FROM e GROUP BY fp
         ), kept AS (
           SELECT e.doc_id, e.fp FROM e JOIN fdf USING (fp)

@@ -15,6 +15,7 @@ import os
 import re
 import sys
 import time
+from dataclasses import dataclass, field
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -248,8 +249,52 @@ def _median(runs: list[float]) -> float:
     return runs[n // 2] if n % 2 else (runs[n // 2 - 1] + runs[n // 2]) / 2
 
 
-def _retry_dirty(spark, reps_n, load_map, timings_map, samples_map,
-                 registry, label=""):
+@dataclass
+class Measured:
+    """Per-query medians, sorted samples and per-rep load evidence of one
+    metric (the count() set or the noop set), plus every query's timed
+    closure for the end-of-run load-retry pass."""
+
+    tag: str = ""
+    timings: dict = field(default_factory=dict)
+    samples: dict = field(default_factory=dict)
+    load: dict = field(default_factory=dict)
+    registry: dict = field(default_factory=dict)
+
+
+def measure(spark, book: Measured, name: str, run_once, reps_n: int,
+            note=None):
+    """The one measurement path of every bench number: ``reps_n`` reps of
+    ``run_once``, each GC-fenced and load-gated by ``timed_rep`` (the
+    previous run's heap debt otherwise swings timings 3-4x — JMH-style
+    hygiene) and followed by ``clearCache`` (operators may persist
+    intermediates; every rep is timed cold and in isolation). Records the
+    median, the sorted samples and the reps' load evidence under ``name``
+    in ``book``, and ``run_once`` in its registry for ``_retry_dirty``.
+    ``note(result)`` describes the last rep's result on the stderr line.
+    Returns (median, last rep's result)."""
+    book.registry[name] = run_once
+    reps: list[dict] = []
+    result = None
+    for _ in range(reps_n):
+        rep, result = timed_rep(spark, run_once)
+        reps.append(rep)
+        spark.catalog.clearCache()
+    runs = sorted(r["sec"] for r in reps)
+    med = _median(runs)
+    book.timings[name] = round(med, 3)
+    book.samples[name] = runs
+    book.load[name] = reps
+    print(
+        f"# {name}{book.tag}: median {med:.3f}s of "
+        f"{[f'{r:.2f}' for r in runs]}"
+        + (f" {note(result, med)}" if note else ""),
+        file=sys.stderr,
+    )
+    return med, result
+
+
+def _retry_dirty(spark, reps_n: int, book: Measured) -> None:
     """One whole-query retry pass for queries whose final reps stayed
     loaded (r8, verdict #1): per-rep retries cover second-scale load
     spikes, but a multi-minute external job dirties every rep of a
@@ -259,29 +304,23 @@ def _retry_dirty(spark, reps_n, load_map, timings_map, samples_map,
     fully clean; otherwise the original loaded evidence stands and the
     artifact flags itself as before."""
     dirty = sorted(
-        n for n, rs in load_map.items() if any(r["loaded"] for r in rs)
+        n for n, rs in book.load.items() if any(r["loaded"] for r in rs)
     )
     if not dirty:
         return
-    print(f"# load-gate retry pass over {label}{dirty}", file=sys.stderr)
+    print(f"# load-gate retry pass over{book.tag} {dirty}", file=sys.stderr)
     time.sleep(10.0)
     for name in dirty:
-        retry_reps: list[dict] = []
-        for _ in range(reps_n):
-            rep, _n = timed_rep(spark, registry[name])
-            retry_reps.append(rep)
-            spark.catalog.clearCache()
-        if any(r["loaded"] for r in retry_reps):
+        retry = Measured(tag=f"{book.tag} [retry]")
+        measure(spark, retry, name, book.registry[name], reps_n)
+        if any(r["loaded"] for r in retry.load[name]):
             print(f"#   {name}: still loaded, keeping original reps",
                   file=sys.stderr)
             continue
-        runs = sorted(r["sec"] for r in retry_reps)
-        med = _median(runs)
-        print(f"#   {name}: clean re-measure {med:.3f}s "
-              f"(was {timings_map[name]:.3f}s loaded)", file=sys.stderr)
-        timings_map[name] = round(med, 3)
-        samples_map[name] = runs
-        load_map[name] = retry_reps
+        print(f"#   {name}: clean re-measure {retry.timings[name]:.3f}s "
+              f"(was {book.timings[name]:.3f}s loaded)", file=sys.stderr)
+        for m in ("timings", "samples", "load"):
+            getattr(book, m)[name] = getattr(retry, m)[name]
 
 
 def _history_band(hist_path: str, keys: set, sf: float, cpus: int,
@@ -317,18 +356,23 @@ def _history_band(hist_path: str, keys: set, sf: float, cpus: int,
     return {"n": len(vals), "median": mid, "band": [min(vals), max(vals)]}
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+def bench_cpus() -> tuple[str, int]:
+    """$SPARK_GRAFT_CPUS as the local master's width (raw) and as a core
+    count (32 when it is not a number)."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else 0.0
+    return cpus, int(cpus) if cpus.isdigit() else 32
 
+
+def session(app_name: str = "ondine_spark_bench"):
+    """The bench's Spark session; the tools that time queries take theirs
+    from here too, so their numbers are comparable to the bench's."""
     from pyspark.sql import SparkSession
 
+    cpus, n_cpu = bench_cpus()
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ondine_spark_bench")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus) if cpus.isdigit() else 32, 16)))
+        .appName(app_name)
+        .config("spark.sql.shuffle.partitions", str(max(n_cpu, 16)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
@@ -338,6 +382,61 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def warm_up(spark) -> None:
+    """JVM + python-worker warmup so the first timed query isn't charged for
+    it: the mapInPandas no-op spins up the full Arrow worker pool (one
+    Python interpreter per core, pandas/pyarrow imported) before timing."""
+    n_cpu = bench_cpus()[1]
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    spark.range(n_cpu * 4).repartition(n_cpu).mapInPandas(
+        lambda it: it, "id long"
+    ).count()
+
+
+def spine_100k(spark, sf_dir: str):
+    """The reference's benchmark scale (BASELINE.md: 100K rows in ~7.2 s
+    crash+resume with a deterministic in-process LLM): the corpus's
+    documents replicated to 100K rows, and a builder of the full spine
+    over them (prompt → mega-batch at ``batch`` > 1 → mock LLM →
+    disaggregate → parse → merge). Returns (rows, build(batch))."""
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as entry
+    from ondine_spark import PipelineBuilder
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    copies = max(1, 100_000 // max(docs.count(), 1))
+    big = (
+        docs.crossJoin(spark.range(copies).withColumnRenamed("id", "_rep"))
+        .withColumn("uid", F.col("doc_id") * 1000 + F.col("_rep"))
+        .select("uid", "text")
+    )
+
+    def build(batch):
+        b = (
+            PipelineBuilder(spark)
+            .from_dataframe(big, ["text"], id_column="uid")
+            .with_prompt(entry.TEMPLATE, ["sentiment"])
+            .with_custom_llm_client(entry._mock_factory)
+            .with_concurrency(16)
+        )
+        if batch > 1:
+            b.with_batch_size(batch)
+        return b.build()
+
+    return big, build
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    n_cpu = bench_cpus()[1]
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else 0.0
+
+    spark = session()
 
     import __spark_entry__ as entry
 
@@ -346,14 +445,7 @@ def main() -> None:
     qs["dsir_select"] = _q_dsir_select
     qs["winnow_pairs"] = _q_winnow("expr")
     qs["winnow_pairs_fast"] = _q_winnow("arrow")
-    # JVM + python-worker warmup so the first timed query isn't charged for
-    # it: the mapInPandas no-op spins up the full Arrow worker pool (one
-    # Python interpreter per core, pandas/pyarrow imported) before timing
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    n_cpu = int(cpus) if cpus.isdigit() else 32
-    spark.range(n_cpu * 4).repartition(n_cpu).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
+    warm_up(spark)
 
     # per-query codegen warmup: the dedup/minhash expressions compile to
     # very large generated classes (10-25 s of janino+JIT on first run,
@@ -372,9 +464,7 @@ def main() -> None:
     # the per-query MEDIAN; every raw sample lands in history.jsonl so later
     # rounds can separate noise from drift.
     reps_n = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
-    timings: dict[str, float] = {}
-    samples: dict[str, list[float]] = {}
-    load: dict[str, list[dict]] = {}
+    counted = Measured()
     # r9 (verdict #2, guide §1.4): a second, ADDITIONS-ONLY metric per
     # query. count() lets Catalyst prune computed projection columns, so
     # projection-shaped queries under-measure (lang_fingerprints read
@@ -384,13 +474,11 @@ def main() -> None:
     # noop numbers ride alongside as queries_noop / value_noop /
     # clean_noop (this replaces tools/sweep_all_queries.py for the bench
     # set; the sweep tool remains for the non-bench oracle gates).
-    timings_noop: dict[str, float] = {}
-    samples_noop: dict[str, list[float]] = {}
-    load_noop: dict[str, list[dict]] = {}
-    # every query's timed closure, for the end-of-run load-retry pass
-    once_registry: dict = {}
-    noop_registry: dict = {}
-    total = 0.0
+    noop = Measured(tag=" [noop]")
+
+    def to_noop(df):
+        df.write.format("noop").mode("overwrite").save()
+
     for name in BENCH_QUERIES:
         fn = qs[name]
         if warm_dir != sf_dir:
@@ -398,83 +486,16 @@ def main() -> None:
             spark.catalog.clearCache()
             # the noop plan compiles different generated code than the
             # pruned count() plan — warm it separately
-            fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
+            to_noop(fn(spark, warm_dir))
             spark.catalog.clearCache()
-        reps: list[dict] = []
-        n = 0
-        for _ in range(reps_n):
-            # timed_rep GC-fences each rep (the previous run's heap debt
-            # otherwise swings timings 3-4x — JMH-style hygiene) and
-            # retries reps recorded under external host load
-            def _once(fn=fn):
-                return fn(spark, sf_dir).count()
+        measure(spark, counted, name, lambda fn=fn: fn(spark, sf_dir).count(),
+                reps_n, note=lambda n, _med: f"({n} rows)")
+        measure(spark, noop, name, lambda fn=fn: to_noop(fn(spark, sf_dir)),
+                reps_n)
 
-            once_registry[name] = _once
-            rep, n = timed_rep(spark, _once)
-            reps.append(rep)
-            # operators may persist intermediates (self-join reuse); drop
-            # them so every repetition is timed cold and in isolation
-            spark.catalog.clearCache()
-        runs = sorted(r["sec"] for r in reps)
-        med = _median(runs)
-        timings[name] = round(med, 3)
-        samples[name] = runs
-        load[name] = reps
-        total += med
-        print(
-            f"# {name}: median {med:.3f}s of {[f'{r:.2f}' for r in runs]} "
-            f"({n} rows)",
-            file=sys.stderr,
-        )
-        nreps: list[dict] = []
-        for _ in range(reps_n):
-            def _once_noop(fn=fn):
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-            noop_registry[name] = _once_noop
-            rep, _ = timed_rep(spark, _once_noop)
-            nreps.append(rep)
-            spark.catalog.clearCache()
-        nruns = sorted(r["sec"] for r in nreps)
-        nmed = _median(nruns)
-        timings_noop[name] = round(nmed, 3)
-        samples_noop[name] = nruns
-        load_noop[name] = nreps
-        print(
-            f"# {name} [noop]: median {nmed:.3f}s of "
-            f"{[f'{r:.2f}' for r in nruns]}",
-            file=sys.stderr,
-        )
-
-    # Throughput at the reference's benchmark scale (BASELINE.md: 100K rows
-    # in ~7.2 s crash+resume with a deterministic in-process LLM): replicate
-    # the driver-provided documents to 100K rows and run the full batched
-    # spine (prompt → mega-batch → mock LLM → disaggregate → parse → merge).
     from pyspark.sql import functions as F
 
-    from ondine_spark import PipelineBuilder
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    n_docs = docs.count()
-    reps = max(1, 100_000 // max(n_docs, 1))
-    big = (
-        docs.crossJoin(spark.range(reps).withColumnRenamed("id", "_rep"))
-        .withColumn("uid", F.col("doc_id") * 1000 + F.col("_rep"))
-        .select("uid", "text")
-    )
-
-    def _100k_builder(batch):
-        b = (
-            PipelineBuilder(spark)
-            .from_dataframe(big, ["text"], id_column="uid")
-            .with_prompt(entry.TEMPLATE, ["sentiment"])
-            .with_custom_llm_client(entry._mock_factory)
-            .with_concurrency(16)
-        )
-        if batch > 1:
-            b.with_batch_size(batch)
-        return b.build()
-
+    big, build = spine_100k(spark, sf_dir)
     # Workload denominator (r6 verdict finding #3): the 100K arms
     # replicate `documents`, so the TEXT LENGTH distribution differs per
     # corpus while the row count stays fixed — cross-sf comparisons of
@@ -490,52 +511,13 @@ def main() -> None:
     # r1-comparable headline: pure spine wall-clock (result_frame count,
     # no stats/quality aggregation passes) — keyed enrich_batched_100k
     # since round 1.
-    reps = []
-    n100k = 0
-    for _ in range(reps_n):
-        def _spine_once():
-            return (
-                _100k_builder(25).result_frame().select("uid", "sentiment").count()
-            )
+    def spine():
+        return build(25).result_frame().select("uid", "sentiment")
 
-        once_registry["enrich_batched_100k"] = _spine_once
-        rep, n100k = timed_rep(spark, _spine_once)
-        reps.append(rep)
-        spark.catalog.clearCache()
-    runs = sorted(r["sec"] for r in reps)
-    dt = _median(runs)
-    timings["enrich_batched_100k"] = round(dt, 3)
-    samples["enrich_batched_100k"] = runs
-    load["enrich_batched_100k"] = reps
-    total += dt
-    print(
-        f"# enrich_batched_100k: median {dt:.3f}s of "
-        f"{[f'{r:.2f}' for r in runs]} ({n100k} rows, "
-        f"{n100k / dt:.0f} rows/s)",
-        file=sys.stderr,
-    )
-    nreps = []
-    for _ in range(reps_n):
-        def _spine_once_noop():
-            (
-                _100k_builder(25).result_frame().select("uid", "sentiment")
-                .write.format("noop").mode("overwrite").save()
-            )
-
-        noop_registry["enrich_batched_100k"] = _spine_once_noop
-        rep, _ = timed_rep(spark, _spine_once_noop)
-        nreps.append(rep)
-        spark.catalog.clearCache()
-    nruns = sorted(r["sec"] for r in nreps)
-    ndt = _median(nruns)
-    timings_noop["enrich_batched_100k"] = round(ndt, 3)
-    samples_noop["enrich_batched_100k"] = nruns
-    load_noop["enrich_batched_100k"] = nreps
-    print(
-        f"# enrich_batched_100k [noop]: median {ndt:.3f}s of "
-        f"{[f'{r:.2f}' for r in nruns]}",
-        file=sys.stderr,
-    )
+    measure(spark, counted, "enrich_batched_100k", lambda: spine().count(),
+            reps_n, note=lambda n, med: f"({n} rows, {n / med:.0f} rows/s)")
+    measure(spark, noop, "enrich_batched_100k", lambda: to_noop(spine()),
+            reps_n)
     # the two *_exec arms get NO noop twin: execute() is not a DataFrame
     # action — it already materializes every response column (plus the
     # stats/quality passes), so count-pruning cannot hide work there
@@ -554,48 +536,33 @@ def main() -> None:
     # every other query.
     api_calls: dict[str, int] = {}
     for arm, batch in (("batched", 25), ("naive", 1)):
-        key = f"enrich_{arm}_100k_exec"
-        arm_reps: list[dict] = []
-        res = None
-        once_registry[key] = lambda b=batch: _100k_builder(b).execute()
-        for _ in range(reps_n):
-            rep, res = timed_rep(spark, once_registry[key])
-            arm_reps.append(rep)
-            spark.catalog.clearCache()
-        runs = sorted(r["sec"] for r in arm_reps)
-        dt = _median(runs)
-        timings[key] = round(dt, 3)
-        samples[key] = runs
-        load[key] = arm_reps
-        api_calls[f"api_calls_{arm}"] = res.api_calls
-        total += dt
-        print(
-            f"# {key}: median {dt:.3f}s of {[f'{r:.2f}' for r in runs]} "
-            f"({res.quality.valid_rows} valid rows, "
-            f"{res.api_calls} api calls)",
-            file=sys.stderr,
+        _, res = measure(
+            spark, counted, f"enrich_{arm}_100k_exec",
+            lambda b=batch: build(b).execute(), reps_n,
+            note=lambda r, _med: f"({r.quality.valid_rows} valid rows, "
+                                 f"{r.api_calls} api calls)",
         )
+        api_calls[f"api_calls_{arm}"] = res.api_calls
 
-    _retry_dirty(spark, reps_n, load, timings, samples, once_registry)
-    total = sum(timings.values())
-    _retry_dirty(spark, reps_n, load_noop, timings_noop, samples_noop,
-                 noop_registry, label="noop:")
+    _retry_dirty(spark, reps_n, counted)
+    _retry_dirty(spark, reps_n, noop)
+    timings, timings_noop = counted.timings, noop.timings
 
     # clean = no query's FINAL (post-retry) reps were recorded under
     # external load; the artifact can no longer mistake a loaded host for
     # a slow engine without saying so. clean_noop covers the noop set
     # separately so a loaded noop rep cannot dirty the count()-metric
     # history band (and vice versa).
-    clean = not any(r["loaded"] for reps in load.values() for r in reps)
+    clean = not any(r["loaded"] for reps in counted.load.values() for r in reps)
     clean_noop = not any(
-        r["loaded"] for reps in load_noop.values() for r in reps
+        r["loaded"] for reps in noop.load.values() for r in reps
     )
     hist_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "benchmarks", "history.jsonl"
     )
     compact = {
         "metric": "headline_queries_total_wall",
-        "value": round(total, 3),
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "queries_noop": timings_noop,
@@ -603,17 +570,15 @@ def main() -> None:
         "clean_noop": clean_noop,
         "clean": clean,
         "load_gate_ext_cores": LOAD_EXT_CORES,
-        "history": _history_band(
-            hist_path, set(timings), sf, int(cpus) if cpus.isdigit() else 32
-        ),
+        "history": _history_band(hist_path, set(timings), sf, n_cpu),
         "reps": reps_n,
-        "cpus": int(cpus) if cpus.isdigit() else 32,
+        "cpus": n_cpu,
         "sf": sf,
         **api_calls,
         **prompt_bytes,
     }
-    detail = {**compact, "samples": samples, "load": load,
-              "samples_noop": samples_noop, "load_noop": load_noop}
+    detail = {**compact, "samples": counted.samples, "load": counted.load,
+              "samples_noop": noop.samples, "load_noop": noop.load}
     # Per-rep samples + load evidence go to a SIDE FILE and an EARLIER
     # stderr line: round 5's artifact put them on the final line, which
     # outgrew the driver's tail-capture window and left BENCH_r05.json

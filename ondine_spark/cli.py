@@ -57,15 +57,14 @@ def cmd_process(args) -> int:
 
     p = _pipeline(args.config)
     if getattr(args, "progress", False):
-        from ondine_spark.observability import ProgressObserver
         from ondine_spark.orchestration.progress import (
             PlainProgressTracker,
             TrackerObserver,
         )
 
-        p.spec.processing.observers.append(ProgressObserver())
         # live per-stage bars: in-chunk rows come from polling the api-call
-        # accumulator (executor heartbeats), cost/rows land at each commit
+        # accumulator (executor heartbeats), cost/rows land at each commit;
+        # errors surface through the re-raised exception
         bs = max(1, p.spec.prompt.batch_size)
         p.spec.processing.observers.append(
             TrackerObserver(

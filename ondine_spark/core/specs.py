@@ -150,7 +150,6 @@ class ProcessingSpec:
     error_policy: ErrorPolicy = ErrorPolicy.RETRY
     default_value: str | None = None
     max_budget: Decimal | None = None
-    checkpoint_interval: int | None = None
     checkpoint_dir: str | None = None
     session_id: str | None = None  # resume identity for the response cache
     preprocess: bool = False
@@ -235,6 +234,13 @@ class PipelineSpec:
         self.dataset.validate()
         if not self.dataset.output_columns:
             raise ValueError("at least one output column required")
+        if self.output and self.output.merge_strategy != MergeStrategy.REPLACE:
+            # execute() writes the merged frame as is; no other strategy
+            # is applied on the way to the sink
+            raise ValueError(
+                f"output.merge_strategy={self.output.merge_strategy.value!r} "
+                "is not supported; only 'replace' is"
+            )
         placeholders = template_placeholders(self.prompt.template)
         if self.prompt.use_jinja2 is not False and "{{" in self.prompt.template:
             return  # jinja2 templates are validated at render time

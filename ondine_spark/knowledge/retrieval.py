@@ -17,8 +17,6 @@ candidate volume.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -44,11 +42,8 @@ LSH_AUTO_THRESHOLD = 100_000
 # of shuffling the (query-bucket × posting) join's blow-up (measured 20 s
 # → 2 s at 5K rows × 500 chunks with bit-identical scores). Above the
 # budget the inverted-index join (or, through attach_context, LSH) is the
-# shape that scales. Parameterised for cluster memory profiles; 128 MiB
-# default ≈ 8K chunks at the 2048-dim store default.
-DENSE_AUTO_BYTES = int(
-    os.environ.get("SPARK_GRAFT_KB_DENSE_BYTES", str(1 << 27))
-)
+# shape that scales. 128 MiB ≈ 8K chunks at the 2048-dim store default.
+DENSE_AUTO_BYTES = 1 << 27
 
 
 def _retrieve_topk_dense(

@@ -230,8 +230,10 @@ class TrackerObserver:
             if self._task is not None:
                 rows = int(p.get("rows") or 0)
                 self._rows_done += rows
+                # cumulative rows and cost of the run so far
                 self.tracker.update(
-                    self._task, done=rows, cost=p.get("cumulative_cost"),
+                    self._task, done=rows, rows=self._rows_done,
+                    cost=p.get("cumulative_cost"),
                 )
                 self.tracker.finish(self._task)
                 self._task = None

@@ -116,15 +116,21 @@ def resume_filter(
     cached = read_cache(df.sparkSession, checkpoint_dir, session_id)
     if cached is None:
         return df, None
-    cached_ids = cached.select(ROW_ID).distinct()
-    # UNHINTED anti-join: after a deep-into-the-run crash the cached side
-    # is most of the corpus — a forced broadcast would OOM. AQE broadcasts
-    # small caches at runtime and shuffles large ones (SCALE.md "Resume");
-    # tests/test_resume_crash.py asserts the SortMergeJoin fallback.
-    todo = df.join(cached_ids, on=ROW_ID, how="left_anti")
     # reattach input columns to cached responses by joining back to input
     replay = df.join(cached, on=ROW_ID, how="inner")
-    return todo, replay
+    return pending_rows(df, cached), replay
+
+
+def pending_rows(df: DataFrame, cached: DataFrame) -> DataFrame:
+    """The rows of ``df`` with no response in ``cached`` (``read_cache``'s
+    frame): the resume split of every entry point.
+
+    UNHINTED anti-join: after a deep-into-the-run crash the cached side
+    is most of the corpus — a forced broadcast would OOM. AQE broadcasts
+    small caches at runtime and shuffles large ones (SCALE.md "Resume");
+    tests/test_resume_crash.py asserts the SortMergeJoin fallback."""
+    cached_ids = cached.select(ROW_ID).distinct()
+    return df.join(cached_ids, on=ROW_ID, how="left_anti")
 
 
 def write_responses(
@@ -177,11 +183,10 @@ def compact_responses(spark, checkpoint_dir: str, session_id: str) -> int:
         part_dir = os.path.join(
             _cache_path(checkpoint_dir), f"session_id={session_id}"
         )
-    try:
-        df = spark.read.parquet(part_dir)
-    except Exception:
+    if not os.path.isdir(part_dir):
         return 0
-    compacted = df.dropDuplicates([ROW_ID])
+    # the same row per _row_id that resume replays (error-free preferred)
+    compacted = read_cache(spark, checkpoint_dir, session_id)
     n = compacted.count()
     tmp = part_dir + ".compacting"
     compacted.write.mode("overwrite").parquet(tmp)

@@ -33,7 +33,11 @@ from ondine_spark.operators.batching import (
     with_global_index,
 )
 from ondine_spark.plans.pipeline import Pipeline, public_frame
-from ondine_spark.sources.cache import read_cache, write_responses
+from ondine_spark.sources.cache import (
+    pending_rows,
+    read_cache,
+    write_responses,
+)
 from ondine_spark.sources.readers import ROW_ID
 
 
@@ -157,9 +161,7 @@ def iter_chunks(
     cached = read_cache(spark, ckpt, sid)
     spent = Decimal(0)
     if cached is not None:
-        todo = df.join(
-            F.broadcast(cached.select(ROW_ID)), on=ROW_ID, how="left_anti"
-        )
+        todo = pending_rows(df, cached)
         agg = cached.agg(
             F.count(F.lit(1)).alias("n"), F.sum("cost").alias("c")
         ).collect()[0]

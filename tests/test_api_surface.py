@@ -65,6 +65,31 @@ def test_config_rejects_unknown_keys(tmp_path, reviews_csv):
         spec_from_dict(cfg)
 
 
+def test_config_rejects_checkpoint_interval(tmp_path, reviews_csv):
+    """The durable commit unit is the chunk (execute_chunked's
+    chunk_size); a config that still sets a checkpoint cadence fails
+    like any other unknown key instead of being silently ignored."""
+    cfg = _config(tmp_path, reviews_csv, checkpoint_interval=100)
+    with pytest.raises(ValueError, match="checkpoint_interval"):
+        spec_from_dict(cfg)
+
+
+@pytest.mark.parametrize("strategy", ["append", "update"])
+def test_validate_rejects_unapplied_merge_strategy(tmp_path, reviews_csv,
+                                                   strategy):
+    """execute() writes the merged frame as is, so an output merge
+    strategy other than the default is refused at validation rather than
+    accepted and ignored; the default passes."""
+    cfg = _config(tmp_path, reviews_csv)
+    cfg["output"] = {"path": str(tmp_path / "out.parquet"),
+                     "merge_strategy": strategy}
+    spec = spec_from_dict(cfg)
+    with pytest.raises(ValueError, match="merge_strategy"):
+        spec.validate()
+    cfg["output"]["merge_strategy"] = "replace"
+    spec_from_dict(cfg).validate()
+
+
 def test_cli_process_status_resume_flow(spark, tmp_path, reviews_csv):
     import yaml
 
@@ -94,11 +119,19 @@ def test_cli_process_status_resume_flow(spark, tmp_path, reviews_csv):
     assert rc == 0
 
 
-def test_cli_progress_rendering(spark, tmp_path, reviews_csv, capsys):
+def test_cli_progress_rendering(spark, tmp_path, reviews_csv, capsys,
+                                monkeypatch):
     import yaml
 
+    import ondine_spark.cli as cli
     from ondine_spark.cli import main
+    from ondine_spark.orchestration.progress import TrackerObserver
 
+    built = []
+    pipeline = cli._pipeline
+    monkeypatch.setattr(
+        cli, "_pipeline", lambda cfg: built.append(pipeline(cfg)) or built[-1]
+    )
     cfg_path = tmp_path / "pp.yaml"
     cfg_path.write_text(yaml.safe_dump(
         _config(tmp_path, reviews_csv, session_id="prog-sess")
@@ -108,10 +141,13 @@ def test_cli_progress_rendering(spark, tmp_path, reviews_csv, capsys):
         "--chunked", "--chunk-size", "10", "--progress",
     ])
     assert rc == 0
+    # one progress surface, so every chunk event renders once
+    observers = built[0].spec.processing.observers
+    assert len(observers) == 1
+    assert isinstance(observers[0], TrackerObserver)
     err = capsys.readouterr().err
-    # both progress surfaces render: the legacy per-commit bars
-    # (cumulative rows) and the round-3 tracker's per-chunk stages
-    # (live start at 0/10, full bar + cost at finish)
+    # the tracker's per-chunk stages: live start at 0/10, then the full
+    # bar with the run's cumulative rows and cost at finish
     assert "chunk 3/3" in err and "rows=30" in err
     assert "|########################|" in err
     assert "0/10" in err  # tracker stage opened before the chunk ran

@@ -236,10 +236,12 @@ def test_health_check(spark, tmp_path):
     assert hc2["source"]["ok"] is False
 
 
-def test_resume_anti_join_no_forced_broadcast(spark, tmp_path):
+def test_resume_anti_join_no_forced_broadcast(spark, tmp_path, monkeypatch):
     """SCALE.md "Resume": after a deep crash the cached side is most of
     the corpus, so the resume anti-join must not carry a broadcast hint —
-    with broadcasting disabled the plan falls back to SortMergeJoin."""
+    with broadcasting disabled the plan falls back to SortMergeJoin. This
+    holds for resume_filter and for a resumed execute_chunked run."""
+    import ondine_spark.streaming.runner as runner
     from ondine_spark.sources.cache import resume_filter, write_responses
     from pyspark.sql import functions as F
 
@@ -263,6 +265,27 @@ def test_resume_anti_join_no_forced_broadcast(spark, tmp_path):
         assert "BroadcastHashJoin" not in plan, plan
         assert todo.count() == 200
         assert replay.count() == 300
+
+        # a chunked run that committed one chunk, then resumed: record
+        # the plan of the rows it still has to do
+        ckpt = tmp_path / "ckpt"
+        p = _builder(spark, ckpt, mock_client_factory()).build()
+        for _ in runner.iter_chunks(p, chunk_size=20):
+            break
+        plans = []
+        index = runner.with_global_index
+
+        def spy(requests, *args, **kw):
+            plans.append(
+                requests._jdf.queryExecution().executedPlan().toString()
+            )
+            return index(requests, *args, **kw)
+
+        monkeypatch.setattr(runner, "with_global_index", spy)
+        summary = execute_chunked(p, chunk_size=20)
+        assert (summary.resumed_rows, summary.total_rows) == (20, 80)
+        assert "LeftAnti" in plans[-1], plans[-1]
+        assert "BroadcastHashJoin" not in plans[-1], plans[-1]
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
@@ -291,11 +314,26 @@ def test_compact_responses_dedups_and_preserves_resume(spark, tmp_path):
     # three appends of the same rows → duplicate files and rows
     for _ in range(3):
         write_responses(done, str(tmp_path), "s2")
+    # auto-retry: ten rows failed first, then their retry succeeded
+    retried = df.filter(F.col("v").between(60, 69)).select(
+        "_row_id", F.lit("ok").alias("response_text"),
+        F.lit(1).alias("tokens_in"), F.lit(1).alias("tokens_out"),
+        F.lit("m").alias("resp_model"),
+        F.lit("0").cast("decimal(38,18)").alias("cost"),
+        F.lit(0.0).alias("latency_ms"),
+        F.lit(None).cast("string").alias("error"),
+    )
+    failed = retried.withColumn("response_text", F.lit(None).cast("string"))
+    failed = failed.withColumn("error", F.lit("timeout"))
+    write_responses(failed, str(tmp_path), "s2")
+    write_responses(retried, str(tmp_path), "s2")
     n = compact_responses(spark, str(tmp_path), "s2")
-    assert n == 60
+    assert n == 70
     todo, replay = resume_filter(df, str(tmp_path), "s2")
-    assert todo.count() == 40
-    assert replay.count() == 60
+    assert todo.count() == 30
+    assert replay.count() == 70
+    # compaction kept the retry's success, not the failure it replaced
+    assert replay.filter(F.col("error").isNotNull()).count() == 0
     # compacting a session that does not exist is a quiet no-op
     assert compact_responses(spark, str(tmp_path), "missing") == 0
 

@@ -16,7 +16,6 @@ import json
 import os
 import re
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -25,59 +24,15 @@ sys.path.insert(0, REPO)
 def main() -> None:
     reps_n = int(sys.argv[1]) if len(sys.argv) > 1 else 3
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     m = re.search(r"sf([0-9.]+)", sf_dir)
-
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("exec_arm_bisect")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    import __spark_entry__ as entry
-    from bench import timed_rep
 
     from pyspark.sql import functions as F
 
-    from ondine_spark import PipelineBuilder
+    from bench import Measured, measure, session, spine_100k, warm_up
 
-    # identical warmup to bench.py
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    n_cpu = int(cpus) if cpus.isdigit() else 32
-    spark.range(n_cpu * 4).repartition(n_cpu).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    n_docs = docs.count()
-    k = max(1, 100_000 // max(n_docs, 1))
-    big = (
-        docs.crossJoin(spark.range(k).withColumnRenamed("id", "_rep"))
-        .withColumn("uid", F.col("doc_id") * 1000 + F.col("_rep"))
-        .select("uid", "text")
-    )
-
-    def _100k_builder(batch):
-        b = (
-            PipelineBuilder(spark)
-            .from_dataframe(big, ["text"], id_column="uid")
-            .with_prompt(entry.TEMPLATE, ["sentiment"])
-            .with_custom_llm_client(entry._mock_factory)
-            .with_concurrency(16)
-        )
-        if batch > 1:
-            b.with_batch_size(batch)
-        return b.build()
+    spark = session("exec_arm_bisect")
+    warm_up(spark)
+    big, build = spine_100k(spark, sf_dir)
 
     # workload denominator (round-6 verdict finding #3): the exec arms are
     # only comparable across corpora when the artifact records input bytes
@@ -88,7 +43,7 @@ def main() -> None:
     ).collect()[0]
 
     # warm both arms once (codegen + python worker pool for the spine)
-    _100k_builder(25).result_frame().select("uid").count()
+    build(25).result_frame().select("uid").count()
     spark.catalog.clearCache()
 
     out: dict = {
@@ -100,25 +55,14 @@ def main() -> None:
         "prompt_bytes_avg": round(float(pb["avg"]), 1),
         "git": os.popen(f"git -C {REPO} rev-parse --short HEAD").read().strip(),
     }
+    book = Measured()
     for arm, batch in (("batched", 25), ("naive", 1)):
-        runs, calls = [], 0
-        for _ in range(reps_n):
-            rep, res = timed_rep(
-                spark, lambda b=batch: _100k_builder(b).execute()
-            )
-            runs.append(rep["sec"])
-            calls = res.api_calls
-            spark.catalog.clearCache()
-        runs.sort()
-        med = (
-            runs[len(runs) // 2]
-            if reps_n % 2
-            else sum(runs[len(runs) // 2 - 1 : len(runs) // 2 + 1]) / 2
-        )
-        out[f"enrich_{arm}_100k_exec"] = round(med, 3)
-        out[f"enrich_{arm}_100k_exec_runs"] = runs
-        out[f"api_calls_{arm}"] = calls
-        print(f"# {arm}: median {med:.3f}s of {runs}", file=sys.stderr)
+        key = f"enrich_{arm}_100k_exec"
+        _, res = measure(spark, book, key, lambda b=batch: build(b).execute(),
+                         reps_n)
+        out[key] = book.timings[key]
+        out[f"{key}_runs"] = book.samples[key]
+        out[f"api_calls_{arm}"] = res.api_calls
     print(json.dumps(out))
 
 

@@ -675,84 +675,24 @@ def _sample_mix_digest(sf_dir: str, k: int, tmp_root: str, wd: str):
 
 
 # ------------------------------------------------------------ winnow_pairs
-def _winnow_fps_ctes(path_kind: str, shard_filter: str) -> str:
-    """The gate's per-doc fingerprint CTE chain (__spark_entry__
-    winnow_pairs) with ``documents`` shard-filtered: ``path_kind`` picks
-    the md5 expression path ('ex') or the polynomial kernel replay
-    ('fa'); both end in e(doc_id, fp). Constants match the gate
-    (k=12, w=8).
-
-    SYNC WARNING: this re-states the gate's CTE chain and constants
-    (k=12, w=8, min_shared=10, max_df=20, the two rolling-hash moduli/
-    bases) — it duplicates ``__spark_entry__.oracle_sql()
-    ["winnow_pairs"]`` (and the winnow_fps gate that shares the chain).
-    If those gates change, change THIS builder too; a desync is a false
-    RED (digest mismatch), never a false green."""
-    if path_kind == "ex":
-        md5l = _MD5L.format(x="substr(s, i::INT, 12)")
-        return f"""
-          g AS (
-            SELECT doc_id, lower(text) AS s,
-                   greatest(length(text) - 11, 0) AS p
-            FROM documents {shard_filter}
-          ), h AS (
-            SELECT doc_id, p,
-                   list_transform(generate_series(1, p), i -> {md5l}) AS hs
-            FROM g WHERE p >= 1
-          ), fps AS (
-            SELECT doc_id,
-              CASE WHEN p >= 8
-                THEN list_distinct(list_transform(
-                       generate_series(1, p - 7),
-                       j -> list_min(hs[j:j+7])))
-                ELSE [list_min(hs)] END AS fps
-            FROM h
-          ), e AS (SELECT doc_id, unnest(fps) AS fp FROM fps)"""
-    kk, w = 12, 8
-    m1, b1 = 2147483647, 131
-    m2, b2 = 2147483629, 137
-    pw1 = [pow(b1, kk - 1 - j, m1) for j in range(kk)]
-    pw2 = [pow(b2, kk - 1 - j, m2) for j in range(kk)]
-    byte = "('0x' || substr(s, (2 * (i + {j}) - 1)::INT, 2))::BIGINT"
-    h1 = " + ".join(f"{byte.format(j=j)} * {pw1[j]}" for j in range(kk))
-    h2 = " + ".join(f"{byte.format(j=j)} * {pw2[j]}" for j in range(kk))
-    return f"""
-      g AS (
-        SELECT doc_id, hex(encode(lower(text))) AS s,
-               greatest(octet_length(encode(lower(text))) - {kk - 1}, 0) AS p
-        FROM documents {shard_filter}
-      ), h AS (
-        SELECT doc_id, p,
-               list_transform(generate_series(1, p),
-                 i -> (({h1}) % {m1}) * 2147483648 + (({h2}) % {m2})
-               ) AS hs
-        FROM g WHERE p >= 1
-      ), fps AS (
-        SELECT doc_id,
-          CASE WHEN p >= {w}
-            THEN list_distinct(list_transform(
-                   generate_series(1, p - {w - 1}),
-                   j -> list_min(hs[j:j+{w - 1}])))
-            ELSE [list_min(hs)] END AS fps
-        FROM h
-      ), e AS (SELECT doc_id, unnest(fps) AS fp FROM fps)"""
-
-
 def _winnow_pairs_digest(sf_dir: str, k: int, tmp_root: str, wd: str):
     """Both winnowing paths (md5 expression + polynomial kernel replay),
-    sharded twice: (doc_id, fp) exploded per DOC shard (per-doc
-    fingerprints, documents rebound verbatim), then the global df-cap +
-    pair counting per FP shard — the df count and each (a, b) pair's
-    shared-count are sums over disjoint fp shards, combined exactly in
-    one final pass (integer counts). min_shared/max_df match the gate
-    (10 / 20)."""
-    for kind in ("ex", "fa"):
+    sharded twice: (doc_id, fp) per DOC shard (per-doc fingerprints from
+    the gate oracle's own ``_winnow_fps_ctes`` over one doc_id shard),
+    then the global df-cap + pair counting per FP shard — the df count
+    and each (a, b) pair's shared-count are sums over disjoint fp shards,
+    combined exactly in one final pass (integer counts). k, w, max_df and
+    min_shared are the gate's (``__spark_entry__._WINNOW``)."""
+    from __spark_entry__ import _WINNOW, _winnow_fps_ctes
+
+    for kind, path in (("ex", "md5"), ("fa", "poly")):
         for i in range(k):
+            shard = f"(SELECT * FROM documents WHERE doc_id % {k} = {i})"
             con = _connect(sf_dir, tmp_root)
             con.execute(f"""
                 COPY (
-                  WITH {_winnow_fps_ctes(kind,
-                                         f"WHERE doc_id % {k} = {i}")}
+                  WITH {_winnow_fps_ctes(path, _WINNOW["k"], _WINNOW["w"],
+                                         shard)}
                   SELECT doc_id, fp FROM e
                 ) TO '{wd}/{kind}_e_{i}.parquet' (FORMAT PARQUET)
             """)
@@ -771,7 +711,7 @@ def _winnow_pairs_digest(sf_dir: str, k: int, tmp_root: str, wd: str):
                     SELECT fp, count(*) AS dfc FROM e GROUP BY fp
                   ), kept AS (
                     SELECT e.doc_id, e.fp FROM e JOIN fdf USING (fp)
-                    WHERE fdf.dfc <= 20
+                    WHERE fdf.dfc <= {_WINNOW["max_df"]}
                   )
                   SELECT a.doc_id AS a, b.doc_id AS b, count(*) AS c
                   FROM kept a JOIN kept b
@@ -787,7 +727,7 @@ def _winnow_pairs_digest(sf_dir: str, k: int, tmp_root: str, wd: str):
             COPY (
               SELECT a, b, sum(c) AS shared
               FROM '{wd}/{kind}_p_*.parquet'
-              GROUP BY a, b HAVING sum(c) >= 10
+              GROUP BY a, b HAVING sum(c) >= {_WINNOW["min_shared"]}
             ) TO '{wd}/{kind}_pairs.parquet' (FORMAT PARQUET)
         """)
         con.close()

@@ -3,14 +3,15 @@ measure first, isolate with the noop sink, label jobs).
 
 Usage: python tools/profile_phases.py [sf_dir] [phase ...]
 Phases: dup_clusters naive_exec batched_exec winnow dsir ivfpq ann minhash
-Prints one line per sub-phase: wall seconds. Run on a quiet box.
+Times every sub-phase with bench.py's session and measure() (median of
+GC-fenced, load-gated reps; one stderr line each), then prints a summary
+sorted by wall seconds. Run on a quiet box.
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -23,47 +24,23 @@ def noop(df):
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     want = set(sys.argv[2:])
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile_phases")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 16)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    import __spark_entry__ as entry  # noqa: F401
+    import bench
 
-    # warmup: JVM + Arrow worker pool
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.range(int(cpus) * 4).repartition(int(cpus)).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
+    spark = bench.session("profile_phases")
+    import __spark_entry__ as entry
 
-    results: dict[str, float] = {}
+    bench.warm_up(spark)
+    book = bench.Measured()
 
     def phase(name, fn, reps=2):
+        """Time ``fn`` under a job label; returns its last result."""
         spark.sparkContext.setJobDescription(name)
-        best = None
-        for _ in range(reps):
-            spark._jvm.System.gc()
-            t0 = time.monotonic()
-            fn()
-            dt = time.monotonic() - t0
-            best = dt if best is None else min(best, dt)
-            spark.catalog.clearCache()
-        results[name] = best
-        print(f"{name:45s} {best:7.3f}s", flush=True)
+        _, res = bench.measure(spark, book, name, fn, reps)
         spark.sparkContext.setJobDescription(None)
+        return res
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
@@ -112,12 +89,10 @@ def main() -> None:
         )
 
         n = docs.count()
-        t0 = time.monotonic()
-        llr = dsir_llr_table(
+        llr = phase("dsir.llr_fit", lambda: dsir_llr_table(
             docs, docs.where(F.col("lang") == "en"), "text",
             num_features=1 << 13, use_bigrams=True,
-        )
-        print(f"{'dsir.llr_fit':45s} {time.monotonic()-t0:7.3f}s", flush=True)
+        ), reps=1)
         phase(
             "dsir.weights_literal",
             lambda: noop(
@@ -141,8 +116,6 @@ def main() -> None:
         )
 
     if not want or "ivfpq" in want:
-        import bench
-
         from ondine_spark.operators.product_quantization import (
             pq_encode,
             train_pq_codebooks,
@@ -156,15 +129,10 @@ def main() -> None:
             "vec_id",
             F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
         )
-        t0 = time.monotonic()
-        books = train_pq_codebooks(emb, "embedding", m=8, nbits=8,
-                                   max_train_rows=25_000)
-        print(f"{'ivfpq.train_pq_codebooks':45s} {time.monotonic()-t0:7.3f}s",
-              flush=True)
-        t0 = time.monotonic()
-        cents = train_ivf_centroids(emb, nlist=8, max_train_rows=25_000)
-        print(f"{'ivfpq.train_ivf_centroids':45s} {time.monotonic()-t0:7.3f}s",
-              flush=True)
+        books = phase("ivfpq.train_pq_codebooks", lambda: train_pq_codebooks(
+            emb, "embedding", m=8, nbits=8, max_train_rows=25_000), reps=1)
+        cents = phase("ivfpq.train_ivf_centroids", lambda: train_ivf_centroids(
+            emb, nlist=8, max_train_rows=25_000), reps=1)
         phase(
             "ivfpq.encode_only",
             lambda: noop(
@@ -176,8 +144,6 @@ def main() -> None:
         phase("ivfpq.bench_full", lambda: bench._q_ivfpq_topk(spark, sf_dir).count())
 
     if not want or "ann" in want:
-        import bench  # noqa: F811
-
         qs = dict(entry.queries())
         phase("topk_brute_vs_ivf.full", lambda: qs["topk_brute_vs_ivf"](spark, sf_dir).count())
         phase("pq_codes_adc.full", lambda: qs["pq_codes_adc"](spark, sf_dir).count())
@@ -189,28 +155,7 @@ def main() -> None:
         phase("simhash_pairs.full", lambda: qs["simhash_pairs"](spark, sf_dir).count())
 
     if not want or "naive_exec" in want or "batched_exec" in want:
-        from ondine_spark import PipelineBuilder
-
-        n_docs = docs.count()
-        reps = max(1, 100_000 // max(n_docs, 1))
-        big = (
-            docs.crossJoin(spark.range(reps).withColumnRenamed("id", "_rep"))
-            .withColumn("uid", F.col("doc_id") * 1000 + F.col("_rep"))
-            .select("uid", "text")
-        )
-
-        def builder(batch):
-            b = (
-                PipelineBuilder(spark)
-                .from_dataframe(big, ["text"], id_column="uid")
-                .with_prompt(entry.TEMPLATE, ["sentiment"])
-                .with_custom_llm_client(entry._mock_factory)
-                .with_concurrency(16)
-            )
-            if batch > 1:
-                b.with_batch_size(batch)
-            return b.build()
-
+        big, builder = bench.spine_100k(spark, sf_dir)
         if not want or "naive_exec" in want:
             phase("naive.base_only", lambda: noop(big))
             phase(
@@ -226,7 +171,7 @@ def main() -> None:
             phase("batched.execute", lambda: builder(25).execute())
 
     print("\nsummary:")
-    for k, v in sorted(results.items(), key=lambda kv: -kv[1]):
+    for k, v in sorted(book.timings.items(), key=lambda kv: -kv[1]):
         print(f"  {k:43s} {v:7.3f}s")
 
 

@@ -3,8 +3,9 @@ measure first; the bench covers 27 of the ~50 gates — this catches heavy
 gate-only paths the bench never times).
 
 Usage: python tools/sweep_all_queries.py [sf_dir] [reps]
-Prints one line per query: min wall seconds over reps (default 1).
-Run on a quiet box.
+Times each query's noop sink with bench.py's session and measure(): the
+median of ``reps`` (default 1) GC-fenced, load-gated reps, one stderr line
+per query, then one JSON line. Run on a quiet box.
 """
 
 from __future__ import annotations
@@ -12,7 +13,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -21,56 +21,29 @@ sys.path.insert(0, REPO)
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 1
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from pyspark.sql import SparkSession
+    from bench import Measured, measure, session, warm_up
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("sweep_all_queries")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 16)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("sweep_all_queries")
     import __spark_entry__ as entry
 
-    # warmup: JVM codegen + Arrow python worker pool
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.range(int(cpus) * 4).repartition(int(cpus)).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
-
-    out: dict[str, float] = {}
+    warm_up(spark)
+    book = Measured(tag=" [noop]")
     for name, fn in entry.queries().items():
         spark.sparkContext.setJobDescription(f"sweep:{name}")
-        best = None
-        for _ in range(reps):
-            spark.catalog.clearCache()
-            # GC-fence each rep like bench.timed_rep: without it the
-            # previous query's heap debt lands on this one's clock (the
-            # un-fenced sweep measured jaccard_pairs at 6.8 s where the
-            # isolated steady state is 1.8-2.0 s)
-            spark._jvm.System.gc()
-            time.sleep(0.2)
-            t0 = time.monotonic()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.monotonic() - t0
-            best = dt if best is None else min(best, dt)
-        out[name] = round(best, 3)
-        print(f"{name:28s} {best:7.3f}", flush=True)
+        measure(
+            spark, book, name,
+            lambda fn=fn: fn(spark, sf_dir).write.format("noop")
+            .mode("overwrite").save(),
+            reps,
+        )
 
     # gc_fenced marks the measurement methodology: reps are GC-fenced
     # (since r8), so these numbers are NOT comparable to pre-r8 un-fenced
     # sweep history
     print(json.dumps({
         "gc_fenced": True,
-        "queries": dict(sorted(out.items(), key=lambda kv: -kv[1])),
+        "queries": dict(sorted(book.timings.items(), key=lambda kv: -kv[1])),
     }))
     spark.stop()
 
