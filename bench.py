@@ -430,6 +430,20 @@ def spine_100k(spark, sf_dir: str):
     return big, build
 
 
+def prompt_bytes(big) -> tuple[int, int, float]:
+    """``(rows, total, average)`` text length of the 100K corpus from
+    :func:`spine_100k`, in one aggregate. The workload denominator: the
+    100K arms replicate `documents`, so the text length distribution
+    differs per corpus while the row count stays fixed — cross-sf
+    comparisons of the exec arms need the byte count in the artifact."""
+    from pyspark.sql import functions as F
+
+    row = big.select(
+        F.count(F.lit(1)), F.sum(F.length("text")), F.avg(F.length("text"))
+    ).first()
+    return int(row[0]), int(row[1]), round(float(row[2]), 1)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n_cpu = bench_cpus()[1]
@@ -493,19 +507,11 @@ def main() -> None:
         measure(spark, noop, name, lambda fn=fn: to_noop(fn(spark, sf_dir)),
                 reps_n)
 
-    from pyspark.sql import functions as F
-
     big, build = spine_100k(spark, sf_dir)
-    # Workload denominator (r6 verdict finding #3): the 100K arms
-    # replicate `documents`, so the TEXT LENGTH distribution differs per
-    # corpus while the row count stays fixed — cross-sf comparisons of
-    # the exec arms need the byte count in the artifact.
-    _pb = big.select(
-        F.sum(F.length("text")).alias("t"), F.avg(F.length("text")).alias("a")
-    ).collect()[0]
-    prompt_bytes = {
-        "prompt_bytes_total_100k": int(_pb["t"]),
-        "prompt_bytes_avg_100k": round(float(_pb["a"]), 1),
+    _, total, avg = prompt_bytes(big)
+    prompt_bytes_100k = {
+        "prompt_bytes_total_100k": total,
+        "prompt_bytes_avg_100k": avg,
     }
 
     # r1-comparable headline: pure spine wall-clock (result_frame count,
@@ -575,7 +581,7 @@ def main() -> None:
         "cpus": n_cpu,
         "sf": sf,
         **api_calls,
-        **prompt_bytes,
+        **prompt_bytes_100k,
     }
     detail = {**compact, "samples": counted.samples, "load": counted.load,
               "samples_noop": noop.samples, "load_noop": noop.load}

@@ -23,14 +23,21 @@ from ondine_spark.functions.similarity import md5_long
 SENTENCE_SPLIT_RE = r"(?<=[.!?])\s+"
 
 
-def split_sentences(col: Column) -> Column:
-    """array<string> of sentences. The reference splits on ``[.!?]\\s+``
-    (dropping the terminator); we use a lookbehind so terminators are kept —
-    chunk text then reconstructs verbatim, which the reference's join(" ")
-    does not guarantee. Documented divergence, strictly less lossy."""
-    return F.filter(
-        F.split(col, SENTENCE_SPLIT_RE), lambda s: F.trim(s) != ""
-    )
+def split_sentences_sql(text: str) -> str:
+    """:func:`split_sentences` as a Spark SQL expression over the SQL
+    expression ``text`` — the one definition of the sentence split, which
+    grounding embeds in its one score expression."""
+    regex = SENTENCE_SPLIT_RE.replace("\\", "\\\\")
+    return f"filter(split({text}, '{regex}'), se -> trim(se) != '')"
+
+
+def split_sentences(col: str) -> Column:
+    """array<string> of the sentences of column ``col``. The reference
+    splits on ``[.!?]\\s+`` (dropping the terminator); we use a lookbehind
+    so terminators are kept — chunk text then reconstructs verbatim, which
+    the reference's join(" ") does not guarantee. Documented divergence,
+    strictly less lossy."""
+    return F.expr(split_sentences_sql("`" + col.replace("`", "``") + "`"))
 
 
 def sentence_frame(
@@ -51,7 +58,7 @@ def sentence_frame(
 
     s = spread_small(df).select(
         F.col(id_col),
-        F.posexplode(split_sentences(F.col(text_col))).alias("sent_idx", "sentence"),
+        F.posexplode(split_sentences(text_col)).alias("sent_idx", "sentence"),
     )
     if max_sentence_tokens:
         m = max_sentence_tokens

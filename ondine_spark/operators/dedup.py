@@ -110,56 +110,15 @@ def _cosine_blocks(X, thr: float):
         yield bi + i0, bj, G[bi, bj]
 
 
-def _sorted_group_pairs(
-    rows: DataFrame,
-    keys: list[str],
-    order: list[str],
-    body,
-    extras: str = "",
-    max_group: int | None = None,
-    forest: bool = False,
-    matrix: tuple[str, str] | None = None,
-    partitions: int | None = None,
-) -> DataFrame:
-    """The one pair driver behind every grouped pair kernel (counting
-    jaccard, LSH buckets, winnowing, semantic cells): ONE shuffle on
-    ``keys``, a local sort on ``keys + order``, and one streaming numpy
-    pass over each sorted partition (``mapInPandas``).
-
-    ``rows`` carries an ``_id`` column; ``partitions`` fixes the task
-    count of the shuffle (default: the session's shuffle partitions).
-    Group boundaries come from vectorized compares of the key columns; a
-    group spanning Arrow batches is carried over to the next batch inside
-    the partition iterator. Groups of size < 2 or over ``max_group`` (the operator's
-    stop-shingle / stop-gram / bucket-occupancy cap: a group's length in
-    the sorted partition IS its key's frequency) are dropped with numpy
-    before any per-group Python call; the surviving rows are compacted
-    once per flushed batch, and the array column ``matrix = (column,
-    dtype)`` becomes one numpy matrix then — never once per group.
-    Per-group work is plain array slicing, so 150K tiny groups cost
-    microseconds each (a groupBy().applyInPandas variant paid ~0.2 ms of
-    pandas machinery PER GROUP — 5-16x slower at sf0.1).
-
-    ``body(g)`` gets one group as a dict column → numpy slice (the matrix
-    under its column name) and yields blocks ``(ii, jj, extras)``: group
-    positions of detected pairs plus output arrays matching the
-    ``extras`` schema. Pair mode emits ``(a, b, extras…)`` with
-    a = min id, b = max id. ``forest`` mode feeds every block to
-    :func:`_min_hook_union` and emits only the group's (root, node) star
-    edges — at most k−1 rows per k-row group, ``(a, b)`` only, with the
-    same connected components as the pairs. Only consumers that cluster
-    the pairs may use it: a pair score summed ACROSS groups (jaccard's
-    common-shingle count, winnowing's shared count) needs every pair.
-    """
+def _sorted_group_kernel(keys, body, names, max_group, forest, matrix):
+    """The streaming numpy pass of :func:`_sorted_group_pairs`, as a
+    generator over pandas frames sorted on its keys (then its order):
+    ``mapInPandas`` runs it per partition, and streaming dedup runs it
+    on the driver over one sorted frame. ``names`` are the pair-mode
+    extras columns; the other arguments are the driver's."""
     import numpy as np
     import pandas as pd
 
-    id_type = dict(rows.dtypes)["_id"]
-    schema = f"a {id_type}, b {id_type}"
-    names = []
-    if extras and not forest:
-        schema += ", " + extras
-        names = [f.split()[0] for f in extras.split(",")]
     cap = max_group if max_group is not None else 1 << 62
 
     def flush(pdf: pd.DataFrame, starts, end: int):
@@ -224,11 +183,68 @@ def _sorted_group_pairs(
             if out is not None:
                 yield out
 
+    return gen
+
+
+def _sorted_group_pairs(
+    rows: DataFrame,
+    keys: list[str],
+    order: list[str],
+    body,
+    extras: str = "",
+    max_group: int | None = None,
+    forest: bool = False,
+    matrix: tuple[str, str] | None = None,
+    partitions: int | None = None,
+) -> DataFrame:
+    """The one pair driver behind every grouped pair kernel (counting
+    jaccard, LSH buckets, winnowing, semantic cells): ONE shuffle on
+    ``keys``, a local sort on ``keys + order``, and one streaming numpy
+    pass over each sorted partition (``mapInPandas`` of
+    :func:`_sorted_group_kernel`).
+
+    ``rows`` carries an ``_id`` column; ``partitions`` fixes the task
+    count of the shuffle (default: the session's shuffle partitions).
+    Group boundaries come from vectorized compares of the key columns; a
+    group spanning Arrow batches is carried over to the next batch inside
+    the partition iterator. Groups of size < 2 or over ``max_group`` (the operator's
+    stop-shingle / stop-gram / bucket-occupancy cap: a group's length in
+    the sorted partition IS its key's frequency) are dropped with numpy
+    before any per-group Python call; the surviving rows are compacted
+    once per flushed batch, and the array column ``matrix = (column,
+    dtype)`` becomes one numpy matrix then — never once per group.
+    Per-group work is plain array slicing, so 150K tiny groups cost
+    microseconds each (a groupBy().applyInPandas variant paid ~0.2 ms of
+    pandas machinery PER GROUP — 5-16x slower at sf0.1).
+
+    ``body(g)`` gets one group as a dict column → numpy slice (the matrix
+    under its column name) and yields blocks ``(ii, jj, extras)``: group
+    positions of detected pairs plus output arrays matching the
+    ``extras`` schema. Pair mode emits ``(a, b, extras…)`` with
+    a = min id, b = max id. ``forest`` mode feeds every block to
+    :func:`_min_hook_union` and emits only the group's (root, node) star
+    edges — at most k−1 rows per k-row group, ``(a, b)`` only, with the
+    same connected components as the pairs. Only consumers that cluster
+    the pairs may use it: a pair score summed ACROSS groups (jaccard's
+    common-shingle count, winnowing's shared count) needs every pair.
+    """
+    id_type = dict(rows.dtypes)["_id"]
+    schema = f"a {id_type}, b {id_type}"
+    names = []
+    if extras and not forest:
+        schema += ", " + extras
+        names = [f.split()[0] for f in extras.split(",")]
     parts = (partitions,) if partitions else ()
     return (
         rows.repartition(*parts, *keys)
         .sortWithinPartitions(*keys, *order)
-        .mapInPandas(gen, schema=schema)
+        .mapInPandas(
+            _sorted_group_kernel(
+                keys, body, names, max_group=max_group, forest=forest,
+                matrix=matrix,
+            ),
+            schema=schema,
+        )
     )
 
 
@@ -532,23 +548,26 @@ def minhash_signature(
     ZERO algorithmic shuffles either way. Output: id, sig
     array<bigint>; docs with no shingles are excluded.
     """
-    return _minhash_sig_rows(spread_small(df), id_col, text_col, num_hashes, ngram)
-
-
-def _minhash_sig_rows(
-    df: DataFrame, id_col: str, text_col: str, num_hashes: int, ngram: int
-) -> DataFrame:
-    """:func:`minhash_signature` over ``df``'s partitions as they are: one
-    Python task per input partition (callers size the partitioning)."""
-    grams = word_ngrams(F.col(text_col), ngram)  # already distinct
-    id_type = dict(df.dtypes)[id_col]
-    base = df.select(
-        F.col(id_col).alias("_id"),
-        F.transform(grams, lambda s: md5_long(s)).alias("_hs"),
+    base = spread_small(df).select(
+        F.col(id_col).alias("_id"), _shingle_hashes(text_col, ngram).alias("_hs")
     )
+    return _minhash_sig_rows(base, num_hashes)
+
+
+def _shingle_hashes(text_col: str, ngram: int):
+    """The base hashes of :func:`minhash_signature`: ``md5_long`` of each
+    distinct word n-gram of ``text_col`` (array<bigint>, empty for a doc
+    with fewer than ``ngram`` words)."""
+    return F.transform(word_ngrams(F.col(text_col), ngram), lambda s: md5_long(s))
+
+
+def _minhash_sig_rows(base: DataFrame, num_hashes: int) -> DataFrame:
+    """:func:`_minhash_sig_kernel` over ``base`` = (``_id``, ``_hs`` base
+    hashes) as it is partitioned: one Python task per input partition
+    (callers size the partitioning)."""
     return base.mapInPandas(
         _minhash_sig_kernel(num_hashes),
-        f"_id {id_type}, sig array<bigint>",
+        f"_id {dict(base.dtypes)['_id']}, sig array<bigint>",
     )
 
 
@@ -626,6 +645,55 @@ def minhash_lsh_pairs(
     )
 
 
+# bools one bucket-kernel compare block may allocate: block rows × k × num_hashes
+_EQ_BYTES = 1 << 26
+
+
+def _lsh_bucket_kernel(
+    num_hashes: int, bands: int, threshold: float | None, forest: bool, own: bool
+):
+    """The per-bucket body of :func:`_lsh_bucket_edges`, for
+    :func:`_sorted_group_kernel`: one (band, key) bucket's pairs (ids
+    ascending, so position order == id order), detected in row blocks
+    compared against the whole bucket. A block holds at most
+    ``_EQ_BYTES`` booleans (64 MB; a 125K-doc bucket compares 33 rows at
+    a time), so memory stays bounded on the driver too; the block size
+    changes no emitted pair. ``own``: emit a pair only from the first
+    band whose slice matches."""
+    import numpy as np
+
+    thr = float(threshold) if threshold is not None else None
+    nh, nb = num_hashes, bands
+    r = num_hashes // bands
+    budget = _EQ_BYTES
+
+    def bucket_pairs(g):
+        S, band_k = g["sig"], int(g["band"][0])
+        k = len(S)
+        step = max(1, budget // (k * nh))
+        for i0 in range(0, k, step):
+            # eqpos[i, j, h]: hash position h matches
+            eqpos = S[i0 : i0 + step, None, :] == S[None, :, :]
+            band_all = eqpos.reshape(eqpos.shape[0], k, nb, r).all(axis=3)
+            if own:
+                mask = band_all.argmax(axis=2) == band_k
+            else:
+                mask = band_all[:, :, band_k]
+            ii, jj = np.nonzero(mask)
+            m = ii + i0 < jj
+            ii, jj = ii[m], jj[m]
+            if thr is None and forest:
+                yield ii + i0, jj, ()
+                continue
+            est = eqpos[ii, jj].sum(axis=1) / nh
+            if thr is not None:
+                m = est >= thr
+                ii, jj, est = ii[m], jj[m], est[m]
+            yield ii + i0, jj, (est,)
+
+    return bucket_pairs
+
+
 def _lsh_bucket_edges(
     band_rows: DataFrame,
     num_hashes: int,
@@ -649,18 +717,13 @@ def _lsh_bucket_edges(
     store check — computed only for candidate pairs, and only when it is
     emitted (pair mode) or thresholded.
 
-    Runs on :func:`_sorted_group_pairs` (one group per (band, key)
-    bucket, ``max_bucket_size`` as the group cap, ``partitions`` as its
-    task count). Pair mode emits
+    Runs :func:`_lsh_bucket_kernel` on :func:`_sorted_group_pairs` (one
+    group per (band, key) bucket, ``max_bucket_size`` as the group cap,
+    ``partitions`` as its task count). Pair mode emits
     (a, b, est_jaccard); ``forest`` mode emits the driver's star edges
     only — at most k−1 rows per k-doc bucket, with the same connected
     components as the pairs (see :func:`minhash_lsh_pairs`).
     """
-    import numpy as np
-
-    thr = float(threshold) if threshold is not None else None
-    nh, nb = num_hashes, bands
-    r = num_hashes // bands
     # FIRST-band ownership: a colliding pair is emitted only by the
     # earliest band whose slice matches — globally unique output, so no
     # cross-band duplicate emission and NO dedup shuffle (the sf1 hot
@@ -671,34 +734,9 @@ def _lsh_bucket_edges(
     # from every surviving bucket and dedups instead (bounded volume by
     # construction).
     own = max_bucket_size is None
-
-    def bucket_pairs(g):
-        """One (band, key) bucket's pairs (ids ascending, so position
-        order == id order), detected in row blocks."""
-        S, band_k = g["sig"], int(g["band"][0])
-        k = len(S)
-        for i0 in range(0, k, 1024):
-            # eqpos[i, j, h]: hash position h matches
-            eqpos = S[i0 : i0 + 1024, None, :] == S[None, :, :]
-            band_all = eqpos.reshape(eqpos.shape[0], k, nb, r).all(axis=3)
-            if own:
-                mask = band_all.argmax(axis=2) == band_k
-            else:
-                mask = band_all[:, :, band_k]
-            ii, jj = np.nonzero(mask)
-            m = ii + i0 < jj
-            ii, jj = ii[m], jj[m]
-            if thr is None and forest:
-                yield ii + i0, jj, ()
-                continue
-            est = eqpos[ii, jj].sum(axis=1) / nh
-            if thr is not None:
-                m = est >= thr
-                ii, jj, est = ii[m], jj[m], est[m]
-            yield ii + i0, jj, (est,)
-
     out = _sorted_group_pairs(
-        band_rows, ["band", "key"], ["_id"], bucket_pairs,
+        band_rows, ["band", "key"], ["_id"],
+        _lsh_bucket_kernel(num_hashes, bands, threshold, forest=forest, own=own),
         extras="est_jaccard double", max_group=max_bucket_size,
         forest=forest, matrix=("sig", "int64"), partitions=partitions,
     )

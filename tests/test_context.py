@@ -66,6 +66,40 @@ def test_grounding_discard_nulls_output(spark):
     assert got[2]["answer"] is None
 
 
+def test_grounding_score_builds_as_one_sql_expression(spark, monkeypatch):
+    """The score is one parsed SQL expression: building it makes no
+    Python-side higher-order-function call (each is a py4j round trip
+    that builds a JVM lambda)."""
+    from pyspark.sql.functions import builtin
+
+    calls = []
+    real = builtin._invoke_higher_order_function
+
+    def counting(name, *a, **k):
+        calls.append(name)
+        return real(name, *a, **k)
+
+    monkeypatch.setattr(builtin, "_invoke_higher_order_function", counting)
+    df = spark.createDataFrame(ROWS, ["_row_id", "answer", "src"])
+    out = grounding_scores(df, "answer", "src", threshold=0.3)
+    assert calls == []
+    assert out.filter(F.col("_grounded")).count() > 0
+
+
+@pytest.mark.parametrize("names", [("tl", "s_l"), ("g", "ts"), ("a`b", "c.d")])
+def test_grounding_column_names_never_shadow_lambda_variables(spark, names):
+    """Column names equal to the score's lambda variables, or needing
+    quotes, score exactly like plain names."""
+    def scores(out_col, src_col):
+        df = spark.createDataFrame(ROWS, ["_row_id", out_col, src_col])
+        return {
+            r["_row_id"]: r["_grounding_score"]
+            for r in grounding_scores(df, out_col, src_col).collect()
+        }
+
+    assert scores(*names) == scores("answer", "src")
+
+
 def test_contradiction_exact_and_tolerance(spark):
     df = spark.createDataFrame(
         [

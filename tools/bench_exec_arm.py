@@ -26,21 +26,20 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
 
-    from pyspark.sql import functions as F
-
-    from bench import Measured, measure, session, spine_100k, warm_up
+    from bench import (
+        Measured,
+        measure,
+        prompt_bytes,
+        session,
+        spine_100k,
+        warm_up,
+    )
 
     spark = session("exec_arm_bisect")
     warm_up(spark)
     big, build = spine_100k(spark, sf_dir)
 
-    # workload denominator (round-6 verdict finding #3): the exec arms are
-    # only comparable across corpora when the artifact records input bytes
-    pb = big.select(
-        F.sum(F.length("text")).alias("total"),
-        F.avg(F.length("text")).alias("avg"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
+    rows, total, avg = prompt_bytes(big)
 
     # warm both arms once (codegen + python worker pool for the spine)
     build(25).result_frame().select("uid").count()
@@ -50,9 +49,9 @@ def main() -> None:
         "metric": "exec_arm_bisect",
         "sf": float(m.group(1)) if m else 0.0,
         "reps": reps_n,
-        "rows": int(pb["n"]),
-        "prompt_bytes_total": int(pb["total"]),
-        "prompt_bytes_avg": round(float(pb["avg"]), 1),
+        "rows": rows,
+        "prompt_bytes_total": total,
+        "prompt_bytes_avg": avg,
         "git": os.popen(f"git -C {REPO} rev-parse --short HEAD").read().strip(),
     }
     book = Measured()

@@ -150,6 +150,8 @@ def run_child(dirs: dict, repo: str, kill_after: int | None) -> int:
     """Start the stream in a child process; optionally SIGKILL it once
     the signature store shows >= kill_after committed batch dirs.
     Returns the number of kills performed (0 or 1)."""
+    from ondine_spark.streaming.incremental_dedup import stored_batch_ids
+
     code = CHILD.format(
         repo=repo,
         in_dir=dirs["in"],
@@ -166,11 +168,7 @@ def run_child(dirs: dict, repo: str, kill_after: int | None) -> int:
     kills = 0
     if kill_after is not None:
         while proc.poll() is None:
-            n = 0
-            if os.path.isdir(dirs["state"]):
-                n = sum(
-                    1 for d in os.listdir(dirs["state"]) if d.startswith("bid=")
-                )
+            n = len(stored_batch_ids(dirs["state"]))
             if n >= kill_after:
                 os.kill(proc.pid, signal.SIGKILL)
                 proc.wait()
